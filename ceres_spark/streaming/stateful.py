@@ -261,104 +261,6 @@ def ewma_stream(stream: DataFrame, alpha: float = 0.3) -> DataFrame:
     )
 
 
-def ewma_stream_tws(stream: DataFrame, alpha: float = 0.3) -> DataFrame:
-    """:func:`ewma_stream` on Spark 4's ``transformWithStateInPandas``
-    (the VERDICT r8 #4 probe): identical recurrence, identical output
-    schema and doubles, but the state rides the new StatefulProcessor
-    API (typed ``ValueState`` against the RocksDB provider — the
-    replay default — instead of the applyInPandasWithState
-    GroupState protocol).
-
-    Why probe it: TIMINGS.md r8 itemized ~380 ms/batch of Python
-    stateful overhead that survived the state-store provider flip;
-    transformWithState is the API Spark is actively optimizing
-    (SPARK-49564 umbrella), so the question is whether its per-batch
-    protocol (state server over a local socket vs the inline
-    state-in-the-plan protocol) prices differently at our
-    toy-per-batch, many-batch replay shape. Measured head-to-head in
-    tools/tws_probe.py; digest-equality with :func:`ewma_stream` is
-    pytest-pinned when the dependency below exists. RocksDB provider
-    REQUIRED (the HDFS provider does not implement the
-    transformWithState operator family).
-
-    AVAILABILITY GATE: Spark's TransformWithStateInPySpark runner
-    speaks protobuf to its Python state server —
-    ``StreamingPythonRunnerInitializationException: ImportError:
-    cannot import name 'descriptor' from 'google.protobuf'`` on a
-    box without the ``protobuf`` package (this container, probed r9
-    — TIMINGS.md §r9). The import check below converts that
-    mid-query crash into a loud, immediate NotImplementedError; the
-    applyInPandasWithState twin (:func:`ewma_stream`) has no such
-    dependency and stays the production path."""
-    import math
-
-    import numpy as np
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(Spark's Python state-server protocol); install protobuf "
-            "or use ewma_stream (applyInPandasWithState), which is "
-            "digest-identical"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    a = float(alpha)
-
-    class _EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("ewma", EWMA_STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timer_values
-        ) -> Iterator[pd.DataFrame]:
-            (metric,) = key
-            st = (
-                self._st.get()[0]
-                if self._st.exists()
-                else math.nan
-            )
-            if st is None:
-                st = math.nan
-            # one sort over the whole micro-batch — same reasoning
-            # as ewma_stream (chunks carry no cross-chunk order)
-            chunks = list(rows)
-            if chunks:
-                pdf = pd.concat(chunks).sort_values("ts").reset_index(
-                    drop=True
-                )
-                vals = pdf["value"].to_numpy(dtype=float)
-                out = np.empty_like(vals)
-                for i, v in enumerate(vals):
-                    if not np.isnan(v):
-                        st = v if np.isnan(st) else a * v + (1 - a) * st
-                    out[i] = st
-                yield pd.DataFrame(
-                    {
-                        "metric": metric,
-                        "ts": pdf["ts"],
-                        "value": pdf["value"],
-                        "ewma": out,
-                    }
-                )
-            self._st.update((float(st),))
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("metric").transformWithStateInPandas(
-        statefulProcessor=_EwmaProcessor(),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 HOLT_SEASONAL_STATE_SCHEMA = StructType(
     [
         StructField("level", DoubleType()),

@@ -1,14 +1,13 @@
-"""Pin the private-PySpark Arrow seam (VERDICT r8 "What's wrong" #3).
+"""Pin the replay fixture writers' Arrow seam.
 
-The replay fixture writer (__spark_entry__._write_arrival_files)
-rides ``DataFrame.toArrow`` (public since Spark 4.0 — r9 moved it
-off the private ``_collect_as_arrow`` VERDICT r8 flagged) to write n
-arrival files driver-side with zero Spark jobs. A PySpark change
-that breaks the Arrow collect would degrade GRACEFULLY (the
-partitionBy fallback is correct) but silently re-inflate the replay
-floor by ~1.5-3 s per replay. These tests make that bump fail pytest
-loudly instead, and prove the fallback engages (with a log line) and
-produces byte-identical arrival semantics.
+The replay fixture writers (``__spark_entry__._write_arrival_files``
+and its ranged / half / backfill split variants) collect the feed
+once with ``DataFrame.toArrow`` (public since Spark 4.0) and write n
+arrival files driver-side with pyarrow — zero Spark jobs. There is no
+second path: a PySpark change that breaks the Arrow collect fails
+these tests, an empty feed or batch raises ``_BadArrivalSplit``, and
+a write failure raises. The split rules are checked against the
+Spark-side expressions the replays used before the driver-side split.
 """
 
 import glob
@@ -35,17 +34,26 @@ def _mk_df(spark):
     )
 
 
+def _file_rows(src, i):
+    import duckdb
+
+    return duckdb.connect().execute(
+        f"SELECT * FROM read_parquet('{src}/arrival-{i:02d}.parquet')"
+    ).fetchall()
+
+
+def _spark_rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
 def test_to_arrow_exists_and_returns_expected_schema(spark):
     """The version probe: fails the moment a PySpark bump drops or
-    reshapes DataFrame.toArrow (public since Spark 4.0, SPARK-47365
-    — r9 replaced the private _collect_as_arrow with it), so the
-    fast path can't silently die."""
+    reshapes DataFrame.toArrow (public since Spark 4.0, SPARK-47365),
+    the only path the arrival writers have."""
     df = _mk_df(spark)
     assert hasattr(type(df), "toArrow"), (
-        "PySpark dropped DataFrame.toArrow — the arrow arrival fast "
-        "path in _write_arrival_files is now dead code; re-point it "
-        "at the supported replacement or accept the partitionBy "
-        "fallback and delete the fast path."
+        "PySpark dropped DataFrame.toArrow — re-point "
+        "__spark_entry__._arrow_collect at the supported replacement."
     )
     import pyarrow as pa
 
@@ -53,8 +61,8 @@ def test_to_arrow_exists_and_returns_expected_schema(spark):
     assert isinstance(tbl, pa.Table)
     assert tbl.num_rows == 40
     assert tbl.column_names == ["k", "v", "_part"]
-    # the fast path relies on Spark's own Arrow schema (types must
-    # match what a Spark parquet write would have produced)
+    # the writers rely on Spark's own Arrow schema (types must match
+    # what a Spark parquet write would have produced)
     assert tbl.schema.field("k").type == pa.int64()
     assert tbl.schema.field("v").type == pa.float64()
     assert tbl.schema.field("_part").type == pa.int32()
@@ -73,49 +81,9 @@ def test_fast_path_writes_arrival_files_without_spark_jobs(spark, tmp_path):
     ]
 
 
-def test_fallback_engages_loudly_and_matches_fast_path(
-    spark, tmp_path, monkeypatch, capsys
-):
-    """Simulate the PySpark bump: with toArrow raising, the
-    partitionBy fallback must (a) log the seam loudly and (b) produce
-    the same per-file rows and mtime ladder as the fast path."""
-    import duckdb
-
-    df = _mk_df(spark)
-    fast = str(tmp_path / "fast")
-    entry._write_arrival_files(df, fast, 4)
-
-    monkeypatch.setattr(
-        type(df),
-        "toArrow",
-        lambda self, *a, **kw: (_ for _ in ()).throw(
-            AttributeError("simulated PySpark bump")
-        ),
-    )
-    slow = str(tmp_path / "slow")
-    entry._write_arrival_files(df, slow, 4)
-    err = capsys.readouterr().err
-    assert "arrow arrival fast path unavailable" in err
-    assert "partitionBy" in err
-
-    con = duckdb.connect()
-    for i in range(4):
-        f_fast = os.path.join(fast, f"arrival-{i:02d}.parquet")
-        f_slow = os.path.join(slow, f"arrival-{i:02d}.parquet")
-        q = (
-            "SELECT k, v FROM read_parquet('{}') ORDER BY k"
-        )
-        assert (
-            con.execute(q.format(f_fast)).fetchall()
-            == con.execute(q.format(f_slow)).fetchall()
-        )
-        assert int(os.path.getmtime(f_slow)) == 1000 + i
-
-
 def test_empty_split_raises_not_silently_shrinks(spark, tmp_path):
-    # 3 distinct _part values but n=4 → batch 3 empty → loud error on
-    # BOTH paths (the replay would otherwise run with a wrong
-    # micro-batch count)
+    # 3 distinct _part values but n=4 → batch 3 empty → loud error
+    # (the replay would otherwise run with a wrong micro-batch count)
     from pyspark.sql import functions as F
 
     df = spark.range(12).select(
@@ -124,13 +92,56 @@ def test_empty_split_raises_not_silently_shrinks(spark, tmp_path):
     with pytest.raises(entry._BadArrivalSplit):
         entry._write_arrival_files(df, str(tmp_path / "bad"), 4)
 
+
+def _empty_feed(spark, writer, src):
+    from pyspark.sql import functions as F
+
+    none = spark.range(0)
+    if writer == "files":
+        df = none.select(
+            F.col("id").alias("k"), F.col("id").cast("int").alias("_part")
+        )
+        entry._write_arrival_files(df, src, 4)
+    elif writer == "ranged":
+        entry._write_arrival_files_ranged(
+            none.select(F.col("id").alias("ts")), "ts", src, 4
+        )
+    elif writer == "half":
+        entry._write_arrival_files_half(
+            none.select(F.col("id").alias("doc_id")), "doc_id", src
+        )
+    else:
+        entry._write_arrival_files_backfill(
+            none.select(F.col("id").alias("x"), F.col("id").alias("event_id")),
+            src,
+        )
+
+
+@pytest.mark.parametrize("writer", ["files", "ranged", "half", "backfill"])
+def test_empty_feed_raises_typed_error(spark, tmp_path, writer):
+    """An empty feed is a typed _BadArrivalSplit at every writer, not
+    a raw numpy ValueError from .min()/.max() on an empty array."""
+    src = str(tmp_path / writer)
+    with pytest.raises(entry._BadArrivalSplit, match="empty arrival feed"):
+        _empty_feed(spark, writer, src)
+    assert not glob.glob(os.path.join(src, "*.parquet"))
+
+
+def test_write_failure_raises(spark, tmp_path):
+    """A write into an unwritable src raises; there is no fallback
+    that could swallow it."""
+    src = tmp_path / "src"
+    (src / "arrival-01.parquet").mkdir(parents=True)
+    with pytest.raises(OSError):
+        entry._write_arrival_files(_mk_df(spark), str(src), 4)
+
+
 def test_ranged_split_matches_spark_quartile_path(spark, tmp_path):
-    """Optimization r13: _write_arrival_files_ranged computes the
-    contiguous time-range split driver-side from the Arrow collect.
-    The files must be row-identical to the old Spark-side
-    _with_time_quartile + _write_arrival_files path (same integer
-    split rule), including the drop= helper-column handling."""
-    import duckdb
+    """_write_arrival_files_ranged computes the contiguous time-range
+    split driver-side from the Arrow collect. Each file must hold
+    exactly the rows the Spark-side rule
+    ``(n * (t - lo)) div span`` assigns to it, in order, including
+    the drop= helper-column handling."""
     from pyspark.sql import functions as F
 
     df = spark.range(97).select(
@@ -139,21 +150,18 @@ def test_ranged_split_matches_spark_quartile_path(spark, tmp_path):
     )
     new = str(tmp_path / "new")
     entry._write_arrival_files_ranged(df, "ts", new, 4)
-    old = str(tmp_path / "old")
-    entry._write_arrival_files(
-        entry._with_time_quartile(df, "ts", 4), old, 4
-    )
-    con = duckdb.connect()
+    lo, hi = df.agg(F.min("ts"), F.max("ts")).collect()[0]
+    span = hi - lo + 1
+    ref = df.withColumn("_part", F.expr(f"(4 * (ts - {lo})) div {span}"))
     for i in range(4):
-        q = "SELECT * FROM read_parquet('{}/arrival-%02d.parquet')" % i
-        assert (
-            con.execute(q.format(new)).fetchall()
-            == con.execute(q.format(old)).fetchall()
-        )
+        want = _spark_rows(ref.filter(F.col("_part") == i).drop("_part"))
+        assert want and _file_rows(new, i) == want
     # drop= removes the helper column AFTER the split is computed
     dropped = str(tmp_path / "dropped")
     entry._write_arrival_files_ranged(df, "ts", dropped, 4, drop=("ts",))
-    cols = con.execute(
+    import duckdb
+
+    cols = duckdb.connect().execute(
         f"SELECT * FROM read_parquet('{dropped}/arrival-00.parquet') LIMIT 0"
     ).description
     assert [c[0] for c in cols] == ["v"]
@@ -161,9 +169,8 @@ def test_ranged_split_matches_spark_quartile_path(spark, tmp_path):
 
 def test_half_split_matches_agg_mid_path(spark, tmp_path):
     """_write_arrival_files_half: batch 1 is id > max(id)//2 — the
-    split rule the corpus/simhash/ann replays used, with the max(id)
-    scalar job folded into the Arrow collect."""
-    import duckdb
+    split rule the corpus/simhash/ann replays used, checked against
+    Spark's own max(id) aggregate."""
     from pyspark.sql import functions as F
 
     df = spark.range(31).select(
@@ -173,16 +180,36 @@ def test_half_split_matches_agg_mid_path(spark, tmp_path):
     new = str(tmp_path / "new")
     entry._write_arrival_files_half(df, "doc_id", new)
     mid = df.agg(F.max("doc_id")).collect()[0][0] // 2
-    old = str(tmp_path / "old")
-    entry._write_arrival_files(
-        df.withColumn("_part", (F.col("doc_id") > mid).cast("int")),
-        old,
-        2,
+    assert _file_rows(new, 0) == _spark_rows(df.filter(F.col("doc_id") <= mid))
+    assert _file_rows(new, 1) == _spark_rows(df.filter(F.col("doc_id") > mid))
+
+
+def test_backfill_split_matches_spark_rule(spark, tmp_path):
+    """_write_arrival_files_backfill: rows before the 300-aligned
+    6 h cut with event_id % 3 == 0 are the late batch 3; the on-time
+    rest is split into batches 0-2 by contiguous x range."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(200).select(
+        (F.lit(1_000_050) + F.col("id") * 397).alias("x"),
+        F.col("id").alias("event_id"),
+        (F.col("id").cast("double") / 7).alias("value"),
     )
-    con = duckdb.connect()
-    for i in range(2):
-        q = "SELECT * FROM read_parquet('{}/arrival-%02d.parquet')" % i
-        assert (
-            con.execute(q.format(new)).fetchall()
-            == con.execute(q.format(old)).fetchall()
+    new = str(tmp_path / "new")
+    entry._write_arrival_files_backfill(df, new)
+    x0 = df.agg(F.min("x")).collect()[0][0]
+    cut = x0 - x0 % 300 + 6 * 3600
+    late = (F.col("x") < cut) & (F.col("event_id") % 3 == 0)
+    on_time = df.filter(~late)
+    lo, hi = on_time.agg(F.min("x"), F.max("x")).collect()[0]
+    part = F.expr(f"(3 * (x - {lo})) div {hi - lo + 1}")
+    for i in range(3):
+        want = _spark_rows(on_time.filter(part == i).drop("event_id"))
+        assert want and _file_rows(new, i) == want
+    want = _spark_rows(df.filter(late).drop("event_id"))
+    assert want and _file_rows(new, 3) == want
+    # a feed that is all late leaves batches 0-2 empty: typed error
+    with pytest.raises(entry._BadArrivalSplit, match="no on-time"):
+        entry._write_arrival_files_backfill(
+            df.filter(F.col("event_id") == 0), str(tmp_path / "late")
         )

@@ -34,9 +34,7 @@ import ceres_spark.streaming.stateful as st
 
 
 def _arrivals(spark, df, path, n, order_col):
-    entry._write_arrival_files(
-        entry._with_time_quartile(df, order_col, n), path, n
-    )
+    entry._write_arrival_files_ranged(df, order_col, path, n)
 
 
 def _drain(q, expect_fail):

@@ -120,3 +120,16 @@ def test_pytest_only_module_change_is_exempt_but_unlisted_flags():
             unlisted[0] in p and "PYTEST_ONLY_MODULES" in p
             for p in problems
         ), problems
+
+
+def test_one_prefix_list_and_queries_start_with_it():
+    """Superseded prefix lists must not grow back: exactly one
+    module-level ``_R<n>_PREFIX`` name, and it is the live order."""
+    import re
+
+    import __spark_entry__ as m
+
+    names = [n for n in vars(m) if re.fullmatch(r"_R\d+_PREFIX", n)]
+    assert len(names) == 1, names
+    prefix = getattr(m, names[0])
+    assert list(m.queries())[: len(prefix)] == prefix
