@@ -12,7 +12,11 @@ plans, but unprovable without data): host loadavg before/after, both
 per-pass totals, the per-query max/min noise ratio distribution, and
 any live concurrent replay-fixture scratch dirs owned by other
 processes. A future delta read can now separate "the plan regressed"
-from "the host was busy" from the artifact alone.
+from "the host was busy" from the artifact alone. ``conditions`` also
+stamps the core count, git SHA and Spark version the run used.
+
+``warm_up`` and ``timed_passes`` are the one timing loop: the
+``tools/`` timing scripts import them rather than copy them.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import subprocess
 import sys
 import tempfile
 import time
@@ -62,9 +67,9 @@ def _live_replay_siblings() -> int:
 #: contradicted. A hot-host run must self-identify IN THE ARTIFACT so
 #: a later delta read never mistakes host load for a regression.
 #: Thresholds sit between every recorded idle run and every recorded
-#: hot run; env-overridable for testing the stamp end-to-end.
-LOAD_GATE = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "2.0"))
-NOISE_GATE = float(os.environ.get("SPARK_GRAFT_NOISE_GATE", "1.4"))
+#: hot run; tests override them through keyword arguments.
+LOAD_GATE = 2.0
+NOISE_GATE = 1.4
 
 #: Pre-flight quiet-wait (r8): stamping a hot run unreliable is only
 #: half the fix — when the noise is a BURST (this container's
@@ -89,12 +94,8 @@ NOISE_GATE = float(os.environ.get("SPARK_GRAFT_NOISE_GATE", "1.4"))
 #: exits on the first poll; the budget only bites when waiting has
 #: value.
 BENCH_WAIT = float(os.environ.get("SPARK_GRAFT_BENCH_WAIT", "300"))
-PROBE_SPREAD_GATE = float(
-    os.environ.get("SPARK_GRAFT_PROBE_GATE", "1.3")
-)
-PREFLIGHT_LOAD_TARGET = float(
-    os.environ.get("SPARK_GRAFT_PREFLIGHT_LOAD", "1.0")
-)
+PROBE_SPREAD_GATE = 1.3
+PREFLIGHT_LOAD_TARGET = 1.0
 
 
 def _cpu_probe(reps: int = 5) -> tuple[float, float]:
@@ -254,6 +255,56 @@ def noise_stats(per_q: dict[str, list[float]]) -> dict:
     }
 
 
+def warm_up(spark) -> None:
+    """Pay the one-time startup before any timed entry, so it is not
+    billed to whichever entry happens to run first: JVM/codegen
+    (``__spark_entry__.entry``) and the Python worker pool (a no-op
+    mapInPandas). Both are per-process costs, not per-query costs, in
+    any long-lived deployment."""
+    entrymod.entry(spark).count()
+    spark.range(1).mapInPandas(lambda it: it, "id long").count()
+
+
+def timed_passes(spark, fns, sf_dir: str, passes: int):
+    """Time ``fns`` (name -> registry builder) ``passes`` times,
+    passes outer and entries in ``fns`` order inside. Yields
+    ``(name, df, seconds)`` after each entry; the timed span is the
+    build plus ``count()`` over the full result (count keeps result
+    I/O out of the timing)."""
+    for _ in range(passes):
+        for name, fn in fns.items():
+            t0 = time.perf_counter()
+            df = fn(spark, sf_dir)
+            df.count()
+            yield name, df, round(time.perf_counter() - t0, 4)
+
+
+def pass_totals(per_q: dict[str, list[float]]) -> list[float]:
+    """Per-pass sums of ``{query: [pass seconds, ...]}``."""
+    return [round(sum(p), 4) for p in zip(*per_q.values())]
+
+
+def _git_sha(path: str) -> str | None:
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=path, capture_output=True, text=True, check=True,
+        )
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return out.stdout.strip()
+
+
+def run_stamp(spark) -> dict:
+    """What the timings were taken on: core count, source revision
+    (None outside a git checkout) and Spark version."""
+    return {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "git_sha": _git_sha(os.path.dirname(os.path.abspath(__file__))),
+        "spark_version": spark.version,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -268,13 +319,7 @@ def main() -> None:
     load_start = os.getloadavg()
     siblings = _live_replay_siblings()
     spark = get_spark("ceres-spark-bench")
-    qs = entrymod.queries()
-    # warm-up actions so one-time startup isn't billed to whichever
-    # query happens to run first: JVM/codegen (entry) and the Python
-    # worker pool (a no-op mapInPandas) — both are per-process costs,
-    # not per-query costs, in any long-lived deployment
-    entrymod.entry(spark).count()
-    spark.range(1).mapInPandas(lambda it: it, "id long").count()
+    warm_up(spark)
     # three passes, keep the per-query MIN: this container's wall
     # clock swings ±50% under neighbor load (same query measured
     # 0.96 s and 5.5 s minutes apart), so a single pass measures the
@@ -282,16 +327,10 @@ def main() -> None:
     # (r9: was min-of-2 — see the noise-metric note below.)
     N_PASSES = 3
     per_q: dict[str, list[float]] = {}
-    pass_totals: list[float] = []
-    for _pass in range(N_PASSES):
-        pt = 0.0
-        for name, fn in qs.items():
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            dt = round(time.perf_counter() - t0, 4)
-            pt += dt
-            per_q.setdefault(name, []).append(dt)
-        pass_totals.append(round(pt, 4))
+    for name, _df, dt in timed_passes(
+        spark, entrymod.queries(), sf_dir, N_PASSES
+    ):
+        per_q.setdefault(name, []).append(dt)
     load_end = os.getloadavg()
     timings = {q: min(ts) for q, ts in per_q.items()}
     total = round(sum(timings.values()), 4)
@@ -301,7 +340,8 @@ def main() -> None:
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in load_end],
         "live_replay_siblings": siblings,
-        "pass_totals": pass_totals,
+        "pass_totals": pass_totals(per_q),
+        **run_stamp(spark),
         **stats,
     }
     reasons = measurement_gate(

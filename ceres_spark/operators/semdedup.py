@@ -32,61 +32,12 @@ from pyspark.sql import functions as F
 from ceres_spark.operators.ivf import _assign, train_centroids_cached
 
 
-def _group_components(ids: np.ndarray, V: np.ndarray, tau: float) -> np.ndarray:
-    """Connected components of the ≥tau cosine graph on one cluster:
+def _component_heads(ids: np.ndarray, edge: np.ndarray) -> np.ndarray:
+    """Connected components of one cluster's boolean edge matrix:
     returns each row's component head (min id reachable). Plain
-    union-find on the dense similarity matrix — the cluster is one
-    task's worth of data by construction."""
+    union-find on the dense matrix — the cluster is one task's worth
+    of data by construction."""
     n = len(ids)
-    if n == 0:
-        return ids
-    norms = np.linalg.norm(V, axis=1)
-    norms[norms == 0.0] = 1.0
-    U = V / norms[:, None]
-    sim = U @ U.T
-    parent = np.arange(n)
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    ii, jj = np.nonzero(np.triu(sim >= tau, k=1))
-    for a, b in zip(ii.tolist(), jj.tolist()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    roots = np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
-    # ids are sorted ascending, so the root's id IS the min id of the
-    # component (union always keeps the smaller index as root)
-    return ids[roots]
-
-
-def _group_components_exact(
-    ids: np.ndarray, V: np.ndarray, num: int, den: int
-) -> np.ndarray:
-    """Integer-exact twin of :func:`_group_components` for LATTICE
-    vectors: the edge test cos(a,b) ≥ num/den is evaluated as
-    ``dot > 0 AND den²·dot² ≥ num²·|a|²·|b|²`` — pure int64
-    arithmetic, no normalization, no float threshold, so an external
-    engine reproduces every verdict bit-for-bit. Bounds are checked
-    loudly: den²·dot_max² must fit int64."""
-    n = len(ids)
-    if n == 0:
-        return ids
-    Vi = np.asarray(V, dtype=np.int64)
-    dot_max = int(np.abs(Vi).max() or 1) ** 2 * Vi.shape[1]
-    if den * den * dot_max * dot_max >= 2**62:
-        raise ValueError(
-            "lattice magnitudes too large for the exact int64 "
-            "threshold test — rescale the lattice"
-        )
-    G = Vi @ Vi.T                      # exact: integer addends
-    n2 = np.diag(G).copy()
-    edge = (G > 0) & (
-        (den * den) * G * G >= (num * num) * np.outer(n2, n2)
-    )
     parent = np.arange(n)
 
     def find(a: int) -> int:
@@ -101,7 +52,38 @@ def _group_components_exact(
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     roots = np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
+    # ids are sorted ascending, so the root's id IS the min id of the
+    # component (union always keeps the smaller index as root)
     return ids[roots]
+
+
+def _cosine_edges(V: np.ndarray, tau: float) -> np.ndarray:
+    """The ≥tau cosine edge matrix of float vectors."""
+    norms = np.linalg.norm(V, axis=1)
+    norms[norms == 0.0] = 1.0
+    U = V / norms[:, None]
+    return U @ U.T >= tau
+
+
+def _lattice_edges(V: np.ndarray, num: int, den: int) -> np.ndarray:
+    """Integer-exact edge matrix for LATTICE vectors: the edge test
+    cos(a,b) ≥ num/den is evaluated as
+    ``dot > 0 AND den²·dot² ≥ num²·|a|²·|b|²`` — pure int64
+    arithmetic, no normalization, no float threshold, so an external
+    engine reproduces every verdict bit-for-bit. Bounds are checked
+    loudly: den²·dot_max² must fit int64."""
+    Vi = np.asarray(V, dtype=np.int64)
+    dot_max = int(np.abs(Vi).max(initial=0) or 1) ** 2 * Vi.shape[1]
+    if den * den * dot_max * dot_max >= 2**62:
+        raise ValueError(
+            "lattice magnitudes too large for the exact int64 "
+            "threshold test — rescale the lattice"
+        )
+    G = Vi @ Vi.T                      # exact: integer addends
+    n2 = np.diag(G).copy()
+    return (G > 0) & (
+        (den * den) * G * G >= (num * num) * np.outer(n2, n2)
+    )
 
 
 #: per-cluster row cap: the in-task GEMM is |cluster|² doubles, so
@@ -160,9 +142,10 @@ def semantic_dedup(
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
         if exact_tau is not None:
-            heads = _group_components_exact(ids, V, *exact_tau)
+            edge = _lattice_edges(V, *exact_tau)
         else:
-            heads = _group_components(ids, V, float(tau))
+            edge = _cosine_edges(V, float(tau))
+        heads = _component_heads(ids, edge)
         return pd.DataFrame(
             {
                 "vec_id": ids,

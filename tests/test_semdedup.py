@@ -172,7 +172,7 @@ def test_adversarial_all_duplicates_corpus(spark):
 
 
 def test_exact_lattice_kernel_matches_rational_threshold():
-    # r6: _group_components_exact evaluates cos >= num/den as pure
+    # r6: _lattice_edges evaluates cos >= num/den as pure
     # int64 (dot>0 AND den^2*dot^2 >= num^2*|a|^2*|b|^2) — verify
     # against exact rational arithmetic on hand vectors, including a
     # pair sitting EXACTLY on the threshold (cos == 0.9 is kept:
@@ -188,7 +188,7 @@ def test_exact_lattice_kernel_matches_rational_threshold():
     V[2] = -V[0]                # anti-parallel → rejected
     V[3] = V[0] * 3             # scaled → cos 1
     ids = np.arange(40, dtype=np.int64)
-    heads = sd._group_components_exact(ids, V, 9, 10)
+    heads = sd._component_heads(ids, sd._lattice_edges(V, 9, 10))
     assert heads[1] == 0 and heads[3] == 0 and heads[2] != 0
     # brute rational reference for every pair verdict
     Vi = V.astype(object)
@@ -206,5 +206,4 @@ def test_exact_lattice_kernel_matches_rational_threshold():
     big = np.full((2, 8), 2**20, np.float64)
     import pytest
     with pytest.raises(ValueError, match="rescale"):
-        sd._group_components_exact(
-            np.arange(2, dtype=np.int64), big, 9, 10)
+        sd._lattice_edges(big, 9, 10)

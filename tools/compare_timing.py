@@ -14,14 +14,16 @@ sorted markdown table prints at the end.)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
 import __spark_entry__ as entrymod
+import bench
 from ceres_spark.session import get_spark
 from ceres_spark.sources.tables import TABLES
 
@@ -42,8 +44,7 @@ def main() -> None:
     if subset:
         oracles = {k: oracles[k] for k in subset if k in oracles}
     # warm both engines
-    entrymod.entry(spark).count()
-    spark.range(1).mapInPandas(lambda it: it, "id long").count()
+    bench.warm_up(spark)
     rows = []
     for name, sql in oracles.items():
         fn = qs[name]

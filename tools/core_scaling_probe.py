@@ -10,7 +10,8 @@ processes (a local[k] master is fixed per JVM).
 Usage:
   python tools/core_scaling_probe.py --mult 10 \
       --queries phash_neardup,audio_neardup,... [--passes 2]
-  (run once; it spawns the per-core-count child processes itself)
+  (run once; it runs tools/probe.py in one child process per core
+  count, with SPARK_GRAFT_CPUS set)
 
 Writes one JSON line: per query, min wall at each core count and the
 c32/c8 speedup. Builder-side measurement only — nothing here touches
@@ -27,9 +28,6 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-CHILD = "--child-run"
 
 
 def synthesize(mult: int, base: str, out_dir: str) -> None:
@@ -69,40 +67,14 @@ def synthesize(mult: int, base: str, out_dir: str) -> None:
     )
 
 
-def child(sf_dir: str, names: list[str], passes: int) -> None:
-    import time
-
-    import __spark_entry__ as entrymod
-    from ceres_spark.session import get_spark
-
-    spark = get_spark("core-scaling-probe")
-    qs = entrymod.queries()
-    entrymod.entry(spark).count()
-    spark.range(1).mapInPandas(lambda it: it, "id long").count()
-    out = {}
-    for n in names:
-        ts = []
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            qs[n](spark, sf_dir).count()
-            ts.append(round(time.perf_counter() - t0, 3))
-        out[n] = ts
-    print("CHILD_RESULT " + json.dumps(out), flush=True)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mult", type=int, default=10)
     ap.add_argument("--queries", required=True)
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--cpus", default="8,32")
-    ap.add_argument(CHILD, dest="child_sf", default=None)
     args = ap.parse_args()
     names = [q.strip() for q in args.queries.split(",") if q.strip()]
-
-    if args.child_sf:
-        child(args.child_sf, names, args.passes)
-        return
 
     base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = f"/tmp/ceres_scaleprobe_sf{args.mult}x"
@@ -110,31 +82,17 @@ def main() -> None:
 
     results = {}
     for cpus in [c.strip() for c in args.cpus.split(",")]:
-        env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
         proc = subprocess.run(
-            [
-                sys.executable,
-                os.path.abspath(__file__),
-                "--queries",
-                args.queries,
-                "--passes",
-                str(args.passes),
-                CHILD,
-                out_dir,
-            ],
-            env=env,
-            capture_output=True,
-            text=True,
-            cwd=REPO,
+            [sys.executable, os.path.join(REPO, "tools", "probe.py"),
+             args.queries, "--passes", str(args.passes), "--sf-dir", out_dir],
+            env=dict(os.environ, SPARK_GRAFT_CPUS=cpus),
+            capture_output=True, text=True, cwd=REPO,
         )
-        line = [
-            l for l in proc.stdout.splitlines() if l.startswith("CHILD_RESULT ")
-        ]
-        if not line:
-            print(proc.stdout[-2000:], file=sys.stderr)
+        if proc.returncode:
             print(proc.stderr[-2000:], file=sys.stderr)
-            raise SystemExit(f"child at cpus={cpus} produced no result")
-        results[cpus] = json.loads(line[-1][len("CHILD_RESULT "):])
+            raise SystemExit(f"probe at cpus={cpus} failed")
+        entries = json.loads(proc.stdout.splitlines()[-1])["entries"]
+        results[cpus] = {n: entries[n]["passes_s"] for n in names}
 
     cl, ch = [c.strip() for c in args.cpus.split(",")]
     print(

@@ -16,8 +16,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import contextlib
-import io
 import json
 import os
 import re
@@ -27,13 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from ceres_spark.session import get_spark
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tools.probe import PYTHON_NODES, explain
 
 
 def main() -> None:
@@ -54,7 +46,7 @@ def main() -> None:
     rows = []
     for name in names:
         try:
-            plan = _plan(qs[name](spark, args.sf))
+            plan = explain(qs[name](spark, args.sf))
         except Exception as e:  # noqa: BLE001 — census, keep walking
             rows.append({"q": name, "err": str(e)[:120]})
             continue
@@ -62,9 +54,7 @@ def main() -> None:
             "q": name,
             "scans": len(re.findall(r"Scan parquet", plan)),
             "exch": len(re.findall(r"\bExchange\b", plan)),
-            "py": len(re.findall(
-                r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"
-                r"|MapInArrow|BatchEvalPython", plan)),
+            "py": sum(plan.count(t) for t in PYTHON_NODES),
             "smj": len(re.findall(r"SortMergeJoin", plan)),
             "bhj": len(re.findall(r"BroadcastHashJoin", plan)),
         })
