@@ -3959,7 +3959,17 @@ def entry(spark: SparkSession) -> DataFrame:
 #: The driver-checked prefix: the first 50 ``queries()`` keys, in
 #: order (see the queries() docstring). (a) entries changed in r13 →
 #: (b) entries new in r13 → (c)/(d) the oldest-checked parked entries.
+#: semdedup.py and streaming/stateful.py changed after r13, and the
+#: baseline's r14 regen already accepted their new hashes, so the guard
+#: no longer pins their entries: keep semantic_dedup,
+#: semantic_dedup_docs and every stream_* entry here until the r14
+#: correctness check has run.
 _R13_PREFIX = [
+    # (0) changed after r13: graph.py's two CC loops now run one Spark
+    # action per round (convergence sums observed on the checkpoint);
+    # labels oracle-proven identical at all three SFs
+    "neardup_clusters",
+    "neardup_clusters_star",
     # (a) changed in r13 — the optimization round's touched entries
     # (executed plans / in-task kernels changed; outputs oracle-proven
     # identical at both SFs locally, promoted so the driver re-hashes
@@ -4002,7 +4012,8 @@ _R13_PREFIX = [
     "winsorize",
     # (d) the r8-stale block oldest-first, CORRECTNESS_r08 key order
     # (the remaining 9 r8-stale rows — quantize_lww … length_-
-    # percentile_gate — roll to r14)
+    # percentile_gate — roll to r14; series_linreg and frequent_items,
+    # checked in r13, made room for block (0))
     "multimodal_frames",
     "event_transitions_salted",
     "funnel_salted",
@@ -4022,8 +4033,6 @@ _R13_PREFIX = [
     "semantic_dedup",
     "fuzzy_pairs",
     "series_transform",
-    "series_linreg",
-    "frequent_items",
 ]
 
 

@@ -15,10 +15,12 @@ node id of its component (a unique, deterministic labelling —
 independent of partitioning and join order).
 
 Scale notes:
-- each round is one shuffled join (edges ⋈ labels on node) + a
-  map-side-combinable min aggregation — no windows, no collect; edge
-  and label partitioning is stable across rounds so AQE reuses
-  exchange layouts.
+- each round is ONE Spark action: the eager `localCheckpoint` of the
+  new labels, which also carries the convergence sums as
+  `DataFrame.observe` metrics. Round 1 needs no join (labels start as
+  their own node), so R rounds cost 1 + R actions. A round is one
+  shuffled join (edges ⋈ labels on node) + a map-side-combinable min
+  aggregation — no windows, no collect.
 - rounds = graph diameter. Near-dup graphs are dense blobs (diameter
   2-4), so this beats the constant-factor-heavier large-star/
   small-star contraction (O(log²) rounds) that would win on long
@@ -33,7 +35,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -51,53 +53,57 @@ def connected_components(
     reach the fixpoint — a wrong-but-plausible labelling must never
     be silently returned.
     """
-    sym = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-    sym = sym.localCheckpoint(eager=True)
-
-    labels = (
-        sym.select(F.col("a").alias("node"))
+    # Γ(a) ∪ {a} in ONE edge list (optimization r12, guide §2.4):
+    # both directions of every edge plus a self-loop per node, so each
+    # round's neighbor-min already includes the node's own label. One
+    # pass over ``edges`` and one checkpoint; `distinct` keeps one
+    # self-loop per node and drops repeated edges, which no min sees.
+    ends = ((src, dst), (dst, src), (src, src), (dst, dst))
+    sym_self = (
+        edges.select(F.inline(F.array(*(
+            F.struct(F.col(x).alias("a"), F.col(y).alias("b"))
+            for x, y in ends
+        ))))
         .distinct()
-        .withColumn("comp", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    # Γ(a) ∪ {a} in ONE edge list (optimization r12, guide §2.4):
-    # appending a self-loop per node makes each round's neighbor-min
-    # already include the node's own label, so the old second join
-    # (labels ⋈ nbr + least/coalesce) — a full labels-side shuffle
-    # per round — collapses into the same groupBy. Update rule is
-    # unchanged: min over {comp(b) : b ∈ Γ(a) ∪ {a}}.
-    sym_self = sym.union(
-        labels.select(F.col("node").alias("a"), F.col("node").alias("b"))
-    ).localCheckpoint(eager=True)
 
-    def label_sum(df: DataFrame) -> int:
-        # labels only ever DECREASE, so Σcomp strictly decreases iff
-        # any label changed — one cheap aggregate replaces a
-        # join+filter+count convergence probe (decimal: immune to
-        # int64 overflow at billion-node × large-id scale)
-        return df.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
+    def dsum(c: str):  # decimal: immune to int64 overflow at scale
+        return F.sum(F.col(c).cast("decimal(38,0)")).alias(c)
 
-    prev_sum = label_sum(labels)
+    # round 1: every label starts as its own node, so comp(b) = b
+    nbr = sym_self.withColumnRenamed("b", "comp")
+    prev_sum = None
     for _ in range(max_iter):
-        new_labels = (
-            sym_self.join(labels, sym_self["b"] == labels["node"])
-            .groupBy("a")
+        labels, m = _checkpoint_observed(
+            nbr.groupBy("a")
             .agg(F.min("comp").alias("comp"))
-            .withColumnRenamed("a", "node")
-            .localCheckpoint(eager=True)
+            .withColumnRenamed("a", "node"),
+            dsum("comp"),
+            dsum("node"),
         )
-        new_sum = label_sum(new_labels)
-        labels = new_labels
-        if new_sum == prev_sum:
+        # labels only ever DECREASE, so Σcomp strictly decreases iff
+        # any label changed. Round 1's Σnode is the starting label sum:
+        # each node has exactly one output row.
+        if prev_sum is None:
+            prev_sum = m["node"]
+        if m["comp"] == prev_sum:
             return labels
-        prev_sum = new_sum
+        prev_sum = m["comp"]
+        nbr = sym_self.join(labels, sym_self["b"] == labels["node"])
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
     )
+
+
+def _checkpoint_observed(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it with the
+    aggregate ``metrics`` observed on that same action — the one Spark
+    action a fixpoint round pays (an `Observation` is single-use, so
+    each call makes its own)."""
+    obs = Observation()
+    out = df.observe(obs, *metrics).localCheckpoint(eager=True)
+    return out, obs.get
 
 
 def connected_components_star(
@@ -151,16 +157,6 @@ def connected_components_star(
         .localCheckpoint(eager=True)
     )
 
-    def checksum(df: DataFrame):
-        # order-free fingerprint of the edge multiset: stable iff the
-        # edge set stopped changing (xxhash collisions can't produce a
-        # FALSE fixpoint two rounds in a row on a shrinking-sum lattice;
-        # cheap vs. a subtract+count)
-        return df.agg(
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
-            F.count("*").alias("n"),
-        ).collect()[0]
-
     prev = None
     for _ in range(max_iter):
         # ---- large-star (`e` is downhill u→v, distinct, loop-free:
@@ -186,21 +182,21 @@ def connected_components_star(
         # computed — is large itself (two more per-round edge-set
         # shuffles gone).
         smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        # (v, m) for each small neighbor v, plus (u, m) for u itself
-        small = (
+        # (v, m) for each small neighbor v, plus (u, m) for u itself;
+        # the round's checkpoint also observes an order-free edge-set
+        # fingerprint, stable iff the edge set stopped changing
+        # (xxhash collisions can't produce a FALSE fixpoint two rounds
+        # in a row on a shrinking-sum lattice)
+        e, cur = _checkpoint_observed(
             large.join(smins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(smins.select(F.col("u"), F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
+            F.count("*").alias("n"),
         )
-        e = small
-        cur = checksum(e)
-        if prev is not None and (cur["s"], cur["n"]) == (
-            prev["s"],
-            prev["n"],
-        ):
+        if cur == prev:
             break
         prev = cur
     else:

@@ -126,11 +126,20 @@ class CeresTree:
             > 0
         )
 
+    def _catalog_rows(self, node_path: str) -> list:
+        return self.catalog().filter(F.col("metric") == node_path).collect()
+
     def get_node(self, node_path: str) -> "CeresNode":
-        """Op #26 analogue — raises NodeNotFound like getNode ≈L200."""
-        if not self.has_node(node_path):
+        """Op #26 analogue — raises NodeNotFound like getNode ≈L200.
+        One catalog query: the row it finds also primes the node's
+        metadata, so a read right after it runs no second lookup."""
+        rows = self._catalog_rows(node_path)
+        if not rows:
             raise NodeNotFound(f"Node {node_path!r} does not exist in {self.root}")
-        return CeresNode(self, node_path)
+        node = CeresNode(self, node_path)
+        if rows[0]["timeStep"] is not None:  # else read_metadata raises
+            node._meta = rows[0].asDict()
+        return node
 
     def delete_node(self, node_path: str) -> None:
         node = self.get_node(node_path)  # NodeNotFound if absent
@@ -444,9 +453,7 @@ class CeresNode:
     # -- metadata (ops #3-4) -------------------------------------------
 
     def read_metadata(self) -> dict:
-        rows = (
-            self.tree.catalog().filter(F.col("metric") == self.node_path).collect()
-        )
+        rows = self.tree._catalog_rows(self.node_path)
         if not rows:
             raise CorruptNode(self, "missing catalog entry")
         d = rows[0].asDict()

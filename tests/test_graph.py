@@ -38,6 +38,95 @@ def test_non_convergence_raises(spark):
         gr.connected_components(edges(spark, chain), max_iter=2)
 
 
+def union_find_labels(pairs):
+    """Pure-Python reference: node -> min node id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def random_pairs(seed=7, n_nodes=200, n_edges=500):
+    import random
+
+    rng = random.Random(seed)
+    return [(rng.randrange(n_nodes), rng.randrange(n_nodes))
+            for _ in range(n_edges)]
+
+
+@pytest.mark.parametrize("cc", [gr.connected_components,
+                                gr.connected_components_star])
+def test_labels_match_union_find_on_random_graph(spark, cc):
+    pairs = random_pairs()
+    out = {r["node"]: r["comp"] for r in cc(edges(spark, pairs)).collect()}
+    assert out == union_find_labels(pairs)
+
+
+@pytest.mark.parametrize("cc", [gr.connected_components,
+                                gr.connected_components_star])
+def test_no_driver_action_inside_the_round_loop(spark, monkeypatch, cc):
+    # each round's convergence sums ride its checkpoint as observed
+    # metrics: no collect/count/first may run inside either CC loop
+    pairs = random_pairs(seed=11, n_nodes=60, n_edges=80)
+    e = edges(spark, pairs)
+
+    def banned(*a, **k):
+        raise AssertionError("driver action inside a CC loop")
+
+    with monkeypatch.context() as m:
+        for name in ("collect", "count", "first", "take", "head"):
+            m.setattr(type(e), name, banned)
+        out = cc(e)
+    got = {r["node"]: r["comp"] for r in out.collect()}
+    assert got == union_find_labels(pairs)
+
+
+def _within(seconds, fn):
+    # an Observation whose metrics never arrive blocks forever in
+    # `.get`; run it on a daemon thread so a hang fails, not stalls
+    import threading
+
+    box = {}
+    t = threading.Thread(target=lambda: box.setdefault("v", fn()),
+                         daemon=True)
+    t.start()
+    t.join(seconds)
+    assert "v" in box, f"no result within {seconds}s"
+    return box["v"]
+
+
+@pytest.mark.parametrize("cc", [gr.connected_components,
+                                gr.connected_components_star])
+def test_empty_edge_list_returns_empty(spark, cc):
+    for e in (edges(spark, []),
+              edges(spark, [(1, 2), (2, 3)]).filter("src > 100")):
+        out = _within(120, lambda: cc(e, max_iter=3))
+        assert out.columns == ["node", "comp"]
+        assert out.count() == 0
+
+
+def test_round_count_is_pinned(spark):
+    # on the path 0-1-…-(k-1) label 0 moves one hop per round: k-1
+    # rounds reach the fixpoint and round k sees no change
+    k = 6
+    path = edges(spark, [(i, i + 1) for i in range(k - 1)])
+    out = gr.connected_components(path, max_iter=k).collect()
+    assert {r["node"]: r["comp"] for r in out} == dict.fromkeys(range(k), 0)
+    for short in (k - 1, 0):
+        with pytest.raises(RuntimeError, match="converge"):
+            gr.connected_components(path, max_iter=short)
+
+
 # ---- large-star/small-star contraction (the high-diameter variant) ----
 
 

@@ -5,7 +5,7 @@ warehouse."""
 import pytest
 from pyspark.sql import functions as F
 
-from ceres_spark.errors import NodeNotFound
+from ceres_spark.errors import CorruptNode, NodeNotFound
 from ceres_spark.tree import CeresTree
 
 
@@ -50,6 +50,31 @@ def test_store_fetch_roundtrip_with_lww(spark, tree):
 def test_fetch_unknown_metric_raises(spark, tree):
     with pytest.raises(NodeNotFound):
         tree.fetch("ghost", 0, 100)
+
+
+def test_fetch_null_timestep_row_is_corrupt(spark, tree):
+    tree._write_catalog(spark.createDataFrame(
+        [("m", None, "average", None, None)],
+        "metric string, timeStep int, aggregationMethod string, "
+        "retentions array<array<int>>, xFilesFactor double"))
+    with pytest.raises(CorruptNode, match="timeStep"):
+        tree.fetch("m", 0, 120)
+
+
+def test_fetch_runs_one_catalog_query(spark, tree, monkeypatch):
+    tree.create_node("m", timeStep=60, aggregationMethod="max")
+    tree.store("m", dp(spark, [(60, 1.0), (60, 3.0)]))
+    calls = []
+    real = CeresTree.catalog
+
+    def counted(self):
+        calls.append(1)
+        return real(self)
+
+    monkeypatch.setattr(CeresTree, "catalog", counted)
+    out = {r["ts"]: r["value"] for r in tree.fetch("m", 0, 120).collect()}
+    assert len(calls) == 1
+    assert out == {0: None, 60: 3.0}
 
 
 def test_fetch_empty_range_is_dense_nulls(spark, tree):
