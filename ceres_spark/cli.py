@@ -214,12 +214,12 @@ def main(argv: list[str] | None = None) -> int:
             import ceres_spark.operators.retention as ret
 
             fine = cp.lww_dedup(tree.points())
-            coarse = ret.rollup(
-                fine, args.method, 60, args.new_step, x_files_factor=args.xff
-            ).withColumn(
-                "arrival_seq", F.lit(0).cast("long")
-            ).withColumn(
-                "date", F.to_date(F.timestamp_seconds(F.col("ts")))
+            coarse = cp.stamp(
+                ret.rollup(
+                    fine, args.method, 60, args.new_step,
+                    x_files_factor=args.xff,
+                ),
+                0,
             )
             coarse.write.mode("overwrite").partitionBy("date").parquet(
                 tree.points_path(args.new_step)
@@ -245,19 +245,18 @@ def main(argv: list[str] | None = None) -> int:
                 args.src_step if args.src_step is not None
                 else DEFAULT_TIMESTEP
             )
-            out = tree.maintenance_run(
-                lambda catalog, points: ret.rollup_catalog(
-                    cp.lww_dedup(points),
-                    catalog,
-                    default_step=args.new_step,
-                    default_method=args.method,
-                    with_step=True,
+            out = cp.stamp(
+                tree.maintenance_run(
+                    lambda catalog, points: ret.rollup_catalog(
+                        cp.lww_dedup(points),
+                        catalog,
+                        default_step=args.new_step,
+                        default_method=args.method,
+                        with_step=True,
+                    ),
+                    step=src_step,
                 ),
-                step=src_step,
-            ).withColumn(
-                "arrival_seq", F.lit(0).cast("long")
-            ).withColumn(
-                "date", F.to_date(F.timestamp_seconds(F.col("ts")))
+                0,
             )
             # the step guard reads the TINY catalog cfg side (the same
             # per-node step rule rollup_catalog applies), not the full
@@ -266,12 +265,7 @@ def main(argv: list[str] | None = None) -> int:
             steps = [
                 r["_step"]
                 for r in tree.catalog().select(
-                    F.coalesce(
-                        F.expr(
-                            "filter(retentions, r -> r[0] > timeStep)[0][0]"
-                        ),
-                        F.lit(int(args.new_step)),
-                    ).cast("long").alias("_step")
+                    ret.node_step(args.new_step).alias("_step")
                 ).distinct().collect()
             ] + [int(args.new_step)]
             if src_step in steps:

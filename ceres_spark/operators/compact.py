@@ -16,12 +16,48 @@ race-free where ceres needed SliceDeleted/retry (ceres.py ≈L640).
 
 Scale: one shuffle on (metric, ts) with map-side partial max_by; no
 window function, no sort of the whole table.
+
+The stored points row is decided here too: :func:`store_rows` shapes
+a write batch, :func:`stamp` adds ``arrival_seq`` and ``date``, and
+:func:`utc_date` is the one ts -> date rule writers and pruners share.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def utc_date(ts: Column) -> Column:
+    """The ``date`` partition of epoch-second ``ts``: its UTC day.
+    Epoch-day arithmetic, so the session timezone never enters
+    (``to_date(timestamp_seconds(ts))`` yields session-local days).
+    The double quotient floors exactly for every day a DATE holds."""
+    return F.date_from_unix_date(F.floor(ts / 86400).cast("int"))
+
+
+def stamp(rows: DataFrame, seq: int) -> DataFrame:
+    """``rows`` (with epoch-second ``ts``) as stored points rows:
+    ``arrival_seq = seq`` (the write-order stamp read-time LWW keys on)
+    and ``date = utc_date(ts)``."""
+    return rows.withColumn(
+        "arrival_seq", F.lit(int(seq)).cast("long")
+    ).withColumn("date", utc_date(F.col("ts")))
+
+
+def store_rows(
+    batch: DataFrame, metric: Column, order: Column, time_step: int, seq: int
+) -> DataFrame:
+    """One write batch as stored rows: cast to (metric, ts long, value
+    double), :func:`compact` with ``order`` breaking exact-ts ties
+    inside the batch, then :func:`stamp` with ``seq``."""
+    rows = batch.select(
+        metric.alias("metric"),
+        F.col("ts").cast("long").alias("ts"),
+        F.col("value").cast("double").alias("value"),
+        order.alias("arrival_seq"),
+    )
+    return stamp(compact(rows, time_step), seq)
 
 
 def quantize(df: DataFrame, time_step: int, ts_col: str = "ts") -> DataFrame:

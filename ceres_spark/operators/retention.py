@@ -22,9 +22,10 @@ Spark-native:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+import ceres_spark.operators.compact as cp
 from ceres_spark.operators.aggregate import agg_expr
 from ceres_spark.errors import InvalidAggregationMethod
 from ceres_spark.operators.aggregate import AGGREGATION_METHODS
@@ -61,7 +62,7 @@ def expire_path(
     fall back to a local-filesystem delete.)"""
     cutoff_q = quantize_up(cutoff, step)
     df = spark.read.parquet(path)
-    cutoff_date = F.to_date(F.timestamp_seconds(F.lit(cutoff_q)))
+    cutoff_date = cp.utc_date(F.lit(cutoff_q))
     # bounded collect (≤ #expired days) BEFORE the overwrite mutates
     # the table: ISO date strings compare lexicographically
     expired_days = sorted(
@@ -73,13 +74,10 @@ def expire_path(
     )
     affected = df.filter(F.col(partition_col) <= cutoff_date)
     surviving = affected.filter(F.col("ts") >= F.lit(cutoff_q))
-    # a day is FULLY expired iff it has no surviving rows — derived
-    # with the SAME Spark expressions as the partition values, so the
-    # classification is correct in ANY session timezone (a Python
-    # UTC-date comparison here silently deleted the straddling
-    # partition under non-UTC sessions — its date label is
-    # session-tz-derived). Collected BEFORE the overwrite mutates the
-    # table; bounded by #days.
+    # a day is FULLY expired iff it has no surviving rows — read from
+    # the partition values themselves, never recomputed from ts.
+    # Collected BEFORE the overwrite mutates the table; bounded by
+    # #days.
     surviving_days = {
         r[0]
         for r in surviving.select(F.col(partition_col).cast("string"))
@@ -146,8 +144,9 @@ def compact_files(spark, path: str, target_partitions: int | None = None) -> Non
     Single-maintainer contract: the rmtree+move swap assumes no
     concurrent writer or reader on ``path`` — the same exclusivity
     the reference's maintenance daemon has (concurrent access there
-    surfaces as SliceDeleted retries, ceres.py ≈L790). Run from the
-    maintenance driver (tree.maintain), not beside live writers.
+    surfaces as SliceDeleted retries, ceres.py ≈L790). Run it as
+    maintenance (``CeresTree.maintenance_run``, cli ``maintenance``),
+    not beside live writers.
     """
     df = spark.read.parquet(path)
     if target_partitions:
@@ -207,6 +206,17 @@ def rollup_per_node(
     return per_bucket.select("metric", "ts", value.alias("value"))
 
 
+def node_step(default_step: int) -> Column:
+    """Per-node rollup step over catalog rows: the FIRST retention
+    entry coarser than the node's own ``timeStep`` (ceres's rollup
+    plugin targets the next archive, plugins/maintenance/rollup.py
+    node_found), else ``default_step``."""
+    return F.coalesce(
+        F.expr("filter(retentions, r -> r[0] > timeStep)[0][0]"),
+        F.lit(int(default_step)),
+    ).cast("long")
+
+
 def rollup_catalog(
     deduped: DataFrame,
     catalog: DataFrame,
@@ -223,13 +233,11 @@ def rollup_catalog(
     DataFrame-native maintenance dispatch (VERDICT r3 #8), the whole
     ``bin/ceres-maintenance`` walk as a single Spark job.
 
-    Per-node step = the FIRST retention entry coarser than the node's
-    own ``timeStep`` (ceres's rollup plugin targets the next archive,
-    plugins/maintenance/rollup.py node_found), else ``default_step``;
-    method = the node's ``aggregationMethod``, else
-    ``default_method``. Unknown methods fall back to the DEFAULT
-    method (validated eagerly — a bad default raises here, mirroring
-    rollup_per_node's KeyError) rather than erroring mid-job.
+    Per-node step = :func:`node_step`; method = the node's
+    ``aggregationMethod``, else ``default_method``. Unknown methods
+    fall back to the DEFAULT method (validated eagerly — a bad default
+    raises here, mirroring rollup_per_node's KeyError) rather than
+    erroring mid-job.
 
     ``with_step=True`` adds the per-row effective ``step`` column —
     required when the caller writes a mixed-resolution result into a
@@ -250,10 +258,7 @@ def rollup_catalog(
     cfg = (
         catalog.select(
             "metric",
-            F.coalesce(
-                F.expr("filter(retentions, r -> r[0] > timeStep)[0][0]"),
-                F.lit(int(default_step)),
-            ).cast("long").alias("_step"),
+            node_step(default_step).alias("_step"),
             F.coalesce(
                 F.col("aggregationMethod"), F.lit(default_method)
             ).alias("_method"),
@@ -531,14 +536,11 @@ def backfill_rollup_windows(
         # the recompute (ADVICE r10 medium).  The explode fan-out is
         # ceil(win/86400)+1 rows per affected window — bounded by the
         # rollup period, not the data.
-        day = lambda c: F.date_add(
-            F.lit("1970-01-01").cast("date"),
-            F.floor(c / 86400).cast("int"),
-        )
         affected = affected.withColumn(
             "date",
             F.explode(F.sequence(
-                day(F.col("ts")), day(F.col("ts") + F.lit(win - 1))
+                cp.utc_date(F.col("ts")),
+                cp.utc_date(F.col("ts") + F.lit(win - 1)),
             )),
         )
         join_keys = ["metric", "ts", "date"]

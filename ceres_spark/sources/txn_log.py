@@ -45,12 +45,8 @@ class CommitConflict(RuntimeError):
 
 
 class TransactionLog:
-    def __init__(self, root: str, floor: int = 0) -> None:
-        """``floor``: versions start above this (migration hook — a
-        tree with legacy counter files seeds the log past them so
-        arrival_seq stays monotone across the format change)."""
+    def __init__(self, root: str) -> None:
         self.dir = os.path.join(root, LOG_DIRNAME)
-        self._floor = int(floor)
         os.makedirs(self.dir, exist_ok=True)
 
     # -- protocol -------------------------------------------------------
@@ -82,7 +78,7 @@ class TransactionLog:
         fd, tmp = tempfile.mkstemp(dir=self.dir, suffix=".tmp")
         try:
             for _ in range(max_retries):
-                version = max(self.latest_version(), self._floor) + 1
+                version = self.latest_version() + 1
                 entry = {"version": version, **meta}
                 with os.fdopen(os.open(tmp, os.O_WRONLY | os.O_TRUNC), "w") as f:
                     json.dump(entry, f)

@@ -8,8 +8,10 @@ old) and resolves duplicate timestamps last-writer-wins in-place
 
 Spark-native: ``readStream → foreachBatch(store_batch)``. Each
 micro-batch is compacted (quantize + in-batch LWW) and appended with
-``arrival_seq = batchId`` — the streaming engine's monotone batch id
-IS the write-order stamp, so cross-batch LWW resolves at read time
+``arrival_seq = batchId`` and the UTC ``date`` partition
+(``operators/compact.store_rows``, the same stored row
+``CeresNode.write`` produces) — the streaming engine's monotone batch
+id IS the write-order stamp, so cross-batch LWW resolves at read time
 with zero streaming state. That preserves ceres's unlimited-lateness
 semantics exactly: no watermark drops data on the storage path.
 
@@ -43,18 +45,12 @@ def store_batch(
     fixed there with per-commit staging). Point concurrent producers
     at one query via union, or at tree.store.
     """
-    out = (
-        cp.compact(
-            batch.select(
-                "metric",
-                F.col("ts").cast("long").alias("ts"),
-                F.col("value").cast("double").alias("value"),
-                F.coalesce(F.col("arrival_seq"), F.lit(0)).alias("arrival_seq"),
-            ),
-            time_step,
-        )
-        .withColumn("arrival_seq", F.lit(int(batch_id)).cast("long"))
-        .withColumn("date", F.to_date(F.timestamp_seconds(F.col("ts"))))
+    out = cp.store_rows(
+        batch,
+        F.col("metric"),
+        F.coalesce(F.col("arrival_seq"), F.lit(0)),
+        time_step,
+        batch_id,
     )
     out.write.mode("append").partitionBy("date").parquet(target_path)
 
@@ -92,17 +88,7 @@ def append_log_batch(
     touched instead of rescanning the 100 TB log."""
     out = batch.withColumn(
         "arrival_batch", F.lit(int(batch_id)).cast("long")
-    ).withColumn(
-        # UTC day by epoch integer math, NOT to_date(ts): to_date
-        # converts in the session timezone, so a non-UTC caller would
-        # partition on local days and break the documented UTC
-        # contract (and the backfill job's matching UTC day key)
-        "date",
-        F.date_add(
-            F.lit("1970-01-01").cast("date"),
-            F.floor(F.unix_timestamp(F.col(ts_col)) / 86400).cast("int"),
-        ),
-    )
+    ).withColumn("date", cp.utc_date(F.unix_timestamp(F.col(ts_col))))
     out.write.mode("append").partitionBy("date").parquet(target_path)
 
 

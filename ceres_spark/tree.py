@@ -13,8 +13,9 @@ Spark-native re-expression:
   ``catalog`` parquet (all node metadata — replaces millions of
   ``.ceres-node`` files, the known ceres scale failure) and one tall
   ``points`` parquet dataset per resolution
-  (``points/step=<timeStep>/``), **partitioned by UTC date** so
-  time-range fetches prune partitions before any I/O.
+  (``points/step=<timeStep>/``), **partitioned by UTC date**
+  (``operators/compact.utc_date``, shared by every writer and pruner)
+  so time-range fetches prune partitions before any I/O.
 - writes are **append-only**: ``store`` stamps each batch with a
   monotonically increasing ``arrival_seq`` and appends; ceres's
   in-place last-writer-wins byte overwrites (CeresSlice.write ≈L790)
@@ -190,18 +191,9 @@ class CeresTree:
         return stats.join(dups)
 
     def log(self) -> txn.TransactionLog:
-        """The tree's transaction log (created on first use). Legacy
-        counter files seed the floor so arrival_seq stays monotone
-        for trees written before the log existed."""
+        """The tree's transaction log (created on first use)."""
         if self._log is None:
-            marker = os.path.join(self.root, TREE_MARKER)
-            floor = 0
-            if os.path.isdir(marker):
-                for name in os.listdir(marker):
-                    if name.startswith("seq_"):
-                        with open(os.path.join(marker, name)) as f:
-                            floor = max(floor, int(f.read().strip() or 0))
-            self._log = txn.TransactionLog(self.root, floor=floor)
+            self._log = txn.TransactionLog(self.root)
         return self._log
 
     def _next_arrival_seq(self, step: int, **meta) -> int:
@@ -526,18 +518,12 @@ class CeresNode:
         seq = self.tree._next_arrival_seq(
             step, action="write", metric=self.node_path
         )
-        batch = (
-            cp.compact(
-                datapoints.select(
-                    F.lit(self.node_path).alias("metric"),
-                    F.col("ts").cast("long").alias("ts"),
-                    F.col("value").cast("double").alias("value"),
-                    F.lit(seq).cast("long").alias("arrival_seq"),
-                ),
-                step,
-            )
-            .withColumn("arrival_seq", F.lit(seq).cast("long"))
-            .withColumn("date", F.to_date(F.timestamp_seconds(F.col("ts"))))
+        batch = cp.store_rows(
+            datapoints,
+            F.lit(self.node_path),
+            F.lit(seq).cast("long"),
+            step,
+            seq,
         )
         staging = os.path.join(
             self.tree.root, f".staging-{seq}-{uuid.uuid4().hex}"
@@ -598,10 +584,10 @@ class CeresNode:
         from_q = int(from_time) - (int(from_time) % step)
         until_q = int(until_time) - (int(until_time) % step)
         mine = mine.filter(
-            (F.col("date")
-             >= F.to_date(F.timestamp_seconds(F.lit(from_q))))
-            & (F.col("date")
-               <= F.to_date(F.timestamp_seconds(F.lit(max(until_q - 1, from_q)))))
+            F.col("date").between(
+                cp.utc_date(F.lit(from_q)),
+                cp.utc_date(F.lit(max(until_q - 1, from_q))),
+            )
         )
         if as_of is not None:
             mine = mine.filter(F.col("arrival_seq") <= int(as_of))

@@ -31,12 +31,12 @@ def test_concurrent_commits_get_distinct_contiguous_versions(tmp_path):
 
 
 def test_commit_meta_and_floor(tmp_path):
-    log = TransactionLog(str(tmp_path), floor=41)
+    log = TransactionLog(str(tmp_path))
     v = log.commit(action="write", metric="m", step=60)
-    assert v == 42  # legacy counter floor respected
+    assert v == 1
     (entry,) = log.entries()
     assert entry == {
-        "version": 42, "action": "write", "metric": "m", "step": 60,
+        "version": 1, "action": "write", "metric": "m", "step": 60,
     }
 
 
