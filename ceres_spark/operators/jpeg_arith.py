@@ -1,14 +1,17 @@
-"""Arithmetic-coded JPEG (T.81 Annexes D/F/G): SOF9 + SOF10 built-in.
+"""Arithmetic-coded JPEG (T.81 Annexes D/F/G): the QM-coder entropy
+layer of the JPEG codec in operators/multimodal.py.
 
-Closes SURVEY §2.8 known-gap #2 (carried since r7): the
-arithmetic-coded DCT processes — extended sequential (SOF9) and
-progressive (SOF10), 8- and 12-bit — decode built-in, leaving only
-the differential-hierarchy processes (SOF5-7/13-15) and
-lossless-arithmetic (SOF11) on the codec plug-in chain. The public
-reference (graphite-project/ceres, a series storage library) has no
-media layer at all; this module extends the repo's own multimodal
-codec family (operators/multimodal.py) the same way lossless JPEG
-did in r7.
+The codec has one skeleton: ``multimodal.decode_jpeg`` walks the
+markers, parses DQT/DHT/DAC/SOF/DRI/SOS, validates scan headers,
+de-stuffs each scan and walks its blocks in A.2 order; the encoders
+share one coefficient front end, one scan walker and one set of
+marker writers. This module supplies only what is arithmetic about
+the extended sequential (SOF9) and progressive (SOF10) processes, 8-
+and 12-bit: :func:`_arith_scan` decodes a scan's blocks,
+:func:`encode_jpeg_arith` codes them, and
+:func:`decode_jpeg_arith` is the skeleton restricted to SOF9/SOF10.
+The differential-hierarchy (SOF5-7/13-15) and lossless-arithmetic
+(SOF11) processes stay on the codec plug-in chain.
 
 Everything here is derived from the published ITU-T T.81 spec:
 
@@ -42,10 +45,8 @@ Everything here is derived from the published ITU-T T.81 spec:
   on the ``3(k-1)+2`` bins.
 
 Statistics areas reset at every scan start and every restart marker
-(F.1.4.4.1.4), as do DC predictors and conditioning contexts; the
-entropy byte layer shares the Huffman path's segment treatment
-(0xFF00 de-stuffing, RSTn splits, any other marker ends the scan
-and the decoder then feeds zero bytes, per D.2.7).
+(F.1.4.4.1.4), as do DC predictors and conditioning contexts; past
+the end of a segment the decoder feeds zero bytes (D.2.7).
 
 Like the rest of the in-repo codec family, the per-block Python
 loops are sized for fixture-scale payloads inside ``mapInPandas``
@@ -58,10 +59,23 @@ coefficients must decode to identical pixels).
 
 from __future__ import annotations
 
-import struct
+import functools
 from collections.abc import Iterator
 
 import numpy as np
+
+from ceres_spark.operators.multimodal import (
+    _JPEG_PROCESSES,
+    _code_scan,
+    _dct_coefficients,
+    _dct_head,
+    _decode_jpeg_frames,
+    _jpeg_file,
+    _loud_corruption,
+    _progressive_scans,
+    _segment,
+    _sof,
+)
 
 # --------------------------------------------------- Table D.3 (QM)
 #: (Qe, NMPS, NLPS, SWITCH) per state; index 113 is the conventional
@@ -193,16 +207,6 @@ class _QMDecoder:
         self.a, self.c, self.ct = a, c, ct
         return d
 
-    def _renorm(self) -> None:
-        a, c, ct = self.a, self.c, self.ct
-        while a < 0x8000:
-            if ct == 0:
-                c = (c << 8) | self._next()
-                ct = 8
-            a <<= 1
-            ct -= 1
-        self.a, self.c, self.ct = a, c, ct
-
 
 class _QMEncoder:
     """Annex D.1 QM encoder (CODE / RENORME / BYTEOUT / FLUSH).
@@ -255,15 +259,6 @@ class _QMEncoder:
                 c = self.c
                 ct = 8
         self.a, self.c, self.ct = a, c, ct
-
-    def _renorm(self) -> None:
-        while self.a < 0x8000:
-            self.a <<= 1
-            self.c <<= 1
-            self.ct -= 1
-            if self.ct == 0:
-                self._byteout()
-                self.ct = 8
 
     def _byteout(self) -> None:
         t = self.c >> 19
@@ -543,359 +538,75 @@ def _enc_ac_refine(enc, stats, ac, prev, cur, ss, se) -> None:
 # ------------------------------------------------------------ decode
 
 
+def _arith_scan(sc):
+    """QM-coder entropy layer of the shared JPEG skeleton, returning
+    its (restart, block) pair. Sequential (F.1.4): a DC difference on
+    the conditioned model, then the AC band 1..63. Progressive (G.2):
+    DC first (shifted by Al), DC refinement (one fixed-bin decision),
+    AC first over [Ss, Se] or AC refinement. A restart resets the
+    statistics, predictors and conditioning contexts and starts a
+    fresh INITDEC on the next segment (zero bytes past the last)."""
+    segs, comps, prog = sc.segments, sc.comps, sc.progressive
+    ss, se, ah, al = sc.ss, sc.se, sc.ah, sc.al
+    conds = {cid: sc.dac.get((0, td), _DEFAULT_DC_COND)
+             for cid, td, _ in comps}
+    kxs = {cid: sc.dac.get((1, ta), _DEFAULT_AC_KX) for cid, _, ta in comps}
+    dc_t = {cid: td for cid, td, _ in comps}
+    ac_t = {cid: ta for cid, _, ta in comps}
+    coefs = sc.store
+    dec, stats = _QMDecoder(segs[0]), _ScanStats(comps)
+
+    def restart(k):
+        nonlocal dec, stats
+        dec = _QMDecoder(segs[k + 1] if k + 1 < len(segs) else b"")
+        stats = _ScanStats(comps)
+
+    if not prog or (ss == 0 and ah == 0):
+        def block(cid, by, bx):
+            blk = coefs[cid][by, bx]
+            lo, up = conds[cid]
+            diff, stats.ctx[cid] = _dec_dc_diff(
+                dec, stats.dc[dc_t[cid]], stats.ctx[cid], lo, up
+            )
+            stats.pred[cid] += diff
+            blk[0] = stats.pred[cid] << al
+            if not prog:
+                _dec_ac_band(dec, stats, stats.ac[ac_t[cid]], blk, 1, 63,
+                             0, kxs[cid])
+    elif ss == 0:
+        def block(cid, by, bx):
+            if dec.decode(stats.fixed, 0):
+                coefs[cid][by, bx, 0] |= 1 << al
+    elif ah == 0:
+        def block(cid, by, bx):
+            _dec_ac_band(dec, stats, stats.ac[ac_t[cid]], coefs[cid][by, bx],
+                         ss, se, al, kxs[cid])
+    else:
+        def block(cid, by, bx):
+            _dec_ac_refine(dec, stats, stats.ac[ac_t[cid]],
+                           coefs[cid][by, bx], ss, se, al)
+
+    return restart, block
+
+
+_ARITH_PROCESSES = {
+    m: p for m, p in _JPEG_PROCESSES.items() if p and p[0] == "arith"
+}
+
+
+@_loud_corruption("JPEG")
 def decode_jpeg_arith(payload: bytes) -> "np.ndarray":
     """Decode an arithmetic-coded JPEG (SOF9 extended sequential or
-    SOF10 progressive, 8- or 12-bit) to (h, w, 3) uint8 — the
-    arithmetic siblings of the Huffman processes decode_jpeg covers,
-    sharing its geometry rules (interleaved MCU grids from the
-    frame's hmax/vmax, T.81 A.2.2 ceil(dim/8) grids for
-    single-component scans), restart handling (stats + predictors +
-    conditioning contexts reset, fresh INITDEC per segment), its
-    coefficient-store design (dequantize + batched IDCT once at
-    EOI), and its truncation contract (missing EOI or undecoded
-    components raise ValueError). DAC segments set the DC (L, U)
-    conditioning bounds and the AC Kx spectral split; defaults per
-    B.2.4.3. Differential-hierarchy and lossless-arithmetic frames
-    stay on the codec plug-in chain."""
-    from .multimodal import _ZIGZAG, _dct_matrix
-
-    if not payload or payload[:3] != b"\xff\xd8\xff":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qt: dict[int, np.ndarray] = {}
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_kx: dict[int, int] = {}
-    sof = None
-    progressive = False
-    frame_prec = 8
-    restart = 0
-    coefs: dict[int, np.ndarray] | None = None
-    decoded: set[int] = set()
-    saw_eoi = False
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        while pos + 2 <= len(payload) and payload[pos + 1] == 0xFF:
-            pos += 1
-        m = payload[pos + 1]
-        if m == 0xD9:  # EOI
-            saw_eoi = True
-            break
-        (ln,) = struct.unpack(">H", payload[pos + 2:pos + 4])
-        data = payload[pos + 4:pos + 2 + ln]
-        if m == 0xDB:  # DQT
-            i = 0
-            while i < len(data):
-                if data[i] >> 4:  # Pq=1 (12-bit frames)
-                    qt[data[i] & 15] = np.frombuffer(
-                        data[i + 1:i + 129], ">u2"
-                    ).astype(np.int64)
-                    i += 129
-                else:
-                    qt[data[i] & 15] = np.frombuffer(
-                        data[i + 1:i + 65], np.uint8
-                    ).astype(np.int64)
-                    i += 65
-        elif m == 0xCC:  # DAC: arithmetic conditioning (B.2.4.3)
-            i = 0
-            while i + 1 < len(data):
-                tc, tb = data[i] >> 4, data[i] & 15
-                val = data[i + 1]
-                if tc == 0:
-                    lo, up = val & 15, val >> 4
-                    if lo > up:
-                        raise ValueError("DAC DC conditioning L > U")
-                    dc_cond[tb] = (lo, up)
-                else:
-                    if not 1 <= val <= 63:
-                        raise ValueError("DAC AC Kx out of range")
-                    ac_kx[tb] = val
-                i += 2
-        elif m in (0xC9, 0xCA):  # SOF9 / SOF10
-            frame_prec, ih, iw, nc = struct.unpack(">BHHB", data[:6])
-            if frame_prec not in (8, 12):
-                raise NotImplementedError(
-                    f"{frame_prec}-bit JPEG needs the codec plug-in"
-                )
-            comps = []
-            for ci in range(nc):
-                cid, hv, tq = data[6 + 3 * ci:9 + 3 * ci]
-                if not (1 <= hv >> 4 <= 4 and 1 <= (hv & 15) <= 4):
-                    raise ValueError(
-                        "JPEG sampling factors out of range"
-                    )
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            sof = (ih, iw, comps)
-            progressive = m == 0xCA
-        elif m == 0xDD:  # DRI
-            (restart,) = struct.unpack(">H", data[:2])
-        elif m == 0xDA:  # SOS
-            if sof is None:
-                raise ValueError("JPEG SOS before SOF")
-            ih, iw, comps = sof
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mx, my = -(-iw // (8 * hmax)), -(-ih // (8 * vmax))
-            if coefs is None:
-                coefs = {
-                    cid: np.zeros((my * v, mx * hh, 64), np.int32)
-                    for cid, hh, v, _ in comps
-                }
-            ns = data[0]
-            scan = [(data[1 + 2 * i], data[2 + 2 * i] >> 4,
-                     data[2 + 2 * i] & 15) for i in range(ns)]
-            ss, se = data[1 + 2 * ns], data[2 + 2 * ns]
-            ah, al = data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 15
-            cmap = {cid: (hh, v, tq) for cid, hh, v, tq in comps}
-            for cid, _, _ in scan:
-                if cid not in cmap:
-                    raise ValueError(
-                        "JPEG scan references unknown component"
-                    )
-            if not progressive and (ss, se, ah, al) != (0, 63, 0, 0):
-                raise ValueError(
-                    "sequential arithmetic scan with progressive "
-                    "spectral parameters"
-                )
-            if progressive:
-                # T.81 G.1.1.1.1: a DC scan (Ss=0) MUST have Se=0;
-                # an AC scan needs 1 <= Ss <= Se <= 63. Reject the
-                # malformed stream loudly instead of quietly reading
-                # a DC-only scan out of it (ADVICE r8).
-                if ss == 0 and se != 0:
-                    raise ValueError(
-                        "progressive DC scan requires Se=0 (T.81 G.1)"
-                    )
-                if ss > 0 and not ss <= se <= 63:
-                    raise ValueError(
-                        "progressive AC scan needs 1 <= Ss <= Se <= 63"
-                    )
-            # de-stuff THIS scan's entropy bytes, split at RSTn —
-            # identical treatment to the Huffman path (D.2.7: a
-            # marker ends the entropy data; RSTn resets everything)
-            segments, cur = [], bytearray()
-            i = pos + 2 + ln
-            while i < len(payload):
-                b = payload[i]
-                if b == 0xFF:
-                    nxt = payload[i + 1] if i + 1 < len(payload) else 0xD9
-                    if nxt == 0x00:
-                        cur.append(0xFF)
-                        i += 2
-                        continue
-                    if 0xD0 <= nxt <= 0xD7:  # RSTn
-                        segments.append(bytes(cur))
-                        cur = bytearray()
-                        i += 2
-                        continue
-                    break
-                cur.append(b)
-                i += 1
-            segments.append(bytes(cur))
-
-            stats = _ScanStats(scan)
-            dec = _QMDecoder(segments[0])
-            seg_i = 0
-            n_unit = 0
-
-            def unit_start():
-                nonlocal dec, stats, seg_i, n_unit
-                if restart and n_unit and n_unit % restart == 0:
-                    seg_i += 1
-                    dec = _QMDecoder(
-                        segments[seg_i] if seg_i < len(segments)
-                        else b""
-                    )
-                    stats = _ScanStats(scan)
-                n_unit += 1
-
-            conds = {
-                cid: dc_cond.get(td, _DEFAULT_DC_COND)
-                for cid, td, _ in scan
-            }
-            kxs = {
-                cid: ac_kx.get(ta, _DEFAULT_AC_KX)
-                for cid, _, ta in scan
-            }
-            dc_t = {cid: td for cid, td, _ in scan}
-            ac_t = {cid: ta for cid, _, ta in scan}
-
-            def grid_dims(cid):
-                # T.81 A.2.2: single-component scans run over the
-                # component's OWN ceil(dim/8) grid, not the MCU pad
-                hh, v, _ = cmap[cid]
-                ch = -(-ih * v // vmax)
-                cw = -(-iw * hh // hmax)
-                return -(-ch // 8), -(-cw // 8)
-
-            def dc_unit(cid, by, bx):
-                lo, up = conds[cid]
-                diff, ctx = _dec_dc_diff(
-                    dec, stats.dc[dc_t[cid]], stats.ctx[cid], lo, up
-                )
-                stats.pred[cid] += diff
-                stats.ctx[cid] = ctx
-                coefs[cid][by, bx, 0] = stats.pred[cid] << al
-
-            def seq_block(cid, by, bx):
-                dc_unit(cid, by, bx)
-                _dec_ac_band(
-                    dec, stats, stats.ac[ac_t[cid]],
-                    coefs[cid][by, bx], 1, 63, 0, kxs[cid]
-                )
-
-            if not progressive:
-                if ns == 1:
-                    cid = scan[0][0]
-                    bh_n, bw_n = grid_dims(cid)
-                    for by in range(bh_n):
-                        for bx in range(bw_n):
-                            unit_start()
-                            seq_block(cid, by, bx)
-                else:
-                    for m_y in range(my):
-                        for m_x in range(mx):
-                            unit_start()
-                            for cid, _, _ in scan:
-                                hh, v, _ = cmap[cid]
-                                for by in range(v):
-                                    for bx in range(hh):
-                                        seq_block(
-                                            cid, m_y * v + by,
-                                            m_x * hh + bx,
-                                        )
-            elif ss == 0 and ah == 0:  # DC first
-                if ns == 1:
-                    cid = scan[0][0]
-                    bh_n, bw_n = grid_dims(cid)
-                    for by in range(bh_n):
-                        for bx in range(bw_n):
-                            unit_start()
-                            dc_unit(cid, by, bx)
-                else:
-                    for m_y in range(my):
-                        for m_x in range(mx):
-                            unit_start()
-                            for cid, _, _ in scan:
-                                hh, v, _ = cmap[cid]
-                                for by in range(v):
-                                    for bx in range(hh):
-                                        dc_unit(
-                                            cid, m_y * v + by,
-                                            m_x * hh + bx,
-                                        )
-            elif ss == 0:  # DC refinement: one fixed decision/block
-                p1 = 1 << al
-                if ns == 1:
-                    cid = scan[0][0]
-                    bh_n, bw_n = grid_dims(cid)
-                    for by in range(bh_n):
-                        for bx in range(bw_n):
-                            unit_start()
-                            if dec.decode(stats.fixed, 0):
-                                coefs[cid][by, bx, 0] |= p1
-                else:
-                    for m_y in range(my):
-                        for m_x in range(mx):
-                            unit_start()
-                            for cid, _, _ in scan:
-                                hh, v, _ = cmap[cid]
-                                for by in range(v):
-                                    for bx in range(hh):
-                                        if dec.decode(stats.fixed, 0):
-                                            coefs[cid][
-                                                m_y * v + by,
-                                                m_x * hh + bx, 0,
-                                            ] |= p1
-            else:  # AC scans are single-component (G.1)
-                if ns != 1:
-                    raise ValueError(
-                        "progressive AC scan with >1 component"
-                    )
-                cid = scan[0][0]
-                bh_n, bw_n = grid_dims(cid)
-                ac = stats.ac[ac_t[cid]]
-                for by in range(bh_n):
-                    for bx in range(bw_n):
-                        unit_start()
-                        blk = coefs[cid][by, bx]
-                        if ah == 0:
-                            _dec_ac_band(
-                                dec, stats, ac, blk, ss, se, al,
-                                kxs[cid],
-                            )
-                        else:
-                            _dec_ac_refine(
-                                dec, stats, ac, blk, ss, se, al
-                            )
-            decoded.update(cid for cid, _, _ in scan)
-            pos = i
-            continue
-        pos = pos + 2 + ln
-    if sof is None or coefs is None:
-        raise ValueError("missing SOF/SOS in JPEG stream")
-    if not saw_eoi:
-        t = payload[pos:]
-        while len(t) >= 3 and t[0] == 0xFF and t[1] == 0xFF:
-            t = t[1:]
-        saw_eoi = t[:2] == b"\xff\xd9"
-    if not saw_eoi:
-        raise ValueError("JPEG stream ended without EOI")
-    ih, iw, comps = sof
-    if decoded != {cid for cid, *_ in comps}:
-        raise ValueError(
-            "JPEG stream ended before all components were decoded"
-        )
-    # dequantize + batched IDCT per component (same epilogue design
-    # as decode_jpeg's progressive path)
-    C = _dct_matrix()
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    planes = {}
-    for cid, hh, v, tq in comps:
-        if tq not in qt:
-            raise ValueError(
-                "JPEG component references undefined quantization table"
-            )
-        zz = coefs[cid].astype(np.int64) * qt[tq][None, None, :]
-        nat = np.zeros_like(zz)
-        nat[:, :, _ZIGZAG] = zz
-        bh_, bw_ = nat.shape[:2]
-        f = nat.reshape(bh_ * bw_, 8, 8).astype(np.float64)
-        px = np.einsum("ij,njk,kl->nil", C.T, f, C) + float(
-            1 << (frame_prec - 1)
-        )
-        planes[cid] = (
-            px.reshape(bh_, bw_, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(bh_ * 8, bw_ * 8)
-        )
-    full = {}
-    for cid, hh, v, _ in comps:
-        if hmax % hh or vmax % v:
-            raise NotImplementedError(
-                "fractional JPEG sampling ratios need the codec plug-in"
-            )
-        p = np.repeat(
-            np.repeat(planes[cid], vmax // v, axis=0),
-            hmax // hh, axis=1,
-        )
-        full[cid] = p[:ih, :iw] / float(1 << (frame_prec - 8))
-    if len(comps) == 1:
-        g = np.clip(np.round(full[comps[0][0]]), 0, 255).astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
-    if len(comps) != 3:
-        raise NotImplementedError("CMYK/unknown JPEG needs the plug-in")
-    yy = full[comps[0][0]]
-    cb = full[comps[1][0]] - 128.0
-    cr = full[comps[2][0]] - 128.0
-    rgb = np.stack(
-        [yy + 1.402 * cr,
-         yy - 0.344136 * cb - 0.714136 * cr,
-         yy + 1.772 * cb],
-        axis=2,
-    )
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
+    SOF10 progressive, 8- or 12-bit) to (h, w, 3) uint8: the shared
+    skeleton of ``multimodal.decode_jpeg`` with :func:`_arith_scan`
+    as its entropy layer, so geometry, restart handling, the
+    coefficient-store epilogue and the truncation contract (missing
+    EOI or undecoded components raise ValueError, and so does a cut
+    header or table) are decode_jpeg's.
+    DAC segments set the DC (L, U) conditioning bounds and the AC Kx
+    spectral split; defaults per B.2.4.3. Any other frame marker is
+    skipped, so a Huffman or lossless stream has no frame here."""
+    return _decode_jpeg_frames(payload, _ARITH_PROCESSES)
 
 
 # ------------------------------------------------------------ encode
@@ -913,26 +624,14 @@ def encode_jpeg_arith(
 ) -> bytes:
     """Arithmetic-coded JPEG encoder (SOF9, or SOF10 with
     ``progressive=True``) — the fixture/roundtrip twin of
-    :func:`decode_jpeg_arith`, sharing encode_jpeg's color/DCT/
-    quantization plumbing exactly so an arithmetic and a Huffman
-    encode of the same image carry IDENTICAL coefficients (the
+    :func:`decode_jpeg_arith`, sharing encode_jpeg's coefficient
+    front end exactly so an arithmetic and a Huffman encode of the
+    same image carry IDENTICAL coefficients (the
     cross-entropy-coder pixel-equality test rests on that). Emits a
     DAC segment spelling out the conditioning even at the default
     values, so the decoder's DAC parse is always exercised.
-    ``progressive=True`` mirrors the Huffman twin's Annex G script:
-    interleaved DC first (Al=1), per-component AC first (1..63,
-    Al=1), per-component AC refinement (Ah=1), DC refinement.
+    ``progressive=True`` follows the Huffman twin's Annex G script.
     ``restart_interval`` is sequential-only, like the twin."""
-    from .multimodal import (
-        _QUANT_CHROM,
-        _QUANT_LUM,
-        _ZIGZAG,
-        _dct_matrix,
-        _ijg_scale,
-    )
-
-    if depth not in (8, 12):
-        raise ValueError("depth must be 8 or 12")
     if restart_interval and progressive:
         raise ValueError(
             "restart markers unsupported with progressive scans"
@@ -942,246 +641,64 @@ def encode_jpeg_arith(
         raise ValueError("DC conditioning needs 0 <= L <= U <= 15")
     if not 1 <= ac_kx <= 63:
         raise ValueError("AC conditioning Kx must be in 1..63")
-    gray = arr.ndim == 2
-    if gray:
-        arr = np.repeat(arr[:, :, None], 3, axis=2)
-    if arr.ndim != 3 or arr.shape[2] != 3 or arr.dtype != np.uint8:
-        raise ValueError(
-            "encode_jpeg_arith expects (h, w, 3) or (h, w) uint8"
-        )
-    if subsample not in (1, 2) or (gray and subsample != 1):
-        raise ValueError("subsample must be 1 (4:4:4) or 2 (4:2:0)")
-    h, w, _ = arr.shape
-    rgb = arr.astype(np.float64)
-    y = (0.299 * rgb[..., 0] + 0.587 * rgb[..., 1]
-         + 0.114 * rgb[..., 2])
-    cb = (128 - 0.168736 * rgb[..., 0] - 0.331264 * rgb[..., 1]
-          + 0.5 * rgb[..., 2])
-    cr = (128 + 0.5 * rgb[..., 0] - 0.418688 * rgb[..., 1]
-          - 0.081312 * rgb[..., 2])
-    s = subsample
-    mcu = 8 * s
-    mx, my = -(-w // mcu), -(-h // mcu)
-
-    def pad(p, hh, ww):
-        return np.pad(p, ((0, hh - p.shape[0]), (0, ww - p.shape[1])),
-                      mode="edge")
-
-    y = pad(y, my * mcu, mx * mcu)
-    if s == 2:
-        cb = pad(cb, my * mcu, mx * mcu)
-        cr = pad(cr, my * mcu, mx * mcu)
-        cb = cb.reshape(my * 8, 2, mx * 8, 2).mean(axis=(1, 3))
-        cr = cr.reshape(my * 8, 2, mx * 8, 2).mean(axis=(1, 3))
-    else:
-        cb, cr = pad(cb, my * 8, mx * 8), pad(cr, my * 8, mx * 8)
-
-    qlum = _ijg_scale(_QUANT_LUM, quality)
-    qchrom = _ijg_scale(_QUANT_CHROM, quality)
-    if depth == 12:
-        y, cb, cr = y * 16.0, cb * 16.0, cr * 16.0
-        qlum = qlum * 16
-        qchrom = qchrom * 16
-    level = float(1 << (depth - 1))
-    C = _dct_matrix()
-
-    def block_coefs(plane, t):
-        qd = (qlum if t == 0 else qchrom).reshape(8, 8).astype(
-            np.float64
-        )
-        hh_, ww_ = plane.shape
-        nby, nbx = hh_ // 8, ww_ // 8
-        out = np.zeros((nby, nbx, 64), np.int64)
-        for by in range(nby):
-            for bx in range(nbx):
-                block = plane[by * 8:by * 8 + 8,
-                              bx * 8:bx * 8 + 8] - level
-                fq = np.round((C @ block @ C.T) / qd).astype(np.int64)
-                out[by, bx] = fq.reshape(64)[_ZIGZAG]
-        return out
-
-    if gray:
-        planes = [(1, 0, 0, block_coefs(y, 0), 1)]
-    else:
-        planes = [
-            (1, 0, 0, block_coefs(y, 0), s),
-            (2, 1, 1, block_coefs(cb, 1), 1),
-            (3, 1, 1, block_coefs(cr, 1), 1),
-        ]
-    scan_all = [(cid, td, ta) for cid, td, ta, _, _ in planes]
-
-    def comp_grid_dims(f_):
-        cw_ = -(-w * f_ // s)
-        ch_ = -(-h * f_ // s)
-        return -(-ch_ // 8), -(-cw_ // 8)
-
-    def dc_encode(enc, stats, cid, td, dc_val):
-        diff = dc_val - stats.pred[cid]
-        stats.pred[cid] = dc_val
-        stats.ctx[cid] = _enc_dc_diff(
-            enc, stats.dc[td], stats.ctx[cid], diff, lo, up
-        )
-
-    scans: list[tuple[bytes, bytes]] = []
-    if not progressive:
-        enc = _QMEncoder()
-        stats = _ScanStats(scan_all)
-        blob = b""
-        n_mcu, rst = 0, 0
-        if gray:
-            units = [
-                [(1, 0, 0, by, bx)]
-                for by in range(comp_grid_dims(1)[0])
-                for bx in range(comp_grid_dims(1)[1])
-            ]
-        else:
-            units = []
-            for m_y in range(my):
-                for m_x in range(mx):
-                    u = []
-                    for cid, td, ta, _, f_ in planes:
-                        for byy in range(f_):
-                            for bxx in range(f_):
-                                u.append((cid, td, ta,
-                                          m_y * f_ + byy,
-                                          m_x * f_ + bxx))
-                    units.append(u)
-        grids = {cid: g for cid, _, _, g, _ in planes}
-        for u in units:
-            if restart_interval and n_mcu and (
-                n_mcu % restart_interval == 0
-            ):
-                blob += enc.flush() + bytes([0xFF, 0xD0 + rst % 8])
-                rst += 1
-                enc = _QMEncoder()
-                stats = _ScanStats(scan_all)
-            n_mcu += 1
-            for cid, td, ta, by, bx in u:
-                blk = grids[cid][by, bx]
-                dc_encode(enc, stats, cid, td, int(blk[0]))
-                vals = [int(blk[k]) for k in range(64)]
-                _enc_ac_band(enc, stats, stats.ac[ta], vals, 1, 63,
-                             ac_kx)
-        blob += enc.flush()
-        ns_hdr = bytes([len(scan_all)]) + b"".join(
-            bytes([cid, (td << 4) | ta]) for cid, td, ta in scan_all
-        )
-        scans.append((ns_hdr + bytes([0, 63, 0x00]), blob))
-    else:
-        # --- Annex G script, arithmetic edition ---
-        grids = {cid: g for cid, _, _, g, _ in planes}
-        factors = {cid: f_ for cid, _, _, _, f_ in planes}
-        # scan 1: DC first, interleaved, Al=1
-        enc = _QMEncoder()
-        stats = _ScanStats(scan_all)
-        for m_y in range(my):
-            for m_x in range(mx):
-                for cid, td, ta, _, f_ in planes:
-                    for byy in range(f_):
-                        for bxx in range(f_):
-                            dc = int(
-                                grids[cid][m_y * f_ + byy,
-                                           m_x * f_ + bxx, 0]
-                            ) >> 1
-                            dc_encode(enc, stats, cid, td, dc)
-        ns_hdr = bytes([len(scan_all)]) + b"".join(
-            bytes([cid, (td << 4) | ta]) for cid, td, ta in scan_all
-        )
-        scans.append((ns_hdr + bytes([0, 0, 0x01]), enc.flush()))
-        # scans 2..: per-comp AC first (Ss=1 Se=63 Ah=0 Al=1)
-        for cid, td, ta, grid, f_ in planes:
-            enc = _QMEncoder()
-            stats = _ScanStats([(cid, td, ta)])
-            nby, nbx = comp_grid_dims(f_)
-            for by in range(nby):
-                for bx in range(nbx):
-                    blk = grid[by, bx]
-                    vals = [0] * 64
-                    for k in range(1, 64):
-                        v = int(blk[k])
-                        av = abs(v) >> 1  # Al=1, trunc toward zero
-                        vals[k] = -av if v < 0 else av
-                    _enc_ac_band(enc, stats, stats.ac[ta], vals,
-                                 1, 63, ac_kx)
-            scans.append((
-                bytes([1, cid, (td << 4) | ta, 1, 63, 0x01]),
-                enc.flush(),
-            ))
-        # per-comp AC refinement (Ah=1 -> Al=0)
-        for cid, td, ta, grid, f_ in planes:
-            enc = _QMEncoder()
-            stats = _ScanStats([(cid, td, ta)])
-            nby, nbx = comp_grid_dims(f_)
-            for by in range(nby):
-                for bx in range(nbx):
-                    blk = grid[by, bx]
-                    prev = [0] * 64
-                    curv = [0] * 64
-                    for k in range(1, 64):
-                        v = int(blk[k])
-                        av = abs(v)
-                        prev[k] = (-(av >> 1)) if v < 0 else (av >> 1)
-                        curv[k] = v
-                    _enc_ac_refine(enc, stats, stats.ac[ta],
-                                   prev, curv, 1, 63)
-            scans.append((
-                bytes([1, cid, (td << 4) | ta, 1, 63, 0x10]),
-                enc.flush(),
-            ))
-        # final: DC refinement — one fixed-bin decision per block
-        enc = _QMEncoder()
-        stats = _ScanStats(scan_all)
-        for m_y in range(my):
-            for m_x in range(mx):
-                for cid, _, _, _, f_ in planes:
-                    for byy in range(f_):
-                        for bxx in range(f_):
-                            enc.encode(
-                                stats.fixed, 0,
-                                int(grids[cid][m_y * f_ + byy,
-                                               m_x * f_ + bxx, 0]) & 1,
-                            )
-        scans.append((ns_hdr + bytes([0, 0, 0x10]), enc.flush()))
-
-    def seg(marker, payload_):
-        return marker + struct.pack(">H", len(payload_) + 2) + payload_
-
-    def dqt(tid, tbl):
-        zz = tbl[_ZIGZAG]
-        if int(zz.max()) > 255:
-            return bytes([0x10 | tid]) + zz.astype(">u2").tobytes()
-        return bytes([tid]) + bytes(zz.tolist())
-
-    sof_marker = b"\xff\xca" if progressive else b"\xff\xc9"
-    out = b"\xff\xd8"
-    out += seg(b"\xff\xe0",
-               b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(b"\xff\xdb", dqt(0, qlum))
-    dac = bytes([0x00, (up << 4) | lo, 0x10, ac_kx])
-    if gray:
-        out += seg(b"\xff\xcc", dac)
-        out += seg(
-            sof_marker,
-            struct.pack(">BHHB", depth, h, w, 1) + bytes([1, 0x11, 0]),
-        )
-        if restart_interval:
-            out += seg(b"\xff\xdd", struct.pack(">H", restart_interval))
-        for hdr, blob in scans:
-            out += seg(b"\xff\xda", hdr) + blob
-        return out + b"\xff\xd9"
-    out += seg(b"\xff\xdb", dqt(1, qchrom))
-    out += seg(b"\xff\xcc",
-               dac + bytes([0x01, (up << 4) | lo, 0x11, ac_kx]))
-    out += seg(
-        sof_marker,
-        struct.pack(">BHHB", depth, h, w, 3)
-        + bytes([1, s << 4 | s, 0, 2, 0x11, 1, 3, 0x11, 1]),
+    comps, grids, qtabs, h, w = _dct_coefficients(
+        arr, quality, subsample, depth, "encode_jpeg_arith"
     )
-    if restart_interval:
-        out += seg(b"\xff\xdd", struct.pack(">H", restart_interval))
-    for hdr, blob in scans:
-        out += seg(b"\xff\xda", hdr) + blob
-    return out + b"\xff\xd9"
+    tq = {cid: t for cid, _, _, t in comps}
+
+    def opener(code_block):
+        # one scan's coder: fresh QM encoder and statistics areas
+        def open_scan(sc):
+            enc = _QMEncoder()
+            stats = _ScanStats([(cid, t, t) for cid, _, _, t in sc])
+            return functools.partial(code_block, enc, stats), enc.flush
+        return open_scan
+
+    def sequential(enc, stats, cid, by, bx, al=0, ac=True):
+        vals = grids[cid][by, bx].tolist()
+        dc = vals[0] >> al
+        diff = dc - stats.pred[cid]
+        stats.pred[cid] = dc
+        stats.ctx[cid] = _enc_dc_diff(
+            enc, stats.dc[tq[cid]], stats.ctx[cid], diff, lo, up
+        )
+        if ac:
+            _enc_ac_band(enc, stats, stats.ac[tq[cid]], vals, 1, 63, ac_kx)
+
+    def halved(cid, by, bx):
+        # the Al=1 stage: magnitudes truncated toward zero, sign kept
+        return [-(-v >> 1) if v < 0 else v >> 1
+                for v in grids[cid][by, bx].tolist()]
+
+    def ac_first(enc, stats, cid, by, bx):
+        _enc_ac_band(enc, stats, stats.ac[tq[cid]], halved(cid, by, bx),
+                     1, 63, ac_kx)
+
+    def ac_refine(enc, stats, cid, by, bx):
+        _enc_ac_refine(enc, stats, stats.ac[tq[cid]], halved(cid, by, bx),
+                       grids[cid][by, bx].tolist(), 1, 63)
+
+    def dc_refine(enc, stats, cid, by, bx):
+        enc.encode(stats.fixed, 0, int(grids[cid][by, bx, 0]) & 1)
+
+    if progressive:
+        coded = _progressive_scans(
+            comps, h, w,
+            opener(functools.partial(sequential, al=1, ac=False)),
+            opener(ac_first), opener(ac_refine), opener(dc_refine),
+        )
+    else:
+        coded = [(comps, 0, 63, 0x00, _code_scan(
+            comps, h, w, [c[0] for c in comps], restart_interval,
+            functools.partial(opener(sequential), comps),
+        ))]
+    dac = b"".join(
+        bytes([t, (up << 4) | lo, 0x10 | t, ac_kx])
+        for t in range(len(qtabs))
+    )
+    sof = _sof(0xCA if progressive else 0xC9, depth, h, w, comps)
+    return _jpeg_file(_dct_head(qtabs) + _segment(0xCC, dac), sof, b"",
+                      restart_interval, coded)
 
 
 # ------------------------------------------------- Spark fixture flow

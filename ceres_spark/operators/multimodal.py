@@ -4,16 +4,14 @@ metadata (north-star §2.2).
 Decode is REAL for PPM (P6) images, RIFF/PCM16 WAV audio and C444
 Y4M video (numpy header walk + ``frombuffer``), AND for three
 genuinely compressed containers built-in with stdlib only: PNG
-(zlib inflate + predictive unfilters), baseline JPEG (huffman
-entropy decode + matrix IDCT + chroma upsampling), and FLAC
+(zlib inflate + predictive unfilters), JPEG (one decoder skeleton
+whose Huffman, arithmetic — operators/jpeg_arith.py — and lossless
+entropy layers cover baseline, multi-scan sequential, progressive,
+12-bit, lossless/DNG and the QM-coded SOF9/SOF10 processes), and FLAC
 (Rice-coded residuals + FIXED/LPC prediction + stereo
 decorrelation — lossless, so decoded audio is bit-identical);
 ``real_features`` computes content statistics from actual
-pixels/samples. JPEG covers baseline, multi-scan sequential,
-progressive (Annex G), 12-bit precision, lossless (Annex H —
-the DNG/camera-raw compression) AND the arithmetic-coded DCT
-processes (SOF9/SOF10, Annex D QM-coder — operators/jpeg_arith.py);
-PNG covers every valid IHDR
+pixels/samples. PNG covers every valid IHDR
 combination (Adam7, 16-bit, and the 1/2/4-bit packed depths). Remaining
 compressed formats (MP3, H.264/HEVC frames — the MP4 CONTAINER
 parses via operators/mp4.py) need codec libraries this box lacks —
@@ -32,8 +30,11 @@ them (Parquet column pruning does this for free).
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import struct
 from collections.abc import Iterator
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -184,8 +185,6 @@ def encode_wav(
 ) -> bytes:
     """Encode int16 PCM samples (frames × channels, or flat mono) as
     a canonical 44-byte-header RIFF/WAVE file."""
-    import struct
-
     s = np.ascontiguousarray(samples, dtype="<i2")
     data = s.tobytes()
     byte_rate = rate * channels * 2
@@ -204,8 +203,6 @@ def encode_wav(
 def decode_wav(payload: bytes):
     """Decode RIFF/WAVE PCM16 to ((frames, channels) int16, rate).
     Walks chunks (so extra LIST/fact chunks are fine); PCM16 only."""
-    import struct
-
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, fmt, data = 12, None, None
@@ -368,7 +365,6 @@ def encode_png(
     widens samples to v·257 big-endian (the exact 8→16 expansion, so
     the decoded MSB round-trips losslessly) — both r6, closing the
     named PNG dialect gaps."""
-    import struct
     import zlib
 
     a = np.ascontiguousarray(arr, dtype=np.uint8)
@@ -496,7 +492,6 @@ def _png_pack_bits(samples: "np.ndarray", depth: int) -> "np.ndarray":
 
 
 def _png_chunk(typ: bytes, data: bytes) -> bytes:
-    import struct
     import zlib
 
     c = typ + data
@@ -546,7 +541,6 @@ def encode_png_packed(
         body = zlib.compress(
             _png_filter_bytes(_png_pack_bits(s, depth), 1, filter_type)
         )
-    import struct
 
     ctype = 0 if palette is None else 3
     ihdr = struct.pack(
@@ -587,7 +581,6 @@ def decode_png(payload: bytes) -> "np.ndarray":
     one scanline (w·bpp-bounded — the payload never leaves the task,
     and a production deployment hooks a C codec for bulk JPEG/PNG
     anyway)."""
-    import struct
     import zlib
 
     if not payload or payload[:8] != b"\x89PNG\r\n\x1a\n":
@@ -685,9 +678,9 @@ def decode_png(payload: bytes) -> "np.ndarray":
     return plte[img[:, :, 0]]
 
 
-# --------------------------------------------------- JPEG (baseline)
-# Pure stdlib+numpy baseline JFIF codec (ITU T.81 / ISO 10918-1 —
-# public spec). Everything below is Annex K reference material: the
+# ------------------------------------------------------------- JPEG
+# Pure stdlib+numpy JPEG codec (ITU T.81 / ISO 10918-1 — public
+# spec). The tables below are Annex K reference material: the
 # example quantization tables, the typical Huffman tables, and the
 # zig-zag order.
 
@@ -811,11 +804,6 @@ class _HuffTable:
         self.walk = walk
 
 
-def _huff_decode_table(bits, vals):
-    """Decode-side table for :meth:`_BitReader.read_symbol`."""
-    return _HuffTable(bits, vals)
-
-
 def _ijg_scale(tbl: "np.ndarray", quality: int) -> "np.ndarray":
     q = min(max(int(quality), 1), 100)
     scale = 5000 // q if q < 50 else 200 - 2 * q
@@ -835,6 +823,14 @@ _HUFF_AC_PROG = (
     [0x00] + [n << 4 for n in range(1, 15)] + [0xF0]
     + [(r << 4) | s for r in range(16) for s in range(1, 15)],
 )
+
+
+#: Lossless DC diff categories run 0..16 (T.81 H.1.2.2; category 16
+#: has NO appended bits, diff ≡ 32768 mod 2^16). Annex K's baseline
+#: DC tables stop at 11, so — like the progressive AC case — a
+#: conformant lossless encoder ships its own DHT: 17 symbols, flat
+#: canonical 5-bit codes (all-ones code unused, as required).
+_HUFF_DC_LOSSLESS = ([0, 0, 0, 0, 17] + [0] * 11, list(range(17)))
 
 
 class _BitWriter:
@@ -866,48 +862,160 @@ def _mag_bits(v: int) -> tuple[int, int]:
     return s, (v if v >= 0 else v + (1 << s) - 1)
 
 
-def encode_jpeg(
-    arr: "np.ndarray",
-    quality: int = 85,
-    subsample: int = 1,
-    restart_interval: int = 0,
-    scans: str = "interleaved",
-    depth: int = 8,
-) -> bytes:
-    """Baseline JFIF encoder (SOF0, Annex K tables scaled by the IJG
-    quality rule) for (h, w, 3) uint8 RGB or (h, w) uint8 grayscale —
-    the fixture/roundtrip twin of :func:`decode_jpeg`, same role
-    encode_png plays for the PNG decoder. ``subsample=2`` emits 4:2:0
-    chroma (2×2-mean downsample) so the decoder's general
-    MCU/upsampling path gets exercised; ``subsample=1`` is 4:4:4.
-    ``restart_interval=r`` emits DRI + an RSTn marker every r MCUs
-    (predictor reset, byte-aligned) — the error-resilience feature
-    every camera writes, exercising the decoder's segment logic.
-    ``scans='separate'`` (r6) emits MULTI-SCAN SEQUENTIAL: one
-    non-interleaved SOS per component (Y, then Cb, then Cr) over
-    T.81 A.2.2 ceil(comp_dim/8) block grids — the other layout real
-    camera firmwares write, and the decoder-conformance twin for the
-    multi-scan path. ``depth=12`` (r7) emits EXTENDED SEQUENTIAL
-    (SOF1) or 12-bit progressive: samples widened ×16 into the
-    12-bit domain, level shift 2048, 16-bit (Pq=1) quantization
-    tables, and — because Annex K's tables stop at DC category 11 /
-    AC size 10 — the flat 17-symbol DC table and the extended AC
-    table in the DHT segments (the same custom-table story as
-    progressive and lossless)."""
-    import struct
+def _put_dc(bw: "_BitWriter", table: dict, diff: int) -> None:
+    """One DC difference: its category's code and magnitude bits in a
+    single fused put (the same bitstream as two puts, half the calls)."""
+    sz, bits_v = _mag_bits(diff)
+    code, ln = table[sz]
+    bw.put((code << sz) | bits_v, ln + sz)
 
-    if scans not in ("interleaved", "separate", "progressive"):
-        raise ValueError(
-            "scans must be 'interleaved', 'separate' or 'progressive'"
-        )
+
+def _ceil(a: int, b: int) -> int:
+    return -(-a // b)
+
+
+def _walk_scan(comps, ih, iw, cids, interval, restart, block, unit=8):
+    """The block order of one scan (T.81 A.2), shared by every encoder
+    and decoder: ``block(cid, by, bx)`` per block, ``restart(k)``
+    before the MCU that follows the k-th RSTn marker of a restart
+    ``interval``. A single-component scan is NON-interleaved — one
+    block per MCU over the component's OWN ceil(dim/8) grid, not the
+    MCU-padded one (A.2.2); an interleaved scan walks the frame's
+    hmax×vmax MCU grid, components in scan order, h×v blocks each
+    (A.2.3). ``comps`` are the frame's [(cid, h, v, tq)]; ``unit=1``
+    gives the lossless process's sample grid."""
+    fac = {cid: (hh, v) for cid, hh, v, _ in comps}
+    hmax = max(hh for hh, _ in fac.values())
+    vmax = max(v for _, v in fac.values())
+    if len(cids) == 1:
+        hh, v = fac[cids[0]]
+        rows = _ceil(_ceil(ih * v, vmax), unit)
+        cols = _ceil(_ceil(iw * hh, hmax), unit)
+        layout = [(cids[0], 1, 1, 0, 0)]  # one block per MCU
+    else:
+        rows, cols = _ceil(ih, unit * vmax), _ceil(iw, unit * hmax)
+        layout = [(cid, fac[cid][1], fac[cid][0], by, bx) for cid in cids
+                  for by in range(fac[cid][1]) for bx in range(fac[cid][0])]
+    n = 0
+    for m_y in range(rows):
+        for m_x in range(cols):
+            if interval and n and n % interval == 0:
+                restart(n // interval - 1)
+            n += 1
+            for cid, v, hh, by, bx in layout:
+                block(cid, m_y * v + by, m_x * hh + bx)
+
+
+def _code_scan(comps, h, w, cids, interval, segment, unit=8) -> bytes:
+    """Encode one scan: ``segment()`` opens fresh coder state
+    (predictors, statistics) as ``(block, flush)``; every
+    ``interval`` MCUs the open segment is flushed behind its RSTn
+    marker and a new one opened."""
+    blob = bytearray()
+    block, flush = segment()
+
+    def restart(k):
+        nonlocal block, flush
+        blob.extend(flush() + bytes([0xFF, 0xD0 + k % 8]))
+        block, flush = segment()
+
+    _walk_scan(comps, h, w, cids, interval, restart,
+               lambda cid, by, bx: block(cid, by, bx), unit)
+    return bytes(blob) + flush()
+
+
+def _progressive_scans(comps, h, w, dc_first, ac_first, ac_refine,
+                       dc_refine) -> list:
+    """The T.81 Annex G script both DCT encoders emit: DC first
+    (interleaved, Al=1) → per-component AC first (band 1..63, Al=1) →
+    per-component AC refinement (Ah=1 → Al=0) → DC refinement. One
+    full successive-approximation level exercises every progressive
+    decode path. Each opener takes the scan's components and opens
+    its coder as :func:`_code_scan`'s ``segment`` does."""
+    plan = (
+        [(comps, 0, 0, 0x01, dc_first)]
+        + [([c], 1, 63, 0x01, ac_first) for c in comps]
+        + [([c], 1, 63, 0x10, ac_refine) for c in comps]
+        + [(comps, 0, 0, 0x10, dc_refine)]
+    )
+    return [
+        (sc, ss, se, ahal, _code_scan(
+            comps, h, w, [c[0] for c in sc], 0, functools.partial(op, sc)
+        ))
+        for sc, ss, se, ahal, op in plan
+    ]
+
+
+def _segment(marker: int, body: bytes) -> bytes:
+    """One marker segment: 0xFF, marker, 16-bit length, body."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+
+def _sof(marker: int, prec: int, h: int, w: int, comps) -> bytes:
+    """Frame header (T.81 B.2.2) for components [(cid, h, v, tq)]."""
+    return _segment(
+        marker,
+        struct.pack(">BHHB", prec, h, w, len(comps))
+        + b"".join(bytes([cid, hh << 4 | v, tq]) for cid, hh, v, tq in comps),
+    )
+
+
+def _dht(tc: int, th: int, table) -> bytes:
+    bits, vals = table
+    return _segment(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(vals))
+
+
+def _dct_head(qtabs) -> bytes:
+    """APP0 (JFIF) and one DQT per natural-order table, stored in
+    zigzag order with 16-bit entries (Pq=1) whenever one exceeds a
+    byte, as the 12-bit ×16 tables do."""
+    out = _segment(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    for tid, tbl in enumerate(qtabs):
+        zz = tbl[_ZIGZAG]
+        if int(zz.max()) > 255:
+            out += _segment(0xDB, bytes([0x10 | tid])
+                            + zz.astype(">u2").tobytes())
+        else:
+            out += _segment(0xDB, bytes([tid]) + bytes(zz.tolist()))
+    return out
+
+
+def _jpeg_file(head: bytes, sof: bytes, tables: bytes,
+               restart_interval: int, scans) -> bytes:
+    """SOI, ``head``, frame header, ``tables``, DRI, then each scan
+    (comps, Ss, Se, Ah<<4|Al, entropy bytes) behind its SOS, EOI. A
+    component's ``tq`` also selects its DC and AC entropy tables."""
+    out = b"\xff\xd8" + head + sof + tables
+    if restart_interval:
+        out += _segment(0xDD, struct.pack(">H", restart_interval))
+    for comps, ss, se, ahal, blob in scans:
+        out += _segment(
+            0xDA,
+            bytes([len(comps)])
+            + b"".join(bytes([cid, tq * 0x11]) for cid, _, _, tq in comps)
+            + bytes([ss, se, ahal]),
+        ) + blob
+    return out + b"\xff\xd9"
+
+
+def _dct_coefficients(arr, quality: int, subsample: int, depth: int,
+                      name: str):
+    """Front end of both DCT encoders (Huffman here, QM-coder in
+    jpeg_arith): RGB→YCbCr, edge padding to whole MCUs, the 4:2:0 2×2
+    mean, IJG-scaled Annex K tables (samples and tables widened ×16
+    into the 12-bit domain at ``depth=12``), then FDCT + quantize per
+    8×8 block. Returns the frame's components [(cid, h, v, tq)],
+    {cid: (bh, bw, 64) zigzag coefficients} over the MCU-padded
+    planes, the natural-order tables in use, h and w — so a Huffman
+    and an arithmetic encode of one image carry IDENTICAL
+    coefficients."""
     if depth not in (8, 12):
         raise ValueError("depth must be 8 or 12")
     gray = arr.ndim == 2
     if gray:
         arr = np.repeat(arr[:, :, None], 3, axis=2)
-        scans = "interleaved"  # gray is single-scan either way
     if arr.ndim != 3 or arr.shape[2] != 3 or arr.dtype != np.uint8:
-        raise ValueError("encode_jpeg expects (h, w, 3) or (h, w) uint8")
+        raise ValueError(f"{name} expects (h, w, 3) or (h, w) uint8")
     if subsample not in (1, 2) or (gray and subsample != 1):
         raise ValueError("subsample must be 1 (4:4:4) or 2 (4:2:0)")
     h, w, _ = arr.shape
@@ -920,403 +1028,246 @@ def encode_jpeg(
           - 0.081312 * rgb[..., 2])
     s = subsample
     mcu = 8 * s
-    mx, my = -(-w // mcu), -(-h // mcu)
+    mx, my = _ceil(w, mcu), _ceil(h, mcu)
 
     def pad(p, hh, ww):
         return np.pad(p, ((0, hh - p.shape[0]), (0, ww - p.shape[1])),
                       mode="edge")
 
     y = pad(y, my * mcu, mx * mcu)
-    if s == 2:  # 2×2 mean then pad to 8-multiples
+    if s == 2:  # pad to whole MCUs, then the 2×2 mean
         cb = pad(cb, my * mcu, mx * mcu)
         cr = pad(cr, my * mcu, mx * mcu)
         cb = cb.reshape(my * 8, 2, mx * 8, 2).mean(axis=(1, 3))
         cr = cr.reshape(my * 8, 2, mx * 8, 2).mean(axis=(1, 3))
     else:
         cb, cr = pad(cb, my * 8, mx * 8), pad(cr, my * 8, mx * 8)
-
-    # the scaled tables are in NATURAL order (for dividing the DCT
-    # block); DQT stores them in ZIGZAG order per T.81
-    qlum = _ijg_scale(_QUANT_LUM, quality)
-    qchrom = _ijg_scale(_QUANT_CHROM, quality)
+    qtabs = [_ijg_scale(_QUANT_LUM, quality),
+             _ijg_scale(_QUANT_CHROM, quality)]
     if depth == 12:
-        # widen samples and tables ×16 into the 12-bit domain: same
-        # effective quality, level shift 2^11, Pq=1 DQT fields
+        # same effective quality in the 12-bit domain: level shift
+        # 2^11, Pq=1 DQT fields
         y, cb, cr = y * 16.0, cb * 16.0, cr * 16.0
-        qlum = qlum * 16
-        qchrom = qchrom * 16
+        qtabs = [q * 16 for q in qtabs]
     level = float(1 << (depth - 1))
-    qlum8 = qlum.reshape(8, 8).astype(np.float64)
-    qchrom8 = qchrom.reshape(8, 8).astype(np.float64)
     C = _dct_matrix()
-    if depth == 12:
-        # Annex K tables stop at DC cat 11 / AC size 10 — 12-bit
-        # frames need the extended flat tables (emitted in DHT below)
-        enc_dc = [_huff_encode_table(*_HUFF_DC_LOSSLESS)] * 2
-        enc_ac = [_huff_encode_table(*_HUFF_AC_PROG)] * 2
-    else:
-        enc_dc = [_huff_encode_table(*_HUFF_DC_LUM),
-                  _huff_encode_table(*_HUFF_DC_CHROM)]
-        enc_ac = [_huff_encode_table(*_HUFF_AC_LUM),
-                  _huff_encode_table(*_HUFF_AC_CHROM)]
-    bw = _BitWriter()
-    pred = [0, 0, 0]
+    comps = [(1, s, s, 0)]
+    if not gray:
+        comps += [(2, 1, 1, 1), (3, 1, 1, 1)]
+    grids = {}
+    for (cid, _, _, tq), plane in zip(comps, (y, cb, cr)):
+        # the scaled tables are in NATURAL order (for dividing the DCT
+        # block); the coefficients are kept in ZIGZAG order
+        qd = qtabs[tq].reshape(8, 8).astype(np.float64)
+        out = np.zeros((plane.shape[0] // 8, plane.shape[1] // 8, 64),
+                       np.int64)
+        for by in range(out.shape[0]):
+            for bx in range(out.shape[1]):
+                block = plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] - level
+                fq = np.round((C @ block @ C.T) / qd).astype(np.int64)
+                out[by, bx] = fq.reshape(64)[_ZIGZAG]
+        grids[cid] = out
+    return comps, grids, qtabs[:1 if gray else 2], h, w
 
-    def put_block(plane, by, bx, comp):
-        t = 0 if comp == 0 else 1
-        block = plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] - level
-        fq = np.round(
-            (C @ block @ C.T) / (qlum8 if t == 0 else qchrom8)
-        ).astype(np.int64)
-        zz = fq.reshape(64)[_ZIGZAG]
-        diff = int(zz[0]) - pred[comp]
-        pred[comp] = int(zz[0])
-        sz, bits_v = _mag_bits(diff)
-        code, ln = enc_dc[t][sz]
-        # one fused put per symbol (code then magnitude bits — the
-        # same emitted bitstream, half the bit-writer calls; r13 §4.2)
-        bw.put((code << sz) | bits_v, ln + sz) if sz else bw.put(code, ln)
-        run = 0
-        for k in range(1, 64):
-            v = int(zz[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = enc_ac[t][0xF0]  # ZRL
-                bw.put(code, ln)
-                run -= 16
-            sz, bits_v = _mag_bits(v)
-            code, ln = enc_ac[t][(run << 4) | sz]
-            bw.put((code << sz) | bits_v, ln + sz)
-            run = 0
-        if run:
-            code, ln = enc_ac[t][0x00]  # EOB
-            bw.put(code, ln)
 
-    entropy = b""
-    scan_blobs: list[bytes] = []
-    prog_scans: list[tuple[bytes, bytes]] = []
-    if scans == "progressive":
-        # T.81 Annex G script: DC first (interleaved, Al=1) → per-comp
-        # AC first (full band 1..63, Al=1, EOB runs) → per-comp AC
-        # refinement (Ah=1→Al=0) → DC refinement (raw bits). One full
-        # successive-approximation level exercises every progressive
-        # decode path; spectral ordering rules respected.
-        if restart_interval:
-            raise ValueError(
-                "restart markers unsupported with progressive scans"
-            )
-        # progressive AC scans need EOBn run symbols the Annex K
-        # tables don't define — use the extended tables (emitted in
-        # this file's DHT segments below)
-        enc_ac = [_huff_encode_table(*_HUFF_AC_PROG),
-                  _huff_encode_table(*_HUFF_AC_PROG)]
+def encode_jpeg(
+    arr: "np.ndarray",
+    quality: int = 85,
+    subsample: int = 1,
+    restart_interval: int = 0,
+    scans: str = "interleaved",
+    depth: int = 8,
+) -> bytes:
+    """Huffman-coded JFIF encoder for (h, w, 3) uint8 RGB or (h, w)
+    uint8 grayscale — the fixture/roundtrip twin of
+    :func:`decode_jpeg`, the role encode_png plays for the PNG
+    decoder. Annex K tables scaled by the IJG quality rule.
+    ``subsample=2`` emits 4:2:0 chroma (2×2-mean downsample),
+    ``subsample=1`` 4:4:4. ``restart_interval=r`` emits DRI + an RSTn
+    marker every r MCUs (predictor reset, byte-aligned), the
+    error-resilience feature every camera writes.
 
-        def block_coefs(plane, t):
-            qd = qlum8 if t == 0 else qchrom8
-            hh_, ww_ = plane.shape
-            nby, nbx = hh_ // 8, ww_ // 8
-            out = np.zeros((nby, nbx, 64), np.int64)
-            for by in range(nby):
-                for bx in range(nbx):
-                    block = plane[by * 8:by * 8 + 8,
-                                  bx * 8:bx * 8 + 8] - level
-                    fq = np.round(
-                        (C @ block @ C.T) / qd
-                    ).astype(np.int64)
-                    out[by, bx] = fq.reshape(64)[_ZIGZAG]
-            return out
-
-        grids = [block_coefs(y, 0), block_coefs(cb, 1),
-                 block_coefs(cr, 1)]
-        factors = [s, 1, 1]
-
-        # scan 1: DC first, interleaved, Al=1 (arithmetic shift)
-        bw = _BitWriter()
-        pred = [0, 0, 0]
-        for m_y in range(my):
-            for m_x in range(mx):
-                for ci in range(3):
-                    f_ = factors[ci]
-                    t = 0 if ci == 0 else 1
-                    for byy in range(f_):
-                        for bxx in range(f_):
-                            dc = int(
-                                grids[ci][m_y * f_ + byy,
-                                          m_x * f_ + bxx, 0]
-                            ) >> 1
-                            diff = dc - pred[ci]
-                            pred[ci] = dc
-                            sz, bits_v = _mag_bits(diff)
-                            code, ln = enc_dc[t][sz]
-                            bw.put(code, ln)
-                            if sz:
-                                bw.put(bits_v, sz)
-        prog_scans.append((
-            bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 0, 0x01]),
-            bw.flush(),
-        ))
-
-        def comp_grid_dims(f_):
-            cw_ = -(-w * f_ // s)
-            ch_ = -(-h * f_ // s)
-            return -(-ch_ // 8), -(-cw_ // 8)
-
-        # per-comp AC first scans (Ss=1 Se=63 Ah=0 Al=1)
-        for ci, cid in ((0, 1), (1, 2), (2, 3)):
-            t = 0 if ci == 0 else 1
-            nby, nbx = comp_grid_dims(factors[ci])
-            bw = _BitWriter()
-            eobrun = 0
-
-            def flush_eob():
-                nonlocal eobrun
-                if eobrun:
-                    nb = eobrun.bit_length() - 1
-                    code, ln = enc_ac[t][nb << 4]
-                    bw.put(code, ln)
-                    if nb:
-                        bw.put(eobrun - (1 << nb), nb)
-                    eobrun = 0
-
-            for by in range(nby):
-                for bx in range(nbx):
-                    blk = grids[ci][by, bx]
-                    r = 0
-                    for k in range(1, 64):
-                        v = int(blk[k])
-                        av = abs(v) >> 1  # Al=1, trunc toward zero
-                        if av == 0:
-                            r += 1
-                            continue
-                        flush_eob()
-                        while r > 15:
-                            code, ln = enc_ac[t][0xF0]
-                            bw.put(code, ln)
-                            r -= 16
-                        sv = av if v > 0 else -av
-                        sz, bits_v = _mag_bits(sv)
-                        code, ln = enc_ac[t][(r << 4) | sz]
-                        bw.put(code, ln)
-                        bw.put(bits_v, sz)
-                        r = 0
-                    if r > 0:
-                        eobrun += 1
-                        if eobrun == 0x7FFF:
-                            flush_eob()
-            flush_eob()
-            prog_scans.append((
-                bytes([1, cid, (t << 4) | t, 1, 63, 0x01]),
-                bw.flush(),
-            ))
-
-        # per-comp AC refinement scans (Ah=1 → Al=0)
-        for ci, cid in ((0, 1), (1, 2), (2, 3)):
-            t = 0 if ci == 0 else 1
-            nby, nbx = comp_grid_dims(factors[ci])
-            bw = _BitWriter()
-            eobrun = 0
-            brbits: list[int] = []
-
-            def flush_eob_r():
-                nonlocal eobrun, brbits
-                if eobrun:
-                    nb = eobrun.bit_length() - 1
-                    code, ln = enc_ac[t][nb << 4]
-                    bw.put(code, ln)
-                    if nb:
-                        bw.put(eobrun - (1 << nb), nb)
-                for b in brbits:
-                    bw.put(b, 1)
-                eobrun = 0
-                brbits = []
-
-            for by in range(nby):
-                for bx in range(nbx):
-                    blk = grids[ci][by, bx]
-                    absv = [abs(int(blk[k])) for k in range(64)]
-                    eob_k = 0
-                    for k in range(1, 64):
-                        if absv[k] == 1:
-                            eob_k = k  # last NEWLY-significant coef
-                    r = 0
-                    pend: list[int] = []
-                    for k in range(1, 64):
-                        av = absv[k]
-                        if av == 0:
-                            r += 1
-                            continue
-                        # ZRL flush at EVERY nonzero encounter (the
-                        # libjpeg span-safety rule): any buffered
-                        # correction bit was appended while r <= 15,
-                        # so it lies inside the 16-zero span this ZRL
-                        # covers and the decoder's inline walk reads
-                        # it in order
-                        while r > 15 and k <= eob_k:
-                            flush_eob_r()
-                            code, ln = enc_ac[t][0xF0]
-                            bw.put(code, ln)
-                            r -= 16
-                            for b in pend:
-                                bw.put(b, 1)
-                            pend = []
-                        if av > 1:
-                            # nonzero history → one correction bit
-                            pend.append(av & 1)
-                            continue
-                        # newly significant (±1 at this Al)
-                        flush_eob_r()
-                        code, ln = enc_ac[t][(r << 4) | 1]
-                        bw.put(code, ln)
-                        bw.put(1 if int(blk[k]) > 0 else 0, 1)
-                        for b in pend:
-                            bw.put(b, 1)
-                        pend = []
-                        r = 0
-                    if r > 0 or pend:
-                        eobrun += 1
-                        brbits.extend(pend)
-                        if eobrun == 0x7FFF:
-                            flush_eob_r()
-            flush_eob_r()
-            prog_scans.append((
-                bytes([1, cid, (t << 4) | t, 1, 63, 0x10]),
-                bw.flush(),
-            ))
-
-        # final scan: DC refinement — one raw bit per block
-        bw = _BitWriter()
-        for m_y in range(my):
-            for m_x in range(mx):
-                for ci in range(3):
-                    f_ = factors[ci]
-                    for byy in range(f_):
-                        for bxx in range(f_):
-                            bw.put(int(
-                                grids[ci][m_y * f_ + byy,
-                                          m_x * f_ + bxx, 0]
-                            ) & 1, 1)
-        prog_scans.append((
-            bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 0, 0x10]),
-            bw.flush(),
-        ))
-    elif scans == "separate":
-        # one NON-interleaved scan per component: T.81 A.2.2 grids
-        # (ceil(comp_dim/8) blocks — the MCU pad blocks of the
-        # interleaved layout are NOT coded), per-scan predictors and
-        # restart counting
-        for plane, comp, hh in ((y, 0, s), (cb, 1, 1), (cr, 2, 1)):
-            bw = _BitWriter()
-            pred = [0, 0, 0]
-            blob, n_unit, rst = b"", 0, 0
-            cw = -(-w * hh // s)
-            ch = -(-h * hh // s)   # factors are square (s×s or 1×1)
-            for by in range(-(-ch // 8)):
-                for bx in range(-(-cw // 8)):
-                    if restart_interval and n_unit and (
-                        n_unit % restart_interval == 0
-                    ):
-                        blob += bw.flush() + bytes([0xFF, 0xD0 + rst % 8])
-                        rst += 1
-                        bw = _BitWriter()
-                        pred = [0, 0, 0]
-                    n_unit += 1
-                    put_block(plane, by, bx, comp)
-            scan_blobs.append(blob + bw.flush())
-    else:
-        n_mcu = 0
-        for m_y in range(my):
-            for m_x in range(mx):
-                if restart_interval and n_mcu and (
-                    n_mcu % restart_interval == 0
-                ):
-                    entropy += bw.flush() + bytes(
-                        [0xFF, 0xD0 + (n_mcu // restart_interval - 1) % 8]
-                    )
-                    bw = _BitWriter()
-                    pred = [0, 0, 0]
-                n_mcu += 1
-                for vy in range(s):
-                    for vx in range(s):
-                        put_block(y, m_y * s + vy, m_x * s + vx, 0)
-                if not gray:
-                    put_block(cb, m_y, m_x, 1)
-                    put_block(cr, m_y, m_x, 2)
-        entropy += bw.flush()
-
-    def seg(marker, payload_):
-        return marker + struct.pack(">H", len(payload_) + 2) + payload_
-
-    def dht(tc, th, bits, vals):
-        return bytes([tc << 4 | th]) + bytes(bits) + bytes(vals)
-
-    def dqt(tid, tbl):
-        # Pq=1 (16-bit fields) whenever any entry exceeds a byte —
-        # the 12-bit frames' ×16 tables need it
-        zz = tbl[_ZIGZAG]
-        if int(zz.max()) > 255:
-            return bytes([0x10 | tid]) + zz.astype(">u2").tobytes()
-        return bytes([tid]) + bytes(zz.tolist())
-
-    # SOF marker: SOF0 baseline (8-bit sequential), SOF1 extended
-    # sequential (12-bit), SOF2 progressive (either precision)
-    if scans == "progressive":
-        sof_marker = b"\xff\xc2"
-    elif depth == 12:
-        sof_marker = b"\xff\xc1"
-    else:
-        sof_marker = b"\xff\xc0"
-    dc_lum_tbl = _HUFF_DC_LOSSLESS if depth == 12 else _HUFF_DC_LUM
-    dc_chrom_tbl = _HUFF_DC_LOSSLESS if depth == 12 else _HUFF_DC_CHROM
-    ac_lum_tbl = (
-        _HUFF_AC_PROG if (depth == 12 or scans == "progressive")
-        else _HUFF_AC_LUM
-    )
-    ac_chrom_tbl = (
-        _HUFF_AC_PROG if (depth == 12 or scans == "progressive")
-        else _HUFF_AC_CHROM
-    )
-    out = b"\xff\xd8"
-    out += seg(b"\xff\xe0", b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(b"\xff\xdb", dqt(0, qlum))
-    if gray:
-        out += seg(
-            sof_marker,
-            struct.pack(">BHHB", depth, h, w, 1) + bytes([1, 0x11, 0]),
+    ``scans``: ``'interleaved'`` is one baseline (SOF0) scan;
+    ``'separate'`` is multi-scan sequential, one non-interleaved SOS
+    per component over T.81 A.2.2 ceil(comp_dim/8) block grids, the
+    other layout camera firmwares write; ``'progressive'`` (SOF2) is
+    the Annex G script of :func:`_progressive_scans`. ``depth=12``
+    emits extended sequential (SOF1) or 12-bit progressive: samples
+    widened ×16, level shift 2048, 16-bit (Pq=1) quantization tables.
+    Annex K's Huffman tables stop at DC category 11 / AC size 10 and
+    define no EOBn run symbols, so 12-bit frames ship the flat
+    17-symbol DC table and 12-bit or progressive frames the extended
+    AC table in their DHT segments — the custom-table story real
+    progressive and lossless encoders share."""
+    if scans not in ("interleaved", "separate", "progressive"):
+        raise ValueError(
+            "scans must be 'interleaved', 'separate' or 'progressive'"
         )
-        out += seg(b"\xff\xc4", dht(0, 0, *dc_lum_tbl))
-        out += seg(b"\xff\xc4", dht(1, 0, *ac_lum_tbl))
-        if restart_interval:
-            out += seg(b"\xff\xdd", struct.pack(">H", restart_interval))
-        out += seg(b"\xff\xda", bytes([1, 1, 0x00, 0, 63, 0]))
-        return out + entropy + b"\xff\xd9"
-    out += seg(b"\xff\xdb", dqt(1, qchrom))
-    out += seg(
-        sof_marker,
-        struct.pack(">BHHB", depth, h, w, 3)
-        + bytes([1, s << 4 | s, 0, 2, 0x11, 1, 3, 0x11, 1]),
+    if arr.ndim == 2:
+        scans = "interleaved"  # gray is single-scan either way
+    comps, grids, qtabs, h, w = _dct_coefficients(
+        arr, quality, subsample, depth, "encode_jpeg"
     )
-    out += seg(b"\xff\xc4", dht(0, 0, *dc_lum_tbl))
-    out += seg(b"\xff\xc4", dht(1, 0, *ac_lum_tbl))
-    out += seg(b"\xff\xc4", dht(0, 1, *dc_chrom_tbl))
-    out += seg(b"\xff\xc4", dht(1, 1, *ac_chrom_tbl))
-    if restart_interval:
-        out += seg(b"\xff\xdd", struct.pack(">H", restart_interval))
+    if scans == "progressive" and restart_interval:
+        raise ValueError("restart markers unsupported with progressive scans")
+    dc_tbls = (
+        [_HUFF_DC_LOSSLESS] * 2 if depth == 12
+        else [_HUFF_DC_LUM, _HUFF_DC_CHROM]
+    )
+    ac_tbls = (
+        [_HUFF_AC_PROG] * 2 if depth == 12 or scans == "progressive"
+        else [_HUFF_AC_LUM, _HUFF_AC_CHROM]
+    )
+    enc_dc = [_huff_encode_table(*t) for t in dc_tbls]
+    enc_ac = [_huff_encode_table(*t) for t in ac_tbls]
+    tq = {cid: t for cid, _, _, t in comps}
+
+    def sequential(sc, al=0, ac=True):
+        # DC differences (shifted by Al), then run-length AC symbols
+        bw, pred = _BitWriter(), {}
+
+        def block(cid, by, bx):
+            vals = grids[cid][by, bx].tolist()
+            dc = vals[0] >> al
+            _put_dc(bw, enc_dc[tq[cid]], dc - pred.get(cid, 0))
+            pred[cid] = dc
+            if not ac:
+                return
+            tab, run = enc_ac[tq[cid]], 0
+            for v in vals[1:]:
+                if v == 0:
+                    run += 1
+                    continue
+                while run > 15:
+                    bw.put(*tab[0xF0])  # ZRL
+                    run -= 16
+                sz, bits_v = _mag_bits(v)
+                code, ln = tab[(run << 4) | sz]
+                bw.put((code << sz) | bits_v, ln + sz)
+                run = 0
+            if run:
+                bw.put(*tab[0x00])  # EOB
+
+        return block, bw.flush
+
+    def ac_band(sc, refine):
+        # progressive AC over 1..63: EOBn runs span blocks; the
+        # refinement pass buffers one correction bit per
+        # nonzero-history coefficient behind the symbol that covers it
+        tab, bw = enc_ac[sc[0][3]], _BitWriter()
+        eobrun, brbits = 0, []
+
+        def flush_eob():
+            nonlocal eobrun, brbits
+            if eobrun:
+                nb = eobrun.bit_length() - 1
+                bw.put(*tab[nb << 4])
+                if nb:
+                    bw.put(eobrun - (1 << nb), nb)
+            for b in brbits:
+                bw.put(b, 1)
+            eobrun, brbits = 0, []
+
+        def first(cid, by, bx):
+            nonlocal eobrun
+            r = 0
+            for v in grids[cid][by, bx].tolist()[1:]:
+                av = abs(v) >> 1  # Al=1, trunc toward zero
+                if av == 0:
+                    r += 1
+                    continue
+                flush_eob()
+                while r > 15:
+                    bw.put(*tab[0xF0])
+                    r -= 16
+                sz, bits_v = _mag_bits(av if v > 0 else -av)
+                code, ln = tab[(r << 4) | sz]
+                bw.put((code << sz) | bits_v, ln + sz)
+                r = 0
+            if r > 0:
+                eobrun += 1
+                if eobrun == 0x7FFF:
+                    flush_eob()
+
+        def refinement(cid, by, bx):
+            nonlocal eobrun
+            blk = grids[cid][by, bx].tolist()
+            absv = [abs(v) for v in blk]
+            eob_k = 0
+            for k in range(1, 64):
+                if absv[k] == 1:
+                    eob_k = k  # last NEWLY-significant coef
+            r = 0
+            pend: list[int] = []
+            for k in range(1, 64):
+                av = absv[k]
+                if av == 0:
+                    r += 1
+                    continue
+                # ZRL flush at EVERY nonzero encounter (the libjpeg
+                # span-safety rule): any buffered correction bit was
+                # appended while r <= 15, so it lies inside the
+                # 16-zero span this ZRL covers and the decoder's
+                # inline walk reads it in order
+                while r > 15 and k <= eob_k:
+                    flush_eob()
+                    bw.put(*tab[0xF0])
+                    r -= 16
+                    for b in pend:
+                        bw.put(b, 1)
+                    pend = []
+                if av > 1:
+                    # nonzero history → one correction bit
+                    pend.append(av & 1)
+                    continue
+                # newly significant (±1 at this Al)
+                flush_eob()
+                bw.put(*tab[(r << 4) | 1])
+                bw.put(1 if blk[k] > 0 else 0, 1)
+                for b in pend:
+                    bw.put(b, 1)
+                pend = []
+                r = 0
+            if r > 0 or pend:
+                eobrun += 1
+                brbits.extend(pend)
+                if eobrun == 0x7FFF:
+                    flush_eob()
+
+        def flush():
+            flush_eob()
+            return bw.flush()
+
+        return (refinement if refine else first), flush
+
+    def dc_refine(sc):
+        bw = _BitWriter()
+        return (
+            lambda cid, by, bx: bw.put(int(grids[cid][by, bx, 0]) & 1, 1)
+        ), bw.flush
+
     if scans == "progressive":
-        for hdr, blob in prog_scans:
-            out += seg(b"\xff\xda", hdr) + blob
-        return out + b"\xff\xd9"
-    if scans == "separate":
-        # Y (tables 0/0), Cb, Cr (tables 1/1) — one SOS each
-        for (cid, tsel), blob in zip(
-            ((1, 0x00), (2, 0x11), (3, 0x11)), scan_blobs
-        ):
-            out += seg(b"\xff\xda", bytes([1, cid, tsel, 0, 63, 0]))
-            out += blob
-        return out + b"\xff\xd9"
-    out += seg(b"\xff\xda", bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    return out + entropy + b"\xff\xd9"
+        coded = _progressive_scans(
+            comps, h, w, functools.partial(sequential, al=1, ac=False),
+            functools.partial(ac_band, refine=False),
+            functools.partial(ac_band, refine=True), dc_refine,
+        )
+    else:
+        groups = [[c] for c in comps] if scans == "separate" else [comps]
+        coded = [
+            (g, 0, 63, 0, _code_scan(
+                comps, h, w, [c[0] for c in g], restart_interval,
+                functools.partial(sequential, g),
+            ))
+            for g in groups
+        ]
+    dht = b"".join(
+        _dht(0, th, dc_tbls[th]) + _dht(1, th, ac_tbls[th])
+        for th in range(len(qtabs))
+    )
+    sof = 0xC2 if scans == "progressive" else 0xC1 if depth == 12 else 0xC0
+    return _jpeg_file(_dct_head(qtabs), _sof(sof, depth, h, w, comps), dht,
+                      restart_interval, coded)
 
 
 class _BitReader:
@@ -1537,55 +1488,212 @@ def _ac_refine_scan(br, tab, blk, ss, se, al, state):
         state["eobrun"] -= 1
 
 
-@_loud_corruption("JPEG")
-def decode_jpeg(payload: bytes) -> "np.ndarray":
-    """Decode baseline JPEG/JFIF to (h, w, 3) uint8 with stdlib +
-    numpy only — huffman entropy decode, dequantize, de-zigzag,
-    orthonormal-matrix IDCT, generic SOF0 sampling factors (4:4:4 /
-    4:2:2 / 4:2:0 via replication upsample), restart markers,
-    grayscale replicated to 3 channels (the decode_real contract).
+def _entropy_segments(payload: bytes, i: int) -> tuple[list, int]:
+    """De-stuff one scan's entropy bytes from offset ``i``: 0xFF00 →
+    0xFF, RSTn splits segments, any other marker (or the end) ends
+    the scan. Returns (segments, offset of the ending marker)."""
+    segments, cur = [], bytearray()
+    while True:
+        j = payload.find(b"\xff", i)
+        if j < 0:
+            cur += payload[i:]
+            i = len(payload)
+            break
+        cur += payload[i:j]
+        nxt = payload[j + 1] if j + 1 < len(payload) else 0xD9
+        if nxt == 0x00:
+            cur.append(0xFF)
+        elif 0xD0 <= nxt <= 0xD7:  # RSTn
+            segments.append(bytes(cur))
+            cur = bytearray()
+        else:
+            i = j  # EOI or the next real marker
+            break
+        i = j + 2
+    segments.append(bytes(cur))
+    return segments, i
 
-    MULTI-SCAN SEQUENTIAL decodes built-in too (r6, VERDICT r5 #8):
-    each SOS covers a subset of the frame's components (the
-    Y-then-Cb-then-Cr layout real camera firmwares emit) — scans are
-    decoded one after another into the shared component planes, with
-    per-scan predictors/restart state and the T.81 A.2 geometry
-    rules (non-interleaved scans use ceil(comp_dim/8) block grids,
-    NOT the MCU-padded grid). PROGRESSIVE (SOF2, T.81 Annex G)
-    decodes built-in as well (r6): scans refine a per-component
-    coefficient store — DC first/refinement, AC spectral bands with
-    multi-block EOB runs, successive-approximation correction bits —
-    and dequantize+IDCT run once at EOI. r7 adds the last two
-    Huffman-coded processes: 12-BIT precision (SOF1/extended
-    sequential AND 12-bit progressive — Pq=1 16-bit quantization
-    tables, level shift 2^11, output stripped to the 8-bit domain)
-    and LOSSLESS (SOF3, Annex H — dispatched to
-    :func:`_decode_jpeg_lossless`). r8 adds the ARITHMETIC-coded DCT
-    processes (SOF9/SOF10 — dispatched to
-    :func:`ceres_spark.operators.jpeg_arith.decode_jpeg_arith`).
-    What remains loud is exactly the differential-hierarchy
-    processes and lossless-arithmetic (rare) plus fractional
-    sampling ratios — ``NotImplementedError`` so the codec-hook
-    chain can claim them.
-    Per-block Python loops are fine for the fixture-scale payloads
-    this container sees; a production deployment registers a C codec
-    for bulk JPEG anyway (the plug-in path)."""
-    import struct
 
+def _huff_tables(sc, need_dc: bool, need_ac: bool) -> tuple[dict, dict]:
+    """The scan's per-component (DC, AC) Huffman tables. Progressive
+    refinement scans legitimately reference no DC table, but a scan
+    that NEEDS a table its file never defined is malformed and must
+    raise ValueError (hook-routable), not AttributeError out of the
+    bit reader."""
+    dc, ac = {}, {}
+    for cid, td, ta in sc.comps:
+        dc[cid], ac[cid] = sc.huff.get((0, td)), sc.huff.get((1, ta))
+        if need_dc and dc[cid] is None:
+            raise ValueError(
+                "JPEG scan references undefined DC huffman table"
+            )
+        if need_ac and ac[cid] is None:
+            raise ValueError(
+                "JPEG scan references undefined AC huffman table"
+            )
+    return dc, ac
+
+
+def _huffman_scan(sc):
+    """Huffman entropy layer of the DCT processes, returning the
+    skeleton's (restart, block) pair. Sequential (T.81 F.2.2): a DC
+    difference and run-length AC symbols per block. Progressive
+    (G.2): DC first (shifted by Al) or refinement (one raw bit), AC
+    bands with multi-block EOB runs and successive-approximation
+    correction bits. Blocks land in the zigzag coefficient store;
+    predictors and the EOB run reset at every restart."""
+    prog, ss, se, ah = sc.progressive, sc.ss, sc.se, sc.ah
+    al = sc.al if prog else 0
+    dc_tab, ac_tab = _huff_tables(
+        sc, not prog or (ss == 0 and ah == 0), not prog or ss > 0
+    )
+    br = _BitReader(sc.segments)
+    pred = {cid: 0 for cid, _, _ in sc.comps}
+    state = {"eobrun": 0}
+    coefs = sc.store
+
+    def restart(k):
+        br.next_segment()
+        state["eobrun"] = 0
+        for cid in pred:
+            pred[cid] = 0
+
+    if not prog or (ss == 0 and ah == 0):
+        def block(cid, by, bx):
+            blk = coefs[cid][by, bx]
+            s = br.read_symbol(dc_tab[cid])
+            if s > 16:  # T.81 F.1.2.1.2 category cap
+                raise ValueError("JPEG DC size out of range")
+            pred[cid] += _extend(br.read_bits(s), s) if s else 0
+            blk[0] = pred[cid] << al
+            if prog:
+                return
+            tab, k = ac_tab[cid], 1
+            while k < 64:
+                rs, val = br.read_rs_val(tab)
+                run, size = rs >> 4, rs & 15
+                if size == 0:
+                    if run == 15:  # ZRL
+                        k += 16
+                        continue
+                    break  # EOB
+                k += run
+                if k > 63:
+                    raise ValueError("JPEG AC index out of range")
+                blk[k] = val
+                k += 1
+    elif ss == 0:
+        def block(cid, by, bx):
+            if br.read_bit():
+                coefs[cid][by, bx, 0] |= 1 << al
+    else:
+        band = _ac_refine_scan if ah else _ac_first_scan
+
+        def block(cid, by, bx):
+            band(br, ac_tab[cid], coefs[cid][by, bx], ss, se, al, state)
+
+    return restart, block
+
+
+#: T.81 B.1.1.3 frame markers → (entropy layer, progressive). ``None``
+#: marks the differential-hierarchy and lossless-arithmetic
+#: processes: NotImplementedError, so the codec-hook chain can claim
+#: them.
+_JPEG_PROCESSES = {
+    0xC0: ("huffman", False), 0xC1: ("huffman", False),
+    0xC2: ("huffman", True), 0xC3: ("lossless", False),
+    0xC9: ("arith", False), 0xCA: ("arith", True),
+    **dict.fromkeys((0xC5, 0xC6, 0xC7, 0xCB, 0xCD, 0xCE, 0xCF)),
+}
+
+
+def _qtable(qt: dict, tq: int) -> "np.ndarray":
+    if tq not in qt:
+        raise ValueError(
+            "JPEG component references undefined quantization table"
+        )
+    return qt[tq]
+
+
+def _frame_header(process, data: bytes) -> tuple:
+    """SOFn (T.81 B.2.2) of a process (entropy layer, progressive):
+    (layer, progressive, precision, ih, iw, [(cid, h, v, tq)])."""
+    if process is None:
+        raise NotImplementedError(
+            "differential-hierarchy/lossless-arithmetic JPEG "
+            "needs the codec plug-in"
+        )
+    layer, progressive = process
+    prec, ih, iw, nc = struct.unpack(">BHHB", data[:6])
+    if layer == "lossless" and not 2 <= prec <= 16:
+        raise ValueError(f"invalid lossless precision {prec}")
+    if layer != "lossless" and prec not in (8, 12):
+        raise NotImplementedError(f"{prec}-bit JPEG needs the codec plug-in")
+    comps = []
+    for c in range(nc):
+        cid, hv, tq = data[6 + 3 * c:9 + 3 * c]
+        if layer == "lossless" and hv != 0x11:
+            raise NotImplementedError(
+                "subsampled lossless JPEG needs the plug-in"
+            )
+        if not (1 <= hv >> 4 <= 4 and 1 <= (hv & 15) <= 4):
+            raise ValueError("JPEG sampling factors out of range")
+        comps.append((cid, hv >> 4, hv & 15, tq))
+    return layer, progressive, prec, ih, iw, comps
+
+
+def _scan_header(frame: tuple, data: bytes) -> SimpleNamespace:
+    """SOS (T.81 B.2.3) checked against its frame: the scan's
+    [(cid, Td, Ta)] and Ss/Se/Ah/Al (Ss is the lossless predictor, Al
+    its point transform), as the namespace an entropy layer opens."""
+    layer, progressive, prec, _, _, comps = frame
+    ns = data[0]
+    scan = [(data[1 + 2 * i], data[2 + 2 * i] >> 4, data[2 + 2 * i] & 15)
+            for i in range(ns)]
+    ss, se = data[1 + 2 * ns], data[2 + 2 * ns]
+    ah, al = data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 15
+    if layer == "lossless" and not 1 <= ss <= 7:
+        raise ValueError(f"invalid lossless predictor {ss}")
+    known = {c[0] for c in comps}
+    if any(cid not in known for cid, _, _ in scan):
+        raise ValueError("JPEG scan references unknown component")
+    if progressive:
+        # G.1.1.1.1: a DC scan (Ss=0) carries Se=0; an AC scan has
+        # 1 <= Ss <= Se <= 63 and ONE component — malformed headers
+        # raise instead of quietly reading a DC-only scan or an empty
+        # band out of the stream
+        if ss == 0 and se != 0:
+            raise ValueError("progressive DC scan requires Se=0 (T.81 G.1)")
+        if ss > 0 and not ss <= se <= 63:
+            raise ValueError("progressive AC scan needs 1 <= Ss <= Se <= 63")
+        if ss > 0 and ns != 1:
+            raise ValueError("progressive AC scan with >1 component")
+    elif layer == "arith" and (ss, se, ah, al) != (0, 63, 0, 0):
+        raise ValueError(
+            "sequential arithmetic scan with progressive spectral parameters"
+        )
+    return SimpleNamespace(comps=scan, ss=ss, se=se, ah=ah, al=al,
+                           progressive=progressive, prec=prec)
+
+
+def _decode_jpeg_frames(payload: bytes, processes: dict) -> "np.ndarray":
+    """The decoder skeleton behind :func:`decode_jpeg` and
+    ``jpeg_arith.decode_jpeg_arith``; ``processes`` maps the frame
+    markers it accepts to their (entropy layer, progressive) — any
+    other frame marker is skipped."""
     if not payload or payload[:3] != b"\xff\xd8\xff":
         raise ValueError("not a JPEG payload")
-    pos = 2
     qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    sof = None
+    huff: dict[tuple[int, int], _HuffTable] = {}
+    dac: dict[tuple[int, int], object] = {}  # (Tc, Tb) → conditioning
+    frame = None  # (layer, progressive, precision, ih, iw, comps)
     restart = 0
-    planes: dict | None = None
-    coefs: dict | None = None  # progressive: per-comp (bh, bw, 64)
-    progressive = False
-    frame_prec = 8  # sample precision from SOF (8 or 12)
+    store = None  # per component: zigzag coefficients or samples
+    quant: dict[int, np.ndarray] = {}
     decoded: set[int] = set()
     saw_eoi = False
-    C = _dct_matrix()
+    pt = 0
+    pos = 2
     while pos + 4 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("bad JPEG marker stream")
@@ -1598,318 +1706,79 @@ def decode_jpeg(payload: bytes) -> "np.ndarray":
             break
         (ln,) = struct.unpack(">H", payload[pos + 2:pos + 4])
         data = payload[pos + 4:pos + 2 + ln]
+        pos += 2 + ln
         if m == 0xDB:  # DQT (possibly several tables per segment)
             i = 0
             while i < len(data):
-                if data[i] >> 4:  # Pq=1: 16-bit entries (12-bit frames)
-                    qt[data[i] & 15] = np.frombuffer(
-                        data[i + 1:i + 129], ">u2"
-                    ).astype(np.int64)
-                    i += 129
-                else:
-                    qt[data[i] & 15] = np.frombuffer(
-                        data[i + 1:i + 65], np.uint8
-                    ).astype(np.int64)
-                    i += 65
+                wide = bool(data[i] >> 4)  # Pq=1: 16-bit entries
+                qt[data[i] & 15] = np.frombuffer(
+                    data[i + 1:i + 65 + 64 * wide], ">u2" if wide else np.uint8
+                ).astype(np.int64)
+                i += 65 + 64 * wide
         elif m == 0xC4:  # DHT
             i = 0
             while i < len(data):
-                tc, th = data[i] >> 4, data[i] & 15
                 bits = list(data[i + 1:i + 17])
                 nv = sum(bits)
-                vals = list(data[i + 17:i + 17 + nv])
-                huff[(tc, th)] = _huff_decode_table(bits, vals)
+                huff[(data[i] >> 4, data[i] & 15)] = _HuffTable(
+                    bits, list(data[i + 17:i + 17 + nv])
+                )
                 i += 17 + nv
-        elif m == 0xC0 or m == 0xC1:  # baseline / ext. sequential
-            frame_prec, ih, iw, nc = struct.unpack(">BHHB", data[:6])
-            if frame_prec not in (8, 12):  # r7: 12-bit built-in
-                raise NotImplementedError(
-                    f"{frame_prec}-bit JPEG needs the codec plug-in"
-                )
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = data[6 + 3 * c:9 + 3 * c]
-                if not (1 <= hv >> 4 <= 4 and 1 <= (hv & 15) <= 4):
-                    raise ValueError(
-                        "JPEG sampling factors out of range"
-                    )
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            sof = (ih, iw, comps)
-        elif m == 0xC2:  # progressive DCT, huffman (r6: built-in)
-            frame_prec, ih, iw, nc = struct.unpack(">BHHB", data[:6])
-            if frame_prec not in (8, 12):  # r7: 12-bit built-in
-                raise NotImplementedError(
-                    f"{frame_prec}-bit JPEG needs the codec plug-in"
-                )
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = data[6 + 3 * c:9 + 3 * c]
-                if not (1 <= hv >> 4 <= 4 and 1 <= (hv & 15) <= 4):
-                    raise ValueError(
-                        "JPEG sampling factors out of range"
-                    )
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            sof = (ih, iw, comps)
-            progressive = True
-        elif m == 0xC3:  # lossless (Annex H) — r7: built-in
-            return _decode_jpeg_lossless(payload)
-        elif m in (0xC9, 0xCA):  # arithmetic DCT (Annex D/F/G) — r8
-            from .jpeg_arith import decode_jpeg_arith
-
-            return decode_jpeg_arith(payload)
-        elif m in (0xC5, 0xC6, 0xC7, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                "differential-hierarchy/lossless-arithmetic JPEG "
-                "needs the codec plug-in"
-            )
+        elif m == 0xCC:  # DAC: arithmetic conditioning (B.2.4.3)
+            i = 0
+            while i + 1 < len(data):
+                tc, tb, val = data[i] >> 4, data[i] & 15, data[i + 1]
+                if tc == 0:
+                    if val & 15 > val >> 4:
+                        raise ValueError("DAC DC conditioning L > U")
+                    dac[(0, tb)] = (val & 15, val >> 4)
+                else:
+                    if not 1 <= val <= 63:
+                        raise ValueError("DAC AC Kx out of range")
+                    dac[(1, tb)] = val
+                i += 2
+        elif m in processes:  # SOFn
+            frame = _frame_header(processes[m], data)
         elif m == 0xDD:  # DRI (may be redefined between scans)
             (restart,) = struct.unpack(">H", data[:2])
         elif m == 0xDA:  # SOS — decode this scan, keep walking
-            if sof is None:
+            if frame is None:
                 raise ValueError("JPEG SOS before SOF")
-            ih, iw, comps = sof
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mx, my = -(-iw // (8 * hmax)), -(-ih // (8 * vmax))
-            if planes is None:
-                planes = {
-                    cid: np.zeros((my * 8 * v, mx * 8 * hh))
+            layer, _, _, ih, iw, comps = frame
+            sc = _scan_header(frame, data)
+            sc.segments, pos = _entropy_segments(payload, pos)
+            unit = 1 if layer == "lossless" else 8
+            if store is None:
+                # one cell per block (8×8 zigzag coefficients) or sample
+                # of the frame's MCU-padded grid
+                hmax = max(c[1] for c in comps)
+                vmax = max(c[2] for c in comps)
+                rows, cols = _ceil(ih, unit * vmax), _ceil(iw, unit * hmax)
+                cell = () if unit == 1 else (64,)
+                store = {
+                    cid: np.zeros((rows * v, cols * hh) + cell, np.int64)
                     for cid, hh, v, _ in comps
                 }
-            ns = data[0]
-            scan = [(data[1 + 2 * i], data[2 + 2 * i] >> 4,
-                     data[2 + 2 * i] & 15) for i in range(ns)]
-            ss, se = data[1 + 2 * ns], data[2 + 2 * ns]
-            ah, al = data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 15
-            cmap = {cid: (hh, v, tq) for cid, hh, v, tq in comps}
-            for cid, _, _ in scan:
-                if cid not in cmap:
-                    raise ValueError("JPEG scan references unknown "
-                                     "component")
-            if progressive:
-                # T.81 G.1.1.1.1 scan-band validation (r10 — the
-                # arithmetic path gained this in r9, ADVICE r8; the
-                # Huffman path must reject the same malformed
-                # streams instead of quietly reading a DC-only scan
-                # or an empty AC band out of them)
-                if ss == 0 and se != 0:
-                    raise ValueError(
-                        "progressive DC scan requires Se=0 (T.81 G.1)"
-                    )
-                if ss > 0 and not ss <= se <= 63:
-                    raise ValueError(
-                        "progressive AC scan needs 1 <= Ss <= Se <= 63"
-                    )
-            # de-stuff THIS scan's entropy bytes, split at RSTn
-            segments, cur = [], bytearray()
-            i = pos + 2 + ln
-            while i < len(payload):
-                b = payload[i]
-                if b == 0xFF:
-                    nxt = payload[i + 1] if i + 1 < len(payload) else 0xD9
-                    if nxt == 0x00:
-                        cur.append(0xFF)
-                        i += 2
-                        continue
-                    if 0xD0 <= nxt <= 0xD7:  # RSTn
-                        segments.append(bytes(cur))
-                        cur = bytearray()
-                        i += 2
-                        continue
-                    break  # EOI or next real marker
-                cur.append(b)
-                i += 1
-            segments.append(bytes(cur))
-
-            # tables looked up lazily: progressive refinement scans
-            # legitimately reference no DC table (raw bits only) —
-            # but a scan that NEEDS a table its file never defined is
-            # malformed and must raise ValueError (hook-routable),
-            # not AttributeError out of the bit reader
-            dc_tab = {cid: huff.get((0, td)) for cid, td, _ in scan}
-            ac_tab = {cid: huff.get((1, ta)) for cid, _, ta in scan}
-            needs_dc = (not progressive) or (ss == 0 and ah == 0)
-            needs_ac = (not progressive) or ss > 0
-            for cid, _, _ in scan:
-                if needs_dc and dc_tab[cid] is None:
-                    raise ValueError(
-                        "JPEG scan references undefined DC huffman "
-                        "table"
-                    )
-                if needs_ac and ac_tab[cid] is None:
-                    raise ValueError(
-                        "JPEG scan references undefined AC huffman "
-                        "table"
-                    )
-            br = _BitReader(segments)
-            pred = {cid: 0 for cid, _, _ in scan}
-            state = {"n": 0, "eobrun": 0}
-
-            def unit_start():
-                # T.81: restart interval counts MCUs within a scan;
-                # predictors and the EOB run reset at each restart
-                if restart and state["n"] and state["n"] % restart == 0:
-                    br.next_segment()
-                    state["eobrun"] = 0
-                    for cc in pred:
-                        pred[cc] = 0
-                state["n"] += 1
-
-            if progressive:
-                # --- progressive DCT (T.81 Annex G): scans refine a
-                # per-component COEFFICIENT store (zigzag order);
-                # dequantize+IDCT happen once, after EOI
-                if coefs is None:
-                    coefs = {
-                        cid: np.zeros((my * v, mx * hh, 64), np.int32)
-                        for cid, hh, v, _ in comps
-                    }
-                if ss == 0:
-                    # DC scan — first (diff-coded, shifted) or
-                    # refinement (one raw bit per block)
-                    def dc_block(cid, by, bx):
-                        blk = coefs[cid][by, bx]
-                        if ah == 0:
-                            s = br.read_symbol(dc_tab[cid])
-                            if s > 16:  # T.81 F.1.2.1.2 category cap
-                                raise ValueError(
-                                    "JPEG DC size out of range"
-                                )
-                            diff = (
-                                _extend(br.read_bits(s), s) if s else 0
-                            )
-                            pred[cid] += diff
-                            blk[0] = pred[cid] << al
-                        elif br.read_bit():
-                            blk[0] |= 1 << al
-
-                    if ns == 1:
-                        cid = scan[0][0]
-                        hh, v, _tq = cmap[cid]
-                        comp_w = -(-iw * hh // hmax)
-                        comp_h = -(-ih * v // vmax)
-                        bw_n = -(-comp_w // 8)
-                        bh_n = -(-comp_h // 8)
-                        for by in range(bh_n):
-                            for bx in range(bw_n):
-                                unit_start()
-                                dc_block(cid, by, bx)
-                    else:
-                        for m_y in range(my):
-                            for m_x in range(mx):
-                                unit_start()
-                                for cid, _, _ in scan:
-                                    hh, v, _tq = cmap[cid]
-                                    for by in range(v):
-                                        for bx in range(hh):
-                                            dc_block(
-                                                cid,
-                                                m_y * v + by,
-                                                m_x * hh + bx,
-                                            )
-                else:
-                    # AC scan — always single-component (T.81 G.1);
-                    # EOB runs span blocks within the scan
-                    if ns != 1:
-                        raise ValueError(
-                            "progressive AC scan with >1 component"
-                        )
-                    cid = scan[0][0]
-                    hh, v, _tq = cmap[cid]
-                    comp_w = -(-iw * hh // hmax)
-                    comp_h = -(-ih * v // vmax)
-                    bw_n = -(-comp_w // 8)
-                    bh_n = -(-comp_h // 8)
-                    tab = ac_tab[cid]
-                    for by in range(bh_n):
-                        for bx in range(bw_n):
-                            unit_start()
-                            blk = coefs[cid][by, bx]
-                            if ah == 0:
-                                _ac_first_scan(
-                                    br, tab, blk, ss, se, al, state
-                                )
-                            else:
-                                _ac_refine_scan(
-                                    br, tab, blk, ss, se, al, state
-                                )
-                decoded.update(cid for cid, _, _ in scan)
-                pos = i
-                continue
-
-            for cid, _, _ in scan:
-                if cmap[cid][2] not in qt:
-                    raise ValueError(
-                        "JPEG component references undefined "
-                        "quantization table"
-                    )
-            qtab = {cid: qt[cmap[cid][2]][np.argsort(_ZIGZAG)]
-                    .reshape(8, 8) for cid, _, _ in scan}
-
-            def decode_block(cid):
-                s = br.read_symbol(dc_tab[cid])
-                if s > 16:  # T.81 F.1.2.1.2 category cap
-                    raise ValueError("JPEG DC size out of range")
-                diff = _extend(br.read_bits(s), s) if s else 0
-                pred[cid] += diff
-                zz = np.zeros(64, np.int64)
-                zz[0] = pred[cid]
-                k = 1
-                while k < 64:
-                    rs, val = br.read_rs_val(ac_tab[cid])
-                    run, size = rs >> 4, rs & 15
-                    if size == 0:
-                        if run == 15:  # ZRL
-                            k += 16
-                            continue
-                        break  # EOB
-                    k += run
-                    if k > 63:
-                        raise ValueError("JPEG AC index out of range")
-                    zz[k] = val
-                    k += 1
-                blk = np.zeros(64, np.int64)
-                blk[_ZIGZAG] = zz
-                return (
-                    C.T @ (blk.reshape(8, 8) * qtab[cid]) @ C
-                    + float(1 << (frame_prec - 1))  # level shift 2^(P-1)
-                )
-
-            if ns == 1:
-                # T.81 A.2.2: single-component scan is NON-interleaved
-                # — one block per MCU over the component's OWN
-                # ceil(dim/8) grid (covers both gray frames declaring
-                # 2×2 factors and per-component scans of color files)
-                cid = scan[0][0]
-                hh, v, _tq = cmap[cid]
-                comp_w = -(-iw * hh // hmax)   # ceil(iw·h/hmax)
-                comp_h = -(-ih * v // vmax)
-                bw_n, bh_n = -(-comp_w // 8), -(-comp_h // 8)
-                for by in range(bh_n):
-                    for bx in range(bw_n):
-                        unit_start()
-                        planes[cid][by * 8:by * 8 + 8,
-                                    bx * 8:bx * 8 + 8] = decode_block(cid)
+            sc.huff, sc.dac, sc.store = huff, dac, store
+            if layer == "huffman":
+                open_scan = _huffman_scan
+            elif layer == "lossless":
+                open_scan = _lossless_scan
             else:
-                # interleaved: MCU grid from the FRAME's hmax/vmax,
-                # components in SCAN order, h×v blocks each
-                for m_y in range(my):
-                    for m_x in range(mx):
-                        unit_start()
-                        for cid, _, _ in scan:
-                            hh, v, _tq = cmap[cid]
-                            for by in range(v):
-                                for bx in range(hh):
-                                    py0 = (m_y * v + by) * 8
-                                    px0 = (m_x * hh + bx) * 8
-                                    planes[cid][
-                                        py0:py0 + 8, px0:px0 + 8
-                                    ] = decode_block(cid)
-            decoded.update(cid for cid, _, _ in scan)
-            pos = i
-            continue
-        pos = pos + 2 + ln
-    if sof is None or (planes is None and coefs is None):
+                from ceres_spark.operators.jpeg_arith import (
+                    _arith_scan as open_scan,
+                )
+            on_restart, block = open_scan(sc)
+            cids = [cid for cid, _, _ in sc.comps]
+            if unit == 8 and not sc.progressive:
+                # sequential: the table in force at the component's scan
+                tqs = {c[0]: c[3] for c in comps}
+                for cid in cids:
+                    quant[cid] = _qtable(qt, tqs[cid])
+            _walk_scan(comps, ih, iw, cids, restart, on_restart, block, unit)
+            decoded.update(cids)
+            pt = sc.al  # lossless: the point transform undone at the end
+    if frame is None or store is None:
         raise ValueError("missing SOF/SOS in JPEG stream")
     if not saw_eoi:
         # the loop needs marker+length lookahead (pos+4), so a
@@ -1925,49 +1794,56 @@ def decode_jpeg(payload: bytes) -> "np.ndarray":
         # components) would decode silently coarse/partial (codec
         # contract clause 4)
         raise ValueError("JPEG stream ended without EOI")
-    ih, iw, comps = sof
+    layer, progressive, prec, ih, iw, comps = frame
     if decoded != {cid for cid, *_ in comps}:
         raise ValueError(
             "JPEG stream ended before all components were decoded"
         )
+    if layer == "lossless":
+        return _lossless_pixels(store, comps, prec, pt)
+    tables = {
+        cid: quant[cid] if cid in quant else _qtable(qt, tq)
+        for cid, _, _, tq in comps
+    }
+    return _dct_pixels(store, comps, tables, prec, ih, iw,
+                       matmul=layer == "huffman" and not progressive)
+
+
+def _dct_pixels(coefs, comps, tables, prec, ih, iw,
+                matmul: bool) -> "np.ndarray":
+    """The DCT processes' one epilogue: per component dequantize,
+    de-zigzag and a batched IDCT over the whole coefficient store,
+    replication upsampling to the frame's hmax×vmax grid, 12-bit
+    reduced to the 8-bit domain, then YCbCr→RGB (gray replicated to 3
+    channels, the decode_real contract)."""
+    C = _dct_matrix()
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
-    if progressive:
-        # one dequantize + batched IDCT per component, after all
-        # scans have refined the coefficient store
-        planes = {}
-        for cid, hh, v, tq in comps:
-            if tq not in qt:
-                raise ValueError(
-                    "JPEG component references undefined "
-                    "quantization table"
-                )
-            zz = coefs[cid].astype(np.int64) * qt[tq][None, None, :]
-            nat = np.zeros_like(zz)
-            nat[:, :, _ZIGZAG] = zz  # de-zigzag all blocks at once
-            bh_, bw_ = nat.shape[:2]
-            f = nat.reshape(bh_ * bw_, 8, 8).astype(np.float64)
-            px = np.einsum("ij,njk,kl->nil", C.T, f, C) + float(
-                1 << (frame_prec - 1)
-            )
-            planes[cid] = (
-                px.reshape(bh_, bw_, 8, 8)
-                .transpose(0, 2, 1, 3)
-                .reshape(bh_ * 8, bw_ * 8)
-            )
-
     full = {}
     for cid, hh, v, _ in comps:
         if hmax % hh or vmax % v:
             raise NotImplementedError(
                 "fractional JPEG sampling ratios need the codec plug-in"
             )
-        p = np.repeat(
-            np.repeat(planes[cid], vmax // v, axis=0), hmax // hh, axis=1
+        zz = coefs[cid] * tables[cid][None, None, :]
+        nat = np.zeros_like(zz)
+        nat[:, :, _ZIGZAG] = zz  # de-zigzag all blocks at once
+        bh, bw = nat.shape[:2]
+        f = nat.reshape(bh * bw, 8, 8).astype(np.float64)
+        # the two IDCT spellings round apart in the last ulp, which
+        # flips a pixel sitting on an exact .5 tie: Huffman sequential
+        # takes the matmul and the other DCT processes the einsum, the
+        # pixels tests/test_jpeg_golden.py pins for each
+        idct = (C.T @ f @ C if matmul
+                else np.einsum("ij,njk,kl->nil", C.T, f, C))
+        px = idct + float(1 << (prec - 1))  # level shift 2^(P-1)
+        plane = px.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(
+            bh * 8, bw * 8
         )
+        p = np.repeat(np.repeat(plane, vmax // v, axis=0), hmax // hh, axis=1)
         # 12-bit frames reduce to the 8-bit domain here (÷2^(P−8), the
         # strip-high-bits rule) so the shared YCbCr→RGB stays 128-centered
-        full[cid] = p[:ih, :iw] / float(1 << (frame_prec - 8))
+        full[cid] = p[:ih, :iw] / float(1 << (prec - 8))
     if len(comps) == 1:
         g = np.clip(np.round(full[comps[0][0]]), 0, 255).astype(np.uint8)
         return np.repeat(g[:, :, None], 3, axis=2)
@@ -1985,18 +1861,48 @@ def decode_jpeg(payload: bytes) -> "np.ndarray":
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
 
+@_loud_corruption("JPEG")
+def decode_jpeg(payload: bytes) -> "np.ndarray":
+    """Decode a JPEG to (h, w, 3) uint8 with stdlib + numpy only
+    (grayscale replicated to 3 channels, the decode_real contract).
+
+    One skeleton serves every built-in process: it walks the markers
+    and parses DQT/DHT/DAC/SOF/DRI/SOS once, validates each scan
+    header (T.81 G.1 bands included), de-stuffs the scan's entropy
+    bytes and splits them at RSTn, and walks its blocks in A.2 order
+    (interleaved MCUs over the frame's hmax×vmax grid, or one
+    component's own ceil(dim/8) grid) through :func:`_walk_scan`. Each
+    scan's blocks go to its frame's entropy layer:
+
+    - Huffman sequential and progressive — SOF0/SOF1/SOF2, 8- and
+      12-bit (:func:`_huffman_scan`);
+    - arithmetic (QM-coder) sequential and progressive — SOF9/SOF10,
+      8- and 12-bit, DAC conditioning (``jpeg_arith._arith_scan``);
+    - lossless DPCM — SOF3, precision 2..16, predictors 1..7, point
+      transform (:func:`_lossless_scan`).
+
+    The DCT layers fill one zigzag coefficient store, and after EOI
+    one epilogue (:func:`_dct_pixels`) dequantizes, runs a batched
+    IDCT, upsamples, reduces 12-bit to 8 and converts YCbCr→RGB.
+    Lossless components come back as RGB directly (the DNG/raw
+    convention): P>8 stripped to the top byte, P<8 scaled by
+    255/(2^P−1).
+
+    Damage is loud (codec contract clause 4): a missing EOI, an
+    undecoded component, a cut entropy segment or a malformed header
+    raises ``ValueError``. The differential-hierarchy (SOF5-7,
+    SOF13-15) and lossless-arithmetic (SOF11) processes, fractional
+    sampling ratios and CMYK raise ``NotImplementedError`` so the
+    codec-hook chain can claim them. Per-block Python loops suit
+    fixture-scale payloads; a production deployment registers a
+    native codec for bulk JPEG (the plug-in path)."""
+    return _decode_jpeg_frames(payload, _JPEG_PROCESSES)
+
+
 # ------------------------------------------- JPEG lossless (Annex H)
 # Predictive DPCM, no DCT/quantization — the compression inside DNG
 # and several camera-raw containers, so a multimodal pipeline
-# ingesting raws actually meets SOF3 (unlike the arithmetic-coded
-# dialects, which stay plug-in).
-
-#: Lossless DC diff categories run 0..16 (T.81 H.1.2.2; category 16
-#: has NO appended bits, diff ≡ 32768 mod 2^16). Annex K's baseline
-#: DC tables stop at 11, so — like the progressive AC case — a
-#: conformant lossless encoder ships its own DHT: 17 symbols, flat
-#: canonical 5-bit codes (all-ones code unused, as required).
-_HUFF_DC_LOSSLESS = ([0, 0, 0, 0, 17] + [0] * 11, list(range(17)))
+# ingesting raws actually meets SOF3.
 
 
 def _lossless_predict(
@@ -2023,182 +1929,47 @@ def _lossless_predict(
     )
 
 
-def _decode_jpeg_lossless(payload: bytes) -> "np.ndarray":
-    """Decode lossless JPEG (SOF3, T.81 Annex H) to (h, w, 3) uint8:
-    Huffman-coded DPCM residuals (categories 0..16, category 16 =
-    +32768 with no appended bits), the seven spec predictors, point
-    transform Pt (samples shift left by Pt on reconstruction),
-    modulo-2^16 arithmetic, precision 2..16. Supports 1- and
-    3-component frames with 1:1 sampling, single-component scans AND
-    sample-interleaved multi-component scans, restart markers
-    (prediction resets to the scan-start state). 3-component lossless
-    carries no mandated color transform — components are returned as
-    RGB directly (the DNG/raw convention), not YCbCr. Output strips
-    P>8 to the top byte (the encoder twin widens by pure left-shift,
-    so strip∘widen is the identity and 8-bit roundtrips are exact);
-    P<8 scales by 255/(2^P−1)."""
-    import struct
+def _lossless_scan(sc):
+    """Lossless entropy layer (T.81 Annex H), the skeleton's
+    (restart, block) pair over the sample store: Huffman-coded DPCM
+    residuals (categories 0..16, category 16 = +32768 with no
+    appended bits) against the predictor Ss selects, modulo 2^16. The
+    first sample of each component in the scan and in every restart
+    segment is predicted from 2^(P-Pt-1) (H.2.2)."""
+    sel, planes = sc.ss, sc.store
+    tabs, _ = _huff_tables(sc, True, False)
+    br = _BitReader(sc.segments)
+    default = 1 << (sc.prec - sc.al - 1)
+    fresh = {cid for cid, _, _ in sc.comps}
 
-    pos = 2
-    huff: dict[tuple[int, int], dict] = {}
-    prec = None
-    comps = None
-    restart = 0
-    planes: dict[int, "np.ndarray"] = {}
-    decoded: set[int] = set()
-    ih = iw = 0
-    pt_used = 0
-    saw_eoi = False
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        while pos + 2 <= len(payload) and payload[pos + 1] == 0xFF:
-            pos += 1
-        m = payload[pos + 1]
-        if m == 0xD9:
-            saw_eoi = True
-            break
-        (ln,) = struct.unpack(">H", payload[pos + 2:pos + 4])
-        data = payload[pos + 4:pos + 2 + ln]
-        if m == 0xC4:  # DHT
-            i = 0
-            while i < len(data):
-                tc, th = data[i] >> 4, data[i] & 15
-                bits = list(data[i + 1:i + 17])
-                nv = sum(bits)
-                vals = list(data[i + 17:i + 17 + nv])
-                huff[(tc, th)] = _huff_decode_table(bits, vals)
-                i += 17 + nv
-        elif m == 0xC3:  # SOF3
-            prec, ih, iw, nc = struct.unpack(">BHHB", data[:6])
-            if not 2 <= prec <= 16:
-                raise ValueError(f"invalid lossless precision {prec}")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = data[6 + 3 * c:9 + 3 * c]
-                if hv != 0x11:
-                    raise NotImplementedError(
-                        "subsampled lossless JPEG needs the plug-in"
-                    )
-                comps.append(cid)
-            for cid in comps:
-                planes[cid] = np.zeros((ih, iw), np.int32)
-        elif m == 0xDD:  # DRI
-            (restart,) = struct.unpack(">H", data[:2])
-        elif m == 0xDA:  # SOS
-            if comps is None:
-                raise ValueError("lossless SOS before SOF3")
-            ns = data[0]
-            scan = [(data[1 + 2 * i], data[2 + 2 * i] >> 4)
-                    for i in range(ns)]
-            sel = data[1 + 2 * ns]          # Ss = predictor selector
-            pt = data[3 + 2 * ns] & 15      # Al = point transform
-            pt_used = pt
-            if not 1 <= sel <= 7:
-                raise ValueError(f"invalid lossless predictor {sel}")
-            tabs = {}
-            for cid, td in scan:
-                if cid not in planes:
-                    raise ValueError(
-                        "JPEG scan references unknown component"
-                    )
-                t = huff.get((0, td))
-                if t is None:
-                    raise ValueError(
-                        "JPEG scan references undefined DC huffman "
-                        "table"
-                    )
-                tabs[cid] = t
-            # de-stuff entropy bytes, split at RSTn (same walk as the
-            # DCT path)
-            segments, cur = [], bytearray()
-            i = pos + 2 + ln
-            while i < len(payload):
-                b = payload[i]
-                if b == 0xFF:
-                    nxt = (
-                        payload[i + 1] if i + 1 < len(payload) else 0xD9
-                    )
-                    if nxt == 0x00:
-                        cur.append(0xFF)
-                        i += 2
-                        continue
-                    if 0xD0 <= nxt <= 0xD7:
-                        segments.append(bytes(cur))
-                        cur = bytearray()
-                        i += 2
-                        continue
-                    break
-                cur.append(b)
-                i += 1
-            segments.append(bytes(cur))
-            br = _BitReader(segments)
-            default = 1 << (prec - pt - 1)
-            state = {"n": 0, "fresh": {cid: False for cid, _ in scan}}
+    def restart(k):
+        br.next_segment()
+        fresh.update(cid for cid, _, _ in sc.comps)
 
-            def diff_of(tab) -> int:
-                s = br.read_symbol(tab)
-                if s > 16:  # H.1.2.2 category cap
-                    raise ValueError("JPEG DC size out of range")
-                if s == 0:
-                    return 0
-                if s == 16:  # H.1.2.2: no appended bits
-                    return 32768
-                return _extend(br.read_bits(s), s)
+    def block(cid, y, x):
+        if cid in fresh:
+            px = default
+            fresh.discard(cid)
+        else:
+            px = _lossless_predict(planes[cid], y, x, sel, default)
+        s = br.read_symbol(tabs[cid])
+        if s > 16:  # H.1.2.2 category cap
+            raise ValueError("JPEG DC size out of range")
+        diff = 32768 if s == 16 else _extend(br.read_bits(s), s) if s else 0
+        planes[cid][y, x] = (px + diff) & 0xFFFF
 
-            def unit_start():
-                if restart and state["n"] and state["n"] % restart == 0:
-                    br.next_segment()
-                    for cid in state["fresh"]:
-                        state["fresh"][cid] = True
-                state["n"] += 1
+    return restart, block
 
-            def sample(cid, y, x):
-                if state["fresh"][cid]:
-                    px = default  # H.2.2: restart == scan start
-                    state["fresh"][cid] = False
-                else:
-                    px = _lossless_predict(
-                        planes[cid], y, x, sel, default
-                    )
-                planes[cid][y, x] = (px + diff_of(tabs[cid])) & 0xFFFF
 
-            if ns == 1:
-                cid = scan[0][0]
-                for y in range(ih):
-                    for x in range(iw):
-                        unit_start()
-                        sample(cid, y, x)
-            else:  # sample-interleaved (1:1 factors → MCU = 1 sample)
-                for y in range(ih):
-                    for x in range(iw):
-                        unit_start()
-                        for cid, _ in scan:
-                            sample(cid, y, x)
-            decoded.update(cid for cid, _ in scan)
-            pos = i
-            continue
-        pos = pos + 2 + ln
-    if comps is None or not decoded:
-        raise ValueError("missing SOF3/SOS in lossless JPEG stream")
-    if not saw_eoi:
-        # same lookahead quirk + contract as the DCT path: a trailing
-        # two-byte EOI exits the loop unseen; require it, so a cut
-        # that shaved the final entropy bytes can't decode silently
-        # wrong under the ≤7-bit pad tolerance
-        t = payload[pos:]
-        while len(t) >= 3 and t[0] == 0xFF and t[1] == 0xFF:
-            t = t[1:]
-        saw_eoi = t[:2] == b"\xff\xd9"
-    if not saw_eoi:
-        raise ValueError("JPEG stream ended without EOI")
-    if decoded != set(comps):
-        raise ValueError(
-            "JPEG stream ended before all components were decoded"
-        )
+def _lossless_pixels(planes, comps, prec: int, pt: int) -> "np.ndarray":
+    """Lossless epilogue: undo the point transform, strip P>8 to the
+    top byte (the encoder twin widens by pure left-shift, so
+    strip∘widen is the identity and 8-bit roundtrips are exact),
+    scale P<8 by 255/(2^P−1). 3-component lossless carries no
+    mandated colour transform — components are RGB directly."""
     out = []
-    for cid in comps:
-        v = (planes[cid].astype(np.int64) << pt_used) & 0xFFFF
+    for cid, *_ in comps:
+        v = (planes[cid] << pt) & 0xFFFF
         if prec > 8:
             v = v >> (prec - 8)
         elif prec < 8:
@@ -2222,19 +1993,17 @@ def encode_jpeg_lossless(
     restart_interval: int = 0,
 ) -> bytes:
     """Lossless JPEG encoder (SOF3) — the fixture/roundtrip twin of
-    :func:`_decode_jpeg_lossless`: (h, w, 3) RGB or (h, w) grayscale
-    uint8, widened to ``precision`` bits by pure left-shift (so the
-    decoder's top-byte strip inverts it exactly and 8-bit roundtrips
-    are bit-identical — LOSSLESS end to end). Ships the flat
-    17-symbol DC table (Annex K defines no category-12..16 codes —
-    the same why-custom-DHT story as the progressive AC table).
+    :func:`decode_jpeg`'s lossless process: (h, w, 3) RGB or (h, w)
+    grayscale uint8, widened to ``precision`` bits by pure left-shift
+    (so the decoder's top-byte strip inverts it exactly and 8-bit
+    roundtrips are bit-identical — LOSSLESS end to end). Ships the
+    flat 17-symbol DC table (Annex K defines no category-12..16 codes
+    — the same why-custom-DHT story as the progressive AC table).
     ``predictor`` ∈ 1..7, ``point_transform`` shifts samples right
     before coding (decoder shifts back), ``interleaved`` picks one
     3-component sample-interleaved scan vs one scan per component,
     ``restart_interval`` emits DRI + RSTn every r samples/MCUs with
     scan-start prediction resets."""
-    import struct
-
     if not 1 <= int(predictor) <= 7:
         raise ValueError("predictor must be 1..7")
     if not 8 <= int(precision) <= 16:
@@ -2254,83 +2023,43 @@ def encode_jpeg_lossless(
         )
     h, w = chans[0].shape
     prec = int(precision)
-    samples = [
-        (c.astype(np.int64) << (prec - 8)) >> pt for c in chans
-    ]
+    samples = {
+        i + 1: (c.astype(np.int64) << (prec - 8)) >> pt
+        for i, c in enumerate(chans)
+    }
+    comps = [(cid, 1, 1, 0) for cid in samples]
     default = 1 << (prec - pt - 1)
     sel = int(predictor)
     enc = _huff_encode_table(*_HUFF_DC_LOSSLESS)
 
-    def put_diff(bw, s_val, px):
-        d = (s_val - px) & 0xFFFF
-        if d == 32768:
-            code, ln = enc[16]
-            bw.put(code, ln)
-            return
-        signed = d - 65536 if d > 32768 else d
-        sz, bits_v = _mag_bits(signed)
-        code, ln = enc[sz]
-        bw.put(code, ln)
-        if sz:
-            bw.put(bits_v, sz)
+    def segment(sc):
+        bw, fresh = _BitWriter(), {c[0] for c in sc}
 
-    def encode_scan(scan_chans):
-        bw = _BitWriter()
-        blob = b""
-        fresh = [False] * len(scan_chans)
-        n = 0
-        for y in range(h):
-            for x in range(w):
-                if restart_interval and n and n % restart_interval == 0:
-                    blob += bw.flush()
-                    blob += bytes(
-                        [0xFF, 0xD0 + ((n // restart_interval) - 1) % 8]
-                    )
-                    bw = _BitWriter()
-                    fresh = [True] * len(scan_chans)
-                n += 1
-                for ci, plane in enumerate(scan_chans):
-                    if fresh[ci]:
-                        px = default
-                        fresh[ci] = False
-                    else:
-                        px = _lossless_predict(plane, y, x, sel, default)
-                    put_diff(bw, int(plane[y, x]), px)
-        return blob + bw.flush()
+        def block(cid, y, x):
+            plane = samples[cid]
+            if cid in fresh:
+                px = default
+                fresh.discard(cid)
+            else:
+                px = _lossless_predict(plane, y, x, sel, default)
+            d = (int(plane[y, x]) - px) & 0xFFFF
+            if d == 32768:  # category 16: no appended bits
+                bw.put(*enc[16])
+            else:
+                _put_dc(bw, enc, d - 65536 if d > 32768 else d)
 
-    def seg(marker, payload_):
-        return marker + struct.pack(">H", len(payload_) + 2) + payload_
+        return block, bw.flush
 
-    nc = len(samples)
-    out = b"\xff\xd8"
-    out += seg(
-        b"\xff\xc3",
-        struct.pack(">BHHB", prec, h, w, nc)
-        + b"".join(bytes([i + 1, 0x11, 0]) for i in range(nc)),
-    )
-    out += seg(
-        b"\xff\xc4",
-        bytes([0x00])
-        + bytes(_HUFF_DC_LOSSLESS[0])
-        + bytes(_HUFF_DC_LOSSLESS[1]),
-    )
-    if restart_interval:
-        out += seg(b"\xff\xdd", struct.pack(">H", restart_interval))
-    if gray or interleaved:
-        out += seg(
-            b"\xff\xda",
-            bytes([nc])
-            + b"".join(bytes([i + 1, 0x00]) for i in range(nc))
-            + bytes([sel, 0, pt]),
-        )
-        out += encode_scan(samples)
-    else:
-        for i, plane in enumerate(samples):
-            out += seg(
-                b"\xff\xda", bytes([1, i + 1, 0x00, sel, 0, pt])
-            )
-            out += encode_scan([plane])
-    return out + b"\xff\xd9"
+    groups = [comps] if gray or interleaved else [[c] for c in comps]
+    coded = [
+        (g, sel, 0, pt, _code_scan(
+            comps, h, w, [c[0] for c in g], restart_interval,
+            functools.partial(segment, g), unit=1,
+        ))
+        for g in groups
+    ]
+    return _jpeg_file(b"", _sof(0xC3, prec, h, w, comps),
+                      _dht(0, 0, _HUFF_DC_LOSSLESS), restart_interval, coded)
 
 
 # --------------------------------------------------------- FLAC
@@ -2535,8 +2264,6 @@ def encode_flac(
     partition Rice residual with a near-optimal parameter — a small
     but fully CONFORMANT encoder (CRCs, STREAMINFO, UTF-8 frame
     numbers), and exactly lossless."""
-    import struct
-
     if samples.ndim == 1:
         samples = samples[:, None]
     if samples.dtype != np.int16 or samples.shape[1] not in (1, 2):

@@ -20,6 +20,13 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    # a running session belongs to its caller: builder.getOrCreate()
+    # would re-apply the SQL confs below to it (timezone, shuffle
+    # partitions), so an in-process caller such as cli.main must get
+    # it back untouched; only a fresh process builds one
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -587,3 +587,15 @@ def test_lossless_handbuilt_restart_and_point_transform():
     assert out.shape == (2, 4, 3)
     for c in range(3):
         assert np.array_equal(out[:, :, c], expect), c
+
+
+def test_codec_skeleton_has_one_owner():
+    """The frame header parse, the 0xFF00 de-stuffing branch and the
+    YCbCr->RGB epilogue are written once across the Huffman, lossless
+    and arithmetic decoders: each entropy layer plugs into the same
+    marker walk instead of carrying its own copy."""
+    import ceres_spark.operators.jpeg_arith as ja
+
+    src = "".join(open(m.__file__).read() for m in (mm, ja))
+    for needle in ('struct.unpack(">BHHB"', "nxt == 0x00", "1.402"):
+        assert src.count(needle) == 1, (needle, src.count(needle))

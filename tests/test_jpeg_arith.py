@@ -463,3 +463,20 @@ def test_byte_flip_fuzz_never_hangs_or_leaks():
     # only would mean the error contracts never fire
     assert outcomes["valueerror"] > 0
     assert sum(outcomes.values()) == 120
+
+
+def test_every_truncation_raises_value_error():
+    # codec contract clause 4 for the direct entry point too: a cut
+    # header, table or scan raises ValueError, never the IndexError or
+    # struct.error of wherever the bytes ran out
+    img = _rand_img(5, 7, seed=3)
+    for kw in ({}, {"progressive": True}, {"restart_interval": 1},
+               {"depth": 12, "subsample": 2}):
+        payload = ja.encode_jpeg_arith(img, **kw)
+        full = ja.decode_jpeg_arith(payload)
+        for cut in range(len(payload)):
+            try:
+                out = ja.decode_jpeg_arith(payload[:cut])
+            except (ValueError, NotImplementedError):
+                continue
+            assert np.array_equal(out, full), (kw, cut)

@@ -133,3 +133,11 @@ def test_one_prefix_list_and_queries_start_with_it():
     assert len(names) == 1, names
     prefix = getattr(m, names[0])
     assert list(m.queries())[: len(prefix)] == prefix
+
+
+def test_codec_dependency_closure_reaches_jpeg_arith():
+    """decode_jpeg hands SOF9/SOF10 frames to jpeg_arith, so an entry
+    that decodes JPEGs covers jpeg_arith.py: the import scan must see
+    that dependency (it reads absolute ``ceres_spark`` imports only)."""
+    refs = ps.entry_module_refs()
+    assert "ceres_spark/operators/jpeg_arith.py" in refs["multimodal_decode"]
