@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from ceres_spark.errors import InvalidAggregationMethod
 
@@ -33,8 +34,39 @@ AGGREGATION_METHODS = ("average", "sum", "last", "max", "min")
 
 
 def _dec_to_double(col: Column) -> Column:
-    """Correctly-rounded decimal→double via string (see agg_expr)."""
+    """Correctly-rounded decimal→double via string (see lattice)."""
     return col.cast("string").cast("double")
+
+
+def lattice(col: Column | str) -> Column:
+    """The decimal sum lattice every exact sum accumulates in.
+
+    Decimal accumulation is exact, so a sum is reproducible bit for
+    bit at any parallelism or partitioning (double summation is
+    order-dependent; decimal is not) and identical to the DuckDB
+    oracle's matching expression. The double enters through its
+    string: engines agree on the shortest decimal repr, while direct
+    double→decimal casts round the binary expansion differently at
+    the 10th digit. The way back (:func:`exact_sum`) also goes
+    through a string, because decimal→double casts are not correctly
+    rounded in every engine (DuckDB computes int128/10^scale in float
+    arithmetic: off by 1 ulp); every engine parses decimal strings
+    correctly rounded.
+    """
+    if isinstance(col, str):
+        col = F.col(col)
+    return col.cast("string").cast("decimal(30,10)")
+
+
+def exact_sum(
+    col: Column | str, over: WindowSpec | None = None
+) -> Column:
+    """The lattice sum of ``col`` (optionally ``.over(window)``) as a
+    correctly-rounded double."""
+    s = F.sum(lattice(col))
+    if over is not None:
+        s = s.over(over)
+    return _dec_to_double(s)
 
 
 def agg_expr(method: str, value_col: str = "value", ts_col: str = "ts") -> Column:
@@ -44,19 +76,10 @@ def agg_expr(method: str, value_col: str = "value", ts_col: str = "ts") -> Colum
     groups, matching aggregate()'s empty→None (ceres.py ≈L1005).
     """
     if method == "average":
-        # decimal-exact accumulation, ONE double division at the end:
-        # reproducible bit-for-bit at any parallelism / partitioning
-        # (double summation is order-dependent; decimal is not), and
-        # identical to the DuckDB oracle's matching expression.
-        # decimal→string→double because decimal→double casts are not
-        # correctly rounded in every engine (DuckDB computes
-        # int128/10^scale in float arithmetic: off by 1 ulp); every
-        # engine parses decimal strings correctly rounded.
-        return _dec_to_double(
-            F.sum(F.col(value_col).cast("string").cast("decimal(30,10)"))
-        ) / F.count(F.col(value_col))
+        # exact lattice sum, ONE double division at the end
+        return exact_sum(value_col) / F.count(F.col(value_col))
     if method == "sum":
-        return _dec_to_double(F.sum(F.col(value_col).cast("string").cast("decimal(30,10)")))
+        return exact_sum(value_col)
     if method == "last":
         # last non-null value by timestamp; max_by skips rows where the
         # value is NULL only if we pre-filter, so guard with a when().

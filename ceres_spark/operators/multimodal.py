@@ -1103,8 +1103,6 @@ def encode_jpeg(
         raise ValueError(
             "scans must be 'interleaved', 'separate' or 'progressive'"
         )
-    if arr.ndim == 2:
-        scans = "interleaved"  # gray is single-scan either way
     comps, grids, qtabs, h, w = _dct_coefficients(
         arr, quality, subsample, depth, "encode_jpeg"
     )

@@ -26,9 +26,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 import ceres_spark.operators.compact as cp
-from ceres_spark.operators.aggregate import agg_expr
 from ceres_spark.errors import InvalidAggregationMethod
-from ceres_spark.operators.aggregate import AGGREGATION_METHODS
+from ceres_spark.operators.aggregate import (
+    AGGREGATION_METHODS,
+    _dec_to_double,
+    agg_expr,
+    lattice,
+)
 
 
 def quantize_up(t: int, step: int) -> int:
@@ -178,8 +182,6 @@ def rollup_per_node(
     per bucket (they're cheap partial aggs on the same groupBy); the
     CASE projects each metric's own.
     """
-    from ceres_spark.operators.aggregate import agg_expr
-
     step = F.lit(int(default_step))
     for m, s in sorted(step_by_metric.items()):
         step = F.when(F.col("metric") == m, F.lit(int(s))).otherwise(step)
@@ -244,8 +246,6 @@ def rollup_catalog(
     step-partitioned archive (each node's buckets MUST land in the
     directory of their own step; see cli.py rollup-catalog).
     """
-    from ceres_spark.operators.aggregate import agg_expr
-
     col_of = {
         "average": "_avg",
         "sum": "_sum",
@@ -381,17 +381,16 @@ def rollup_partials(deduped: DataFrame, new_step: int) -> DataFrame:
     100 TB this is the difference between touching one day of data
     per maintenance run and touching the whole archive.
 
-    State per bucket: DECIMAL(30,10) sum (exact ⇒ merge-exact, the
-    same string-routed cast as agg_expr), non-null count, min, max,
+    State per bucket: the lattice sum (exact ⇒ merge-exact,
+    :func:`aggregate.lattice`), non-null count, min, max,
     and (last_ts, last_val) for the 'last' method — enough to
     FINALIZE all five ceres methods bit-identically to a direct
     :func:`rollup` over the union of the inputs.
     """
     new_step = int(new_step)
     bucket = (F.col("ts") - F.col("ts") % new_step).cast("long")
-    dec = F.col("value").cast("string").cast("decimal(30,10)")
     return deduped.groupBy("metric", bucket.alias("ts")).agg(
-        F.sum(dec).alias("_sum_dec"),
+        F.sum(lattice("value")).alias("_sum_dec"),
         F.count("value").alias("_cnt"),
         F.min("value").alias("_vmin"),
         F.max("value").alias("_vmax"),
@@ -443,8 +442,6 @@ def rollup_finalize(
     path against a full recompute."""
     if method not in AGGREGATION_METHODS:
         raise InvalidAggregationMethod(method)
-    from ceres_spark.operators.aggregate import _dec_to_double
-
     if method == "average":
         value = _dec_to_double(F.col("_sum_dec")) / F.col("_cnt")
     elif method == "sum":

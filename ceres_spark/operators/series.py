@@ -32,7 +32,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ceres_spark.errors import InvalidRequest
-from ceres_spark.operators.aggregate import aggregate_series
+from ceres_spark.operators.aggregate import (
+    _dec_to_double,
+    aggregate_series,
+    exact_sum,
+    lattice,
+)
 
 #: Cardinality bound for the panel-ordering rank in
 #: :func:`sort_by_extrema` — its windows are global by definition
@@ -194,20 +199,15 @@ def series_functions(buckets: DataFrame, ma_points: int = 5) -> DataFrame:
     w = Window.partitionBy("metric").orderBy("ts")
     w_ma = w.rowsBetween(-(ma_points - 1), 0)
     w_run = w.rowsBetween(Window.unboundedPreceding, 0)
-    # string-routed cast into decimal — see anomaly_zscore note
-    dec = F.col("value").cast("string").cast("decimal(30,10)")
     return buckets.select(
         "metric",
         "ts",
         "value",
         (F.col("value") - F.lag("value").over(w)).alias("derivative"),
         (
-            F.sum(dec).over(w_ma).cast("string").cast("double")
-            / F.count("value").over(w_ma)
+            exact_sum("value", over=w_ma) / F.count("value").over(w_ma)
         ).alias("moving_avg"),
-        F.sum(dec).over(w_run).cast("string").cast("double").alias(
-            "running_integral"
-        ),
+        exact_sum("value", over=w_run).alias("running_integral"),
     )
 
 
@@ -222,7 +222,8 @@ def series_transform(
 
     One conditional aggregation, map-side combinable; scale/offset
     are scan-speed column math. Determinism: the average accumulates
-    in DECIMAL (the _dec-sum trick); max/min/count are exact.
+    on the decimal lattice (aggregate.exact_sum); max/min/count are
+    exact.
     """
     v = F.col("value") * F.lit(float(scale)) + F.lit(float(offset))
     v0 = F.coalesce(v, F.lit(0.0))  # transformNull(0) AFTER transform
@@ -231,12 +232,7 @@ def series_transform(
         .agg(
             F.count("value").alias("count_series"),
             (F.max("value") - F.min("value")).alias("range_of_series"),
-            (
-                F.sum(v0.cast("string").cast("decimal(30,10)"))
-                .cast("string")
-                .cast("double")
-                / F.count("*")
-            ).alias("avg_transformed"),
+            (exact_sum(v0) / F.count("*")).alias("avg_transformed"),
         )
         .orderBy("ts")
     )
@@ -289,10 +285,10 @@ def series_linreg(
     # operation order on the oracle side — multiplying the wide sums
     # as decimals instead would hit the 38-digit cap, where the two
     # engines rescale differently
-    as_d = lambda c: c.cast("string").cast("double")  # noqa: E731
+    std, svd, stvd, sttd = (
+        _dec_to_double(F.col(c)) for c in ("_st", "_sv", "_stv", "_stt")
+    )
     nd = F.col("n_points").cast("double")
-    std, svd = as_d(F.col("_st")), as_d(F.col("_sv"))
-    stvd, sttd = as_d(F.col("_stv")), as_d(F.col("_stt"))
     num = nd * stvd - std * svd
     den = nd * sttd - std * std
     slope = F.when(den != 0.0, num / den)
@@ -312,6 +308,19 @@ def series_linreg(
     return agg_df.select(*cols)
 
 
+def _ewma_fold(vals: np.ndarray, a: float, state: float = np.nan):
+    """The EWMA recurrence ``e_i = a·v_i + (1−a)·e_{i−1}`` over
+    time-ordered ``vals`` from ``state`` (NaN: not seeded; the first
+    non-NULL point seeds). NULL points carry the average forward.
+    Returns (per-point EWMA, new state)."""
+    out = np.empty_like(vals)
+    for i, v in enumerate(vals):
+        if not np.isnan(v):
+            state = v if np.isnan(state) else a * v + (1 - a) * state
+        out[i] = state
+    return out, state
+
+
 def ewma(buckets: DataFrame, alpha: float = 0.3) -> DataFrame:
     """Exponentially weighted moving average per series (graphite-web
     ``exponentialMovingAverage``/``ewma`` over a ceres fetch; the
@@ -321,33 +330,106 @@ def ewma(buckets: DataFrame, alpha: float = 0.3) -> DataFrame:
     recursive — no Catalyst window frame expresses it, and the
     closed-form power expansion overflows for long series — so this
     is the documented applyInPandas case: one Arrow batch per metric,
-    one linear numpy pass, state = a single float. Scale shape: the
-    only exchange is the groupBy(metric) shuffle; each task holds one
-    series run, never the corpus. NULL points carry the previous EWMA
-    forward (graphite semantics: gaps don't decay the average).
+    one linear numpy pass (:func:`_ewma_fold`), state = a single
+    float. Scale shape: the only exchange is the groupBy(metric)
+    shuffle; each task holds one series run, never the corpus. NULL
+    points carry the previous EWMA forward (graphite semantics: gaps
+    don't decay the average).
 
-    Streaming: ``streaming.stateful.holt_winters_stream`` with
-    ``beta=0`` IS the online EWMA — with zero initial trend the level
-    update collapses to ``a·v + (1−a)·level`` and the emitted
-    forecast is the one-step-behind EWMA.
+    Streaming: ``streaming.stateful.ewma_stream`` is the online EWMA;
+    it runs the same fold from the state it stores per series.
     """
     a = float(alpha)
 
     def _f(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("ts").reset_index(drop=True)
-        vals = pdf["value"].to_numpy(dtype=float)
-        out = np.empty_like(vals)
-        state = np.nan
-        for i, v in enumerate(vals):
-            if not np.isnan(v):
-                state = v if np.isnan(state) else a * v + (1 - a) * state
-            out[i] = state
-        pdf["ewma"] = out
+        pdf["ewma"], _ = _ewma_fold(pdf["value"].to_numpy(dtype=float), a)
         return pdf[["metric", "ts", "value", "ewma"]]
 
     return buckets.select("metric", "ts", "value").groupBy(
         "metric"
     ).applyInPandas(_f, "metric string, ts bigint, value double, ewma double")
+
+
+def _holt_fold(
+    vals: np.ndarray,
+    ts: np.ndarray,
+    a: float,
+    b: float,
+    g: float,
+    season_length: int,
+    step: int,
+    state: tuple | None = None,
+):
+    """The Holt(-Winters) recurrence over time-ordered ``vals``
+    (see :func:`holt_winters` for the update rules).
+
+    ``state`` is the carried (level, trend, dev, inited, seasonals);
+    None starts a fresh run. The first non-NULL point seeds the level
+    and sets ``inited``; the run never re-seeds, so a level that
+    turns NaN (an inf input) stays NaN. ``season_length=0`` is the
+    non-seasonal run; otherwise the phase of point i is
+    ``(ts_i // step) % season_length``. Returns (forecast,
+    one-step-behind deviation, new state).
+    """
+    L = season_length
+    level, trend, d, inited, seas = state or (
+        np.nan, 0.0, 0.0, 0, np.zeros(L)
+    )
+    phases = (ts // step) % L if L else None
+    fc = np.full(len(vals), np.nan)
+    dev = np.full(len(vals), np.nan)
+    for i, v in enumerate(vals):
+        if not inited:
+            if not np.isnan(v):
+                level, inited = v, 1
+            fc[i], dev[i] = v, 0.0
+            continue
+        j = int(phases[i]) if L else 0
+        f = (level + trend + seas[j]) if L else (level + trend)
+        # one-step-ahead semantics: the band at step i is built from
+        # deviations observed BEFORE i (else a spike widens its own
+        # band and never registers as an aberration)
+        fc[i], dev[i] = f, d
+        if np.isnan(v):
+            continue
+        if L:
+            d = g * abs(v - f) + (1 - g) * d
+            new_level = a * (v - seas[j]) + (1 - a) * (level + trend)
+            seas[j] = g * (v - new_level) + (1 - g) * seas[j]
+        else:
+            d = a * abs(v - f) + (1 - a) * d
+            new_level = a * v + (1 - a) * (level + trend)
+        trend = b * (new_level - level) + (1 - b) * trend
+        level = new_level
+    return fc, dev, (level, trend, d, inited, seas)
+
+
+def _holt_bands(
+    metric, pdf: pd.DataFrame, fc: np.ndarray, dev: np.ndarray, s: float
+) -> pd.DataFrame:
+    """The band/aberration epilogue of a Holt fold over ``pdf``:
+    bands = forecast ± s·dev; aberration = how far the observation
+    escapes the band (0 inside it and at NULL points)."""
+    vals = pdf["value"].to_numpy(dtype=float)
+    upper = fc + s * dev
+    lower = fc - s * dev
+    with np.errstate(invalid="ignore"):
+        ab = np.where(
+            vals > upper, vals - upper,
+            np.where(vals < lower, vals - lower, 0.0),
+        )
+    return pd.DataFrame(
+        {
+            "metric": metric,
+            "ts": pdf["ts"],
+            "value": pdf["value"],
+            "forecast": fc,
+            "upper": upper,
+            "lower": lower,
+            "aberration": np.where(np.isnan(vals), 0.0, ab),
+        }
+    )
 
 
 def holt_winters(
@@ -384,7 +466,8 @@ def holt_winters(
     the first cycle is observed, then learns the shape.
 
     Same applyInPandas shape as :func:`ewma` — recursive state, one
-    linear pass per series, the metric shuffle is the only exchange;
+    linear pass per series (:func:`_holt_fold`, which the streaming
+    twins also run), the metric shuffle is the only exchange;
     seasonal state is O(L) per series, carried inside the task.
     """
     a, b, s = float(alpha), float(beta), float(dev_scale)
@@ -397,60 +480,12 @@ def holt_winters(
 
     def _f(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("ts").reset_index(drop=True)
-        vals = pdf["value"].to_numpy(dtype=float)
-        n = len(vals)
-        fc = np.full(n, np.nan)
-        dev = np.full(n, np.nan)
-        level, trend, d = np.nan, 0.0, 0.0
-        seas = np.zeros(L) if L else None
-        idxs = (
-            (pdf["ts"].to_numpy(dtype=np.int64) // stp) % L
-            if L else None
+        fc, dev, _ = _holt_fold(
+            pdf["value"].to_numpy(dtype=float),
+            pdf["ts"].to_numpy(dtype=np.int64),
+            a, b, g, L, stp,
         )
-        for i, v in enumerate(vals):
-            if np.isnan(level):
-                if not np.isnan(v):
-                    level = v
-                fc[i], dev[i] = v, 0.0
-                continue
-            j = int(idxs[i]) if L else 0
-            f = (level + trend + seas[j]) if L else (level + trend)
-            fc[i] = f
-            # one-step-ahead semantics: the band at step i is built
-            # from deviations observed BEFORE i (else a spike widens
-            # its own band and never registers as an aberration)
-            dev[i] = d
-            if not np.isnan(v):
-                if L:
-                    d = g * abs(v - f) + (1 - g) * d
-                    new_level = a * (v - seas[j]) + (1 - a) * (
-                        level + trend
-                    )
-                    trend = b * (new_level - level) + (1 - b) * trend
-                    seas[j] = g * (v - new_level) + (1 - g) * seas[j]
-                    level = new_level
-                    continue
-                d = a * abs(v - f) + (1 - a) * d
-                new_level = a * v + (1 - a) * (level + trend)
-                trend = b * (new_level - level) + (1 - b) * trend
-                level = new_level
-        pdf["forecast"] = fc
-        pdf["upper"] = fc + s * dev
-        pdf["lower"] = fc - s * dev
-        with np.errstate(invalid="ignore"):
-            ab = np.where(
-                vals > pdf["upper"].to_numpy(), vals - pdf["upper"].to_numpy(),
-                np.where(
-                    vals < pdf["lower"].to_numpy(),
-                    vals - pdf["lower"].to_numpy(),
-                    0.0,
-                ),
-            )
-        pdf["aberration"] = np.where(np.isnan(vals), 0.0, ab)
-        return pdf[
-            ["metric", "ts", "value", "forecast", "upper", "lower",
-             "aberration"]
-        ]
+        return _holt_bands(pdf["metric"], pdf, fc, dev, s)
 
     return buckets.select("metric", "ts", "value").groupBy(
         "metric"
@@ -545,22 +580,14 @@ def anomaly_zscore(buckets: DataFrame, z: float = 3.0) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    # the cast INTO decimal routes through a string: both engines
-    # round the same shortest-repr decimal literal instead of the raw
-    # binary double, whose 10th-decimal rounding differs between
-    # engines on boundary values (surfaces at sf0.1 row counts)
     w = Window.partitionBy("metric")
-    dec = lambda c: (
-        F.sum(c.cast("string").cast("decimal(30,10)"))
-        .over(w)
-        .cast("string")
-        .cast("double")
-    )
     cnt = F.count("value").over(w)
     j = buckets.select(
         "metric", "ts", "value",
-        (dec(F.col("value")) / cnt).alias("_mean"),
-        (dec(F.col("value") * F.col("value")) / cnt).alias("_ex2"),
+        (exact_sum("value", over=w) / cnt).alias("_mean"),
+        (
+            exact_sum(F.col("value") * F.col("value"), over=w) / cnt
+        ).alias("_ex2"),
     )
     var = F.col("_ex2") - F.col("_mean") * F.col("_mean")
     zscore = (F.col("value") - F.col("_mean")) / F.sqrt(var)
@@ -582,12 +609,7 @@ def as_percent(buckets: DataFrame) -> DataFrame:
     Share = value / total in plain double division over two
     decimal-accumulated operands, mirrored verbatim in the oracle.
     """
-    totals = buckets.groupBy("ts").agg(
-        F.sum(F.col("value").cast("string").cast("decimal(30,10)"))
-        .cast("string")
-        .cast("double")
-        .alias("_total")
-    )
+    totals = buckets.groupBy("ts").agg(exact_sum("value").alias("_total"))
     return (
         buckets.join(totals, "ts")
         .select(
@@ -661,16 +683,9 @@ def moving_stddev(buckets: DataFrame, points: int = 5) -> DataFrame:
         .orderBy("ts")
         .rowsBetween(-(int(points) - 1), 0)
     )
-    # string-routed cast into decimal — see anomaly_zscore note
-    dec = lambda c: (
-        F.sum(c.cast("string").cast("decimal(30,10)"))
-        .over(w)
-        .cast("string")
-        .cast("double")
-    )
     n = F.count("value").over(w)
-    mean = dec(F.col("value")) / n
-    ex2 = dec(F.col("value") * F.col("value")) / n
+    mean = exact_sum("value", over=w) / n
+    ex2 = exact_sum(F.col("value") * F.col("value"), over=w) / n
     # E[x²]−E[x]² can round to −ε on near-constant frames (the two
     # decimal quantizations differ below the 10th digit); clamp —
     # mirrored in the oracle, where DuckDB would otherwise ERROR on
@@ -694,19 +709,14 @@ def series_arithmetic(buckets: DataFrame, a: str, b: str) -> DataFrame:
     metrics exist at each ts; the diff is NULL when either side is
     missing (NULL-propagating subtraction).
     """
-    dsum = lambda c: (
-        F.sum(c.cast("string").cast("decimal(30,10)"))
-        .cast("string")
-        .cast("double")
-    )
     va = F.when(F.col("metric") == a, F.col("value"))
     vb = F.when(F.col("metric") == b, F.col("value"))
     return (
         buckets.groupBy("ts")
         .agg(
-            dsum(F.col("value")).alias("sum_all"),
-            dsum(va).alias("_a"),
-            dsum(vb).alias("_b"),
+            exact_sum("value").alias("sum_all"),
+            exact_sum(va).alias("_a"),
+            exact_sum(vb).alias("_b"),
         )
         .select(
             "ts",
@@ -782,32 +792,22 @@ def cusum_changepoints(
 
     Exactness discipline: the running Σvalue is a windowed DECIMAL
     accumulation (exact at any partitioning), the mean is the
-    string-routed decimal mean of :func:`anomaly_zscore`, and
+    lattice mean of :func:`anomaly_zscore`, and
     ``cusum_t = Σ_{i≤t} v_i − t·mean`` is then two IEEE double ops —
     identical in any engine, so the threshold cuts bit-identically.
     One window shuffle on metric; the stats join is broadcast.
     """
     from pyspark.sql.window import Window
 
-    dec = lambda c: (
-        F.sum(c.cast("string").cast("decimal(30,10)"))
-        .cast("string")
-        .cast("double")
-    )
     stats = buckets.groupBy("metric").agg(
-        (dec(F.col("value")) / F.count("value")).alias("_mean")
+        (exact_sum("value") / F.count("value")).alias("_mean")
     )
     w = (
         Window.partitionBy("metric")
         .orderBy("ts")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    run_sum = (
-        F.sum(F.col("value").cast("string").cast("decimal(30,10)"))
-        .over(w)
-        .cast("string")
-        .cast("double")
-    )
+    run_sum = exact_sum("value", over=w)
     run_n = F.count("value").over(w)
     j = buckets.join(F.broadcast(stats), "metric")
     cusum = run_sum - run_n.cast("double") * F.col("_mean")
@@ -975,21 +975,17 @@ def hitcount(
     nothing, exactly graphite's behavior of skipping None points).
 
     One grouped aggregate with map-side combine; the value·step
-    products accumulate in DECIMAL via the string-routed cast so the
-    bucket sums are partitioning-independent and engine-portable.
+    products accumulate on the decimal lattice so the bucket sums are
+    partitioning-independent and engine-portable.
     """
-    dec = (
-        (F.col("value") * F.lit(int(step)))
-        .cast("string")
-        .cast("decimal(30,10)")
-    )
+    hits = exact_sum(F.col("value") * F.lit(int(step)))
     return (
         buckets.filter(F.col("value").isNotNull())
         .groupBy(
             "metric",
             (F.col("ts") - F.col("ts") % F.lit(int(interval))).alias("ts"),
         )
-        .agg(F.sum(dec).cast("string").cast("double").alias("hits"))
+        .agg(hits.alias("hits"))
     )
 
 
@@ -1002,8 +998,8 @@ def integral_by_interval(
 
     The reset is free in the plan: the interval bucket joins the
     window PARTITION key, so no per-row conditional state — just a
-    narrower window partition. DECIMAL running sum, string-routed,
-    same determinism recipe as series_functions' integral.
+    narrower window partition. Lattice running sum, same determinism
+    recipe as series_functions' integral.
     """
     from pyspark.sql.window import Window
 
@@ -1013,12 +1009,8 @@ def integral_by_interval(
         .orderBy("ts")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    dec = F.col("value").cast("string").cast("decimal(30,10)")
     return buckets.select(
-        "metric",
-        "ts",
-        "value",
-        F.sum(dec).over(w).cast("string").cast("double").alias("integral"),
+        "metric", "ts", "value", exact_sum("value", over=w).alias("integral")
     )
 
 
@@ -1098,17 +1090,12 @@ def most_deviant(buckets: DataFrame, k: int = 3) -> DataFrame:
     merge of k rows, never a single-partition global sort — with
     (deviation DESC, metric) first-min tie-break.
     """
-    dec = lambda c: (
-        F.sum(c.cast("string").cast("decimal(30,10)"))
-        .cast("string")
-        .cast("double")
-    )
     stats = (
         buckets.filter(F.col("value").isNotNull())
         .groupBy("metric")
         .agg(
-            dec(F.col("value")).alias("_s1"),
-            dec(F.col("value") * F.col("value")).alias("_s2"),
+            exact_sum("value").alias("_s1"),
+            exact_sum(F.col("value") * F.col("value")).alias("_s2"),
             F.count("*").alias("_n"),
         )
         .select(
@@ -1138,8 +1125,8 @@ def moving_window_functions(
     frames share the (metric, ts) window ordering, and the
     whole-series min is an unbounded frame over the same partition —
     Spark evaluates them in a single WindowExec pass, no extra
-    shuffle or join-back. movingSum accumulates in DECIMAL (the
-    string-routed cast) so it is partitioning- and engine-exact;
+    shuffle or join-back. movingSum is a lattice sum, so it is
+    partitioning- and engine-exact;
     min/max/offset are exact comparisons/one subtraction.
     """
     from pyspark.sql.window import Window
@@ -1147,7 +1134,6 @@ def moving_window_functions(
     w = Window.partitionBy("metric").orderBy("ts")
     wk = w.rowsBetween(-(int(points) - 1), 0)
     wall = Window.partitionBy("metric")
-    dec = F.col("value").cast("string").cast("decimal(30,10)")
     return buckets.select(
         "metric",
         "ts",
@@ -1157,9 +1143,7 @@ def moving_window_functions(
         ),
         F.min("value").over(wk).alias("moving_min"),
         F.max("value").over(wk).alias("moving_max"),
-        F.sum(dec).over(wk).cast("string").cast("double").alias(
-            "moving_sum"
-        ),
+        exact_sum("value", over=wk).alias("moving_sum"),
     )
 
 
@@ -1206,14 +1190,7 @@ def average_above(buckets: DataFrame, threshold: float) -> DataFrame:
     avg = (
         buckets.filter(F.col("value").isNotNull())
         .groupBy("metric")
-        .agg(
-            (
-                F.sum(F.col("value").cast("string").cast("decimal(30,10)"))
-                .cast("string")
-                .cast("double")
-                / F.count("*")
-            ).alias("_avg")
-        )
+        .agg((exact_sum("value") / F.count("*")).alias("_avg"))
         .filter(F.col("_avg") > F.lit(float(threshold)))
         .select("metric")
     )
@@ -1317,16 +1294,12 @@ def series_combinators(
     missing series (``n_series`` records how many contributed);
     diff/multiply are NULL when their named series is absent at that
     slot. One grouped aggregate, map-side combinable; every emitted
-    double goes through the string-routed decimal conversion or a
+    double comes off the decimal lattice or is a
     single correctly-rounded IEEE op, so the entry is
     engine-portable bit-for-bit.
     """
-    dec = F.col("value").cast("string").cast("decimal(30,10)")
-    dec2 = (
-        (F.col("value") * F.col("value"))
-        .cast("string")
-        .cast("decimal(30,10)")
-    )
+    dec = lattice("value")
+    dec2 = lattice(F.col("value") * F.col("value"))
     is_anchor = F.col("metric") == F.lit(anchor)
     nn = buckets.filter(F.col("value").isNotNull())
     g = nn.groupBy("ts").agg(
@@ -1341,8 +1314,8 @@ def series_combinators(
         F.max("value").alias("max_series"),
         F.min("value").alias("min_series"),
     )
-    s1d = F.col("_s1").cast("string").cast("double")
-    s2d = F.col("_s2").cast("string").cast("double")
+    s1d = _dec_to_double(F.col("_s1"))
+    s2d = _dec_to_double(F.col("_s2"))
     n = F.col("n_series")
     return g.select(
         "ts",
@@ -1350,7 +1323,7 @@ def series_combinators(
         s1d.alias("sum_series"),
         F.when(
             F.col("_av").isNotNull(),
-            F.col("_d").cast("string").cast("double"),
+            _dec_to_double(F.col("_d")),
         ).alias("diff_series"),
         F.sqrt(
             F.greatest(
@@ -1537,8 +1510,8 @@ def weighted_average(points: DataFrame, lww: DataFrame) -> DataFrame:
     plain per-ts mean because dedup collapses each slot to its last
     write while the weight still counts every arrival.
 
-    Determinism: products accumulate through the string-routed
-    DECIMAL sum (order-independent), weights are exact BIGINTs, and
+    Determinism: products accumulate as a lattice sum
+    (order-independent), weights are exact BIGINTs, and
     the single final division is one IEEE op — the same shape the
     oracle recomputes. Scale: two grouped aggregates sharing the
     (metric, ts) shuffle key, one join on that same key (no second
@@ -1551,14 +1524,11 @@ def weighted_average(points: DataFrame, lww: DataFrame) -> DataFrame:
         F.count("value").alias("_w")
     )
     j = lww.join(weights, ["metric", "ts"])
-    prod = (F.col("value") * F.col("_w")).cast("string").cast(
-        "decimal(30,10)"
-    )
     return (
         j.groupBy("ts")
         .agg(
             (
-                F.sum(prod).cast("string").cast("double")
+                exact_sum(F.col("value") * F.col("_w"))
                 / F.sum(F.when(F.col("value").isNotNull(), F.col("_w")))
             ).alias("weighted_avg"),
             F.sum(
@@ -1674,7 +1644,7 @@ def derivative_integral(dense: DataFrame) -> DataFrame:
     gap poisons two outputs); ``integral`` is the running total that
     SKIPS None (the accumulator holds) but emits None at None slots.
     The delta is one IEEE subtract; the running total accumulates in
-    DECIMAL(30,10) via the string route and converts once per row, so
+    the decimal lattice and converts once per row, so
     both columns are engine-portable bit-for-bit. One window sort per
     metric, no joins.
     """
@@ -1683,16 +1653,12 @@ def derivative_integral(dense: DataFrame) -> DataFrame:
     w = Window.partitionBy("metric").orderBy("ts")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     v = F.col("value")
-    dec = v.cast("string").cast("decimal(30,10)")
     return dense.select(
         "metric",
         "ts",
         v.alias("value"),
         (v - F.lag("value").over(w)).alias("derivative"),
-        F.when(
-            v.isNotNull(),
-            F.sum(dec).over(wrun).cast("string").cast("double"),
-        ).alias("integral"),
+        F.when(v.isNotNull(), exact_sum(v, over=wrun)).alias("integral"),
     )
 
 
@@ -1830,7 +1796,7 @@ def series_orderings(buckets: DataFrame) -> DataFrame:
     :func:`filter_series`.
 
     One map-side-combinable per-metric aggregate (decimal-exact
-    total via the string route — sortByTotal is a SUM ordering, and
+    lattice total — sortByTotal is a SUM ordering, and
     a ulp in the total could swap adjacent ranks); both rank columns
     ride the same tiny series-list table. Ties break by metric name —
     total order, oracle-stable. Same unpartitioned-rank caveat and
@@ -1842,10 +1808,7 @@ def series_orderings(buckets: DataFrame) -> DataFrame:
     totals = buckets.filter(F.col("value").isNotNull()).groupBy(
         "metric"
     ).agg(
-        F.sum(F.col("value").cast("string").cast("decimal(30,10)"))
-        .cast("string")
-        .cast("double")
-        .alias("total"),
+        exact_sum("value").alias("total"),
         F.count("*").cast("bigint").alias("n_points"),
     )
     # avg_value: ONE IEEE divide off the exact decimal total — the
@@ -2057,17 +2020,13 @@ def scalar_line_transforms(
 
     v = F.col("value")
     w = Window.partitionBy("metric")
-    dec = v.cast("string").cast("decimal(30,10)")
     return buckets.filter(v.isNotNull()).select(
         "metric",
         "ts",
         v.alias("value"),
         (v + F.lit(float(offset))).alias("offset_value"),
         (v * F.lit(float(factor))).alias("scaled_value"),
-        (
-            F.sum(dec).over(w).cast("string").cast("double")
-            / F.count("*").over(w)
-        ).alias("line_avg"),
+        (exact_sum(v, over=w) / F.count("*").over(w)).alias("line_avg"),
         F.min(v).over(w).alias("line_min"),
         F.max(v).over(w).alias("line_max"),
     )
@@ -2100,14 +2059,7 @@ def average_outside_percentile(
 
     avgs = buckets.filter(F.col("value").isNotNull()).groupBy(
         "metric"
-    ).agg(
-        (
-            F.sum(F.col("value").cast("string").cast("decimal(30,10)"))
-            .cast("string")
-            .cast("double")
-            / F.count("*")
-        ).alias("avg_value")
-    )
+    ).agg((exact_sum("value") / F.count("*")).alias("avg_value"))
     hi_n = n if n >= 50 else 100 - n
     lo_n = 100 - hi_n
     wr = Window.orderBy(F.asc("avg_value"), F.asc("metric"))
@@ -2255,16 +2207,12 @@ def series_with_wildcards(series: DataFrame, position: int = 0) -> DataFrame:
         ),
         ".",
     )
-    dec = F.col("value").cast("string").cast("decimal(30,10)")
     g = series.select(
         name.alias("name"), "ts", "value"
     ).groupBy("name", "ts").agg(
         F.count("value").cast("bigint").alias("n_series"),
-        F.sum(dec).cast("string").cast("double").alias("sum_wild"),
-        (
-            F.sum(dec).cast("string").cast("double")
-            / F.count("value")
-        ).alias("avg_wild"),
+        exact_sum("value").alias("sum_wild"),
+        (exact_sum("value") / F.count("value")).alias("avg_wild"),
     )
     return g
 
@@ -2499,8 +2447,7 @@ def ema_window(
     Determinism split: the recursion is a per-series applyInPandas
     pass like :func:`ewma` (order-fixed IEEE ops, identical in any
     engine), but the SEED is an unordered float sum — so it is
-    computed engine-side on the decimal lattice (string-routed
-    DECIMAL(30,10) sum / count, the repo idiom) and joined into the
+    computed engine-side as a lattice sum / count and joined into the
     pandas pass, making seed and recursion both bit-reproducible.
     """
     from pyspark.sql.window import Window
@@ -2526,8 +2473,7 @@ def ema_window(
     )
     # graphite: `safeAvg(window) or 0` — an all-None window
     # (count 0 → null avg) seeds AND emits 0.0, so coalesce
-    # engine-side; the decimal detour keeps the unordered sum
-    # bit-reproducible (repo idiom).
+    # engine-side.
     #
     # optimization r12 (guide §2.4): the seed is drawn beside every
     # row by a second window over the SAME metric exchange
@@ -2540,15 +2486,9 @@ def ema_window(
     joined = idx.withColumn(
         "_seed",
         F.coalesce(
-            F.sum(
-                F.when(
-                    _in_win,
-                    F.col("value").cast("string").cast("decimal(30,10)"),
-                )
+            _dec_to_double(
+                F.sum(F.when(_in_win, lattice("value"))).over(w_all)
             )
-            .over(w_all)
-            .cast("string")
-            .cast("double")
             / F.count(F.when(_in_win, F.col("value"))).over(w_all),
             F.lit(0.0),
         ),

@@ -12,9 +12,10 @@ planner's problem, not ours).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
+from ceres_spark.operators.aggregate import exact_sum
 
 
 def event_time(events: DataFrame, col: str = "ts") -> Column:
@@ -43,10 +44,7 @@ def sliding_window_agg(
         events.groupBy(F.col(key).alias("metric"), w.alias("w"))
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("string").cast("decimal(30,10)"))
-            .cast("string")
-            .cast("double")
-            .alias("sum_value"),
+            exact_sum("value").alias("sum_value"),
         )
         .select(
             "metric",
@@ -67,21 +65,22 @@ def session_window_agg(
     (epoch s, floored), event count, value sum per session."""
     et = event_time(events)
     sw = F.session_window(et, f"{gap_s} seconds")
-    return (
-        events.groupBy(F.col(key), sw.alias("w"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("string").cast("decimal(30,10)"))
-            .cast("string")
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.col(key),
-            F.unix_timestamp("w.start").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
+    return _session_totals(events.groupBy(F.col(key), sw.alias("w")), key)
+
+
+def _session_totals(sessions: GroupedData, key: str) -> DataFrame:
+    """Event count and exact value sum per (``key``, session window
+    ``w``) as (key, session_start epoch s, n_events, sum_value) — the
+    one aggregate and projection the batch sessions above and the
+    watermarked ``streaming.ingest.session_stream`` share."""
+    return sessions.agg(
+        F.count("*").alias("n_events"),
+        exact_sum("value").alias("sum_value"),
+    ).select(
+        key,
+        F.unix_timestamp(F.col("w.start")).alias("session_start"),
+        "n_events",
+        "sum_value",
     )
 
 

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 import ceres_spark.operators.compact as cp
+from ceres_spark.operators.aggregate import exact_sum
+from ceres_spark.operators.windows import _session_totals
 
 
 def store_batch(
@@ -149,15 +151,7 @@ def windowed_rollup_stream(
         )
         .agg(
             F.count("value").alias("n_points"),
-            # decimal-via-string: the repo-wide determinism contract —
-            # double→string→decimal converts identically on Spark and
-            # DuckDB, so the stream's rollup hash-checks against the
-            # batch oracle (direct double→decimal casts round
-            # differently across engines at the 10th decimal)
-            F.sum(F.col("value").cast("string").cast("decimal(30,10)"))
-            .cast("string")
-            .cast("double")
-            .alias("sum_value"),
+            exact_sum("value").alias("sum_value"),
         )
         .select(
             "metric",
@@ -180,29 +174,11 @@ def session_stream(
     growing window per key; the watermark bounds state — a session
     closes (and emits, in append mode) once the watermark passes its
     end + gap. The batch twin is operators/windows.session_window_agg;
-    same output shape so the two paths are diff-able."""
-    return (
-        stream.withWatermark(ts_col, lateness)
-        .groupBy(
-            F.session_window(ts_col, gap).alias("w"),
-            key_col,
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            # decimal-via-string: cross-engine-exact double aggregation
-            # (see windowed_rollup_stream)
-            F.sum(F.col("value").cast("string").cast("decimal(30,10)"))
-            .cast("string")
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            key_col,
-            F.unix_timestamp(F.col("w.start")).alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
+    both build their output with ``windows._session_totals``."""
+    sessions = stream.withWatermark(ts_col, lateness).groupBy(
+        F.session_window(ts_col, gap).alias("w"), key_col
     )
+    return _session_totals(sessions, key_col)
 
 
 def stream_stream_join(

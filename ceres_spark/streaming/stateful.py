@@ -1,22 +1,31 @@
-"""Custom stateful streaming operator (north-star §2.2:
-"applyInPandasWithState for custom stateful operators").
+"""Custom stateful streaming operators (north-star §2.2:
+"applyInPandasWithState for custom stateful operators"): per-group
+state carried across micro-batches in the state store.
 
-Operator: per-metric running statistics over an event stream —
-cumulative count/sum and last value, maintained as explicit state
-across micro-batches. This is the shape every custom stateful ceres
-extension takes (anomaly flags, rate-of-change, counters that the
-reference's maintenance plugins computed offline).
+- :func:`running_stats_stream`: per-metric cumulative count/sum and
+  last value — the shape every custom stateful ceres extension takes
+  (anomaly flags, rate-of-change, counters that the reference's
+  maintenance plugins computed offline).
+- :func:`ewma_stream`, :func:`holt_winters_stream`,
+  :func:`holt_winters_seasonal_stream`: the live twins of the batch
+  smoothers in ``operators/series.py``. Each updater sorts the group's
+  micro-batch once, runs the batch fold (``series._ewma_fold`` /
+  ``series._holt_fold``) from the stored state and stores the state it
+  returns, so a time-ordered replay is bit-identical to the batch pass.
+- :func:`cusum_stream`: Page's online CUSUM.
+- :func:`kmv_stream`: a live KMV distinct-count sketch.
 
-Scale notes: state is per-group (metric), partitioned by the
-streaming state store across executors; each micro-batch touches only
-groups present in the batch. Timeouts would bound state for unbounded
-key spaces (not needed for bounded metric sets).
+Scale notes: state is per-group, partitioned by the streaming state
+store across executors; each micro-batch touches only groups present
+in the batch. Timeouts would bound state for unbounded key spaces
+(not needed for bounded metric sets).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -28,6 +37,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ceres_spark.operators.series import _ewma_fold, _holt_bands, _holt_fold
 
 STATE_SCHEMA = StructType(
     [
@@ -98,6 +109,64 @@ HOLT_OUTPUT_SCHEMA = StructType(
 )
 
 
+def _sorted_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    """A group's whole micro-batch in ts order (None when empty). ONE
+    sort over the concatenation: pandas chunks within a group carry no
+    cross-chunk ordering guarantee, and a per-chunk sort would fold a
+    recurrence out of time order whenever a batch splits into several
+    Arrow chunks."""
+    chunks = list(pdfs)
+    if not chunks:
+        return None
+    return pd.concat(chunks).sort_values("ts").reset_index(drop=True)
+
+
+def _holt_stream(
+    stream: DataFrame,
+    a: float,
+    b: float,
+    g: float,
+    s: float,
+    season_length: int = 0,
+    step: int = 0,
+) -> DataFrame:
+    """Both Holt twins: per group, fold the sorted micro-batch from the
+    stored (level, trend, dev, inited[, seasonals]) state with
+    ``series._holt_fold``, emit its bands, store the new state."""
+    L = season_length
+
+    def _upd(
+        key, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        (metric,) = key
+        pdf = _sorted_batch(pdfs)
+        if pdf is None:
+            return
+        hw = None
+        if state.exists:
+            level, trend, d, inited, *seas = state.get
+            hw = (level, trend, d, inited, np.asarray(seas[0] if L else []))
+        fc, dev, hw = _holt_fold(
+            pdf["value"].to_numpy(dtype=float),
+            pdf["ts"].to_numpy(dtype=np.int64),
+            a, b, g, L, step, hw,
+        )
+        yield _holt_bands(metric, pdf, fc, dev, s)
+        level, trend, d, inited, seas = hw
+        row = (float(level), float(trend), float(d), int(inited))
+        state.update(row + ((seas.tolist(),) if L else ()))
+
+    return stream.groupBy("metric").applyInPandasWithState(
+        _upd,
+        outputStructType=HOLT_OUTPUT_SCHEMA,
+        stateStructType=(
+            HOLT_SEASONAL_STATE_SCHEMA if L else HOLT_STATE_SCHEMA
+        ),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 def holt_winters_stream(
     stream: DataFrame,
     alpha: float = 0.1,
@@ -118,76 +187,8 @@ def holt_winters_stream(
     contract used by the ingest path; late data belongs to the
     backfill route, streaming/ingest.py).
     """
-    import math
-
-    a, b, s = float(alpha), float(beta), float(dev_scale)
-
-    def _update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (metric,) = key
-        if state.exists:
-            level, trend, d, inited = state.get
-        else:
-            level, trend, d, inited = math.nan, 0.0, 0.0, 0
-        # ONE sort over the whole micro-batch: pandas chunks within a
-        # group carry no cross-chunk ordering guarantee, and a
-        # per-chunk sort would fold the recurrence out of time order
-        # whenever a batch splits into multiple Arrow chunks
-        chunks = list(pdfs)
-        if chunks:
-            pdf = pd.concat(chunks).sort_values("ts").reset_index(
-                drop=True
-            )
-            vals = pdf["value"].to_numpy(dtype=float)
-            n = len(vals)
-            import numpy as np
-
-            fc = np.full(n, np.nan)
-            dev = np.full(n, np.nan)
-            for i, v in enumerate(vals):
-                if not inited:
-                    if not np.isnan(v):
-                        level = v
-                        inited = 1
-                    fc[i], dev[i] = v, 0.0
-                    continue
-                f = level + trend
-                fc[i] = f
-                dev[i] = d
-                if not np.isnan(v):
-                    d = a * abs(v - f) + (1 - a) * d
-                    nl = a * v + (1 - a) * (level + trend)
-                    trend = b * (nl - level) + (1 - b) * trend
-                    level = nl
-            upper = fc + s * dev
-            lower = fc - s * dev
-            with np.errstate(invalid="ignore"):
-                ab = np.where(
-                    vals > upper, vals - upper,
-                    np.where(vals < lower, vals - lower, 0.0),
-                )
-            yield pd.DataFrame(
-                {
-                    "metric": metric,
-                    "ts": pdf["ts"],
-                    "value": pdf["value"],
-                    "forecast": fc,
-                    "upper": upper,
-                    "lower": lower,
-                    "aberration": np.where(np.isnan(vals), 0.0, ab),
-                }
-            )
-        state.update(
-            (float(level), float(trend), float(d), int(inited))
-        )
-
-    return stream.groupBy("metric").applyInPandasWithState(
-        _update,
-        outputStructType=HOLT_OUTPUT_SCHEMA,
-        stateStructType=HOLT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _holt_stream(
+        stream, float(alpha), float(beta), 0.0, float(dev_scale)
     )
 
 
@@ -210,46 +211,27 @@ def ewma_stream(stream: DataFrame, alpha: float = 0.3) -> DataFrame:
     possible stateful operator, and the live version of graphite's
     ``exponentialMovingAverage``.
 
-    The update expression is written EXACTLY as the batch operator
-    writes it (same ``a·v + (1−a)·state`` association, NaN marks the
-    uninitialized state, gaps carry the average forward), so a
-    time-ordered replay produces bit-identical doubles to the batch
-    pass — which is what lets the replay entry share the batch
-    recursive-CTE oracle. State store cost: 8 bytes per live series.
+    It runs the batch fold (``series._ewma_fold``) from the stored
+    state, so a time-ordered replay produces bit-identical doubles to
+    the batch pass — which is what lets the replay entry share the
+    batch recursive-CTE oracle. State store cost: 8 bytes per live
+    series.
     """
-    import math
-
-    import numpy as np
-
     a = float(alpha)
 
     def _upd(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         (metric,) = key
-        st = state.get[0] if state.exists else math.nan
-        if st is None:
-            st = math.nan
-        # one sort over the whole micro-batch — see holt_winters_stream
-        chunks = list(pdfs)
-        if chunks:
-            pdf = pd.concat(chunks).sort_values("ts").reset_index(
-                drop=True
-            )
-            vals = pdf["value"].to_numpy(dtype=float)
-            out = np.empty_like(vals)
-            for i, v in enumerate(vals):
-                if not np.isnan(v):
-                    st = v if np.isnan(st) else a * v + (1 - a) * st
-                out[i] = st
-            yield pd.DataFrame(
-                {
-                    "metric": metric,
-                    "ts": pdf["ts"],
-                    "value": pdf["value"],
-                    "ewma": out,
-                }
-            )
+        pdf = _sorted_batch(pdfs)
+        if pdf is None:
+            return
+        st = state.get[0] if state.exists else np.nan
+        out, st = _ewma_fold(pdf["value"].to_numpy(dtype=float), a, st)
+        yield pd.DataFrame({
+            "metric": metric, "ts": pdf["ts"], "value": pdf["value"],
+            "ewma": out,
+        })
         state.update((float(st),))
 
     return stream.groupBy("metric").applyInPandasWithState(
@@ -289,78 +271,9 @@ def holt_winters_seasonal_stream(
     (``j = (ts // step) % L``), so a restart resumes in phase and the
     batch operator on identically-ordered input is bit-equal
     (pytest-asserted, tests/test_stateful.py)."""
-    import math
-
-    import numpy as np
-
-    a, b, g, s = float(alpha), float(beta), float(gamma), float(dev_scale)
-    L, stp = int(season_length), int(step)
-
-    def _upd(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (metric,) = key
-        if state.exists:
-            level, trend, d, inited, seas_l = state.get
-            seas = np.asarray(seas_l, dtype=float)
-        else:
-            level, trend, d, inited = math.nan, 0.0, 0.0, 0
-            seas = np.zeros(L)
-        # one sort over the whole micro-batch — see holt_winters_stream
-        chunks = list(pdfs)
-        for pdf in ([pd.concat(chunks)] if chunks else []):
-            pdf = pdf.sort_values("ts").reset_index(drop=True)
-            vals = pdf["value"].to_numpy(dtype=float)
-            idxs = (pdf["ts"].to_numpy(dtype=np.int64) // stp) % L
-            n = len(vals)
-            fc = np.full(n, np.nan)
-            dev = np.full(n, np.nan)
-            for i, v in enumerate(vals):
-                if not inited:
-                    if not np.isnan(v):
-                        level = v
-                        inited = 1
-                    fc[i], dev[i] = v, 0.0
-                    continue
-                j = int(idxs[i])
-                f = level + trend + seas[j]
-                fc[i] = f
-                dev[i] = d
-                if not np.isnan(v):
-                    d = g * abs(v - f) + (1 - g) * d
-                    nl = a * (v - seas[j]) + (1 - a) * (level + trend)
-                    trend = b * (nl - level) + (1 - b) * trend
-                    seas[j] = g * (v - nl) + (1 - g) * seas[j]
-                    level = nl
-            upper = fc + s * dev
-            lower = fc - s * dev
-            with np.errstate(invalid="ignore"):
-                ab = np.where(
-                    vals > upper, vals - upper,
-                    np.where(vals < lower, vals - lower, 0.0),
-                )
-            yield pd.DataFrame(
-                {
-                    "metric": metric,
-                    "ts": pdf["ts"],
-                    "value": pdf["value"],
-                    "forecast": fc,
-                    "upper": upper,
-                    "lower": lower,
-                    "aberration": np.where(np.isnan(vals), 0.0, ab),
-                }
-            )
-        state.update(
-            (float(level), float(trend), float(d), int(inited),
-             [float(x) for x in seas])
-        )
-
-    return stream.groupBy("metric").applyInPandasWithState(
-        _upd,
-        outputStructType=HOLT_OUTPUT_SCHEMA,
-        stateStructType=HOLT_SEASONAL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _holt_stream(
+        stream, float(alpha), float(beta), float(gamma), float(dev_scale),
+        int(season_length), int(step),
     )
 
 

@@ -22,9 +22,12 @@ NQ = 10
 
 @pytest.fixture(scope="module")
 def corpus(spark, tmp_path_factory):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
     from ann_scale_probe import numpy_truth, synth_vectors, write_corpus
 
     x = synth_vectors(N)

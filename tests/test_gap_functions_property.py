@@ -13,6 +13,7 @@ fails with the generated counterexample.
 """
 
 import math
+import os
 import sys
 
 import pytest
@@ -23,7 +24,7 @@ try:
 except ImportError:  # pragma: no cover
     pytest.skip("hypothesis unavailable", allow_module_level=True)
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import ceres_spark.operators.series as ser  # noqa: E402
 

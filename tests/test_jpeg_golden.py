@@ -232,7 +232,7 @@ GOLDEN = {
         "fb5e8e55614a323f77354575ba4964b0b997245e97c8829240a9509c474ea892",
     ),
     "h_gray_prog": (
-        "6a00ebad1257c5ad1dff19d74d8288a0bd5cd1eee3f109020c7b60cc4c28d2d9",
+        "e14ab0a9a726ef144e95506081787c172410cf91a48b70c50319a48b9c020e62",
         "b04bf729ccb9a5a5bf9a6054fa9b399f1afb4606e03110aa8f02cd195f2d895e",
     ),
     "h_gray_12": (
@@ -389,6 +389,12 @@ def test_codec_output_is_byte_identical(name):
 
 def test_golden_table_covers_the_whole_matrix():
     assert set(GOLDEN) == set(_cases())
+
+
+def test_gray_progressive_is_a_progressive_frame():
+    payload = _cases()["h_gray_prog"][0]()
+    assert b"\xff\xc2" in payload  # SOF2
+    assert b"\xff\xc0" not in payload  # no baseline fallback
 
 
 if __name__ == "__main__":

@@ -52,9 +52,15 @@ def test_holt_stream_equals_batch(spark, tmp_path):
 
     vals = [3.0, 7.0, 5.0, None, 9.0, 2.0, 2.0, 8.0]
     rows = [("m", i * 60, v) for i, v in enumerate(vals)]
+    # non-finite input: the level turns NaN and must stay NaN on both
+    # sides (one seed per run), with inf/NaN state crossing a handoff
+    rows_inf = [
+        ("x", i * 60, v)
+        for i, v in enumerate([1.0, 2.0, math.inf, 3.0, 4.0, 5.0])
+    ]
     # two micro-batches: state must carry the recurrence across them
     src = str(tmp_path / "src")
-    for chunk in (rows[:4], rows[4:]):
+    for chunk in (rows[:4] + rows_inf[:4], rows[4:] + rows_inf[4:]):
         spark.createDataFrame(
             chunk, "metric string, ts long, value double"
         ).coalesce(1).write.mode("append").parquet(src)
@@ -72,13 +78,16 @@ def test_holt_stream_equals_batch(spark, tmp_path):
         "checkpointLocation", str(tmp_path / "ck2")
     ).start()
     q.awaitTermination(120)
-    got = {r["ts"]: r for r in spark.sql("select * from hw").collect()}
+    got = {
+        (r["metric"], r["ts"]): r
+        for r in spark.sql("select * from hw").collect()
+    }
 
     batch_in = spark.createDataFrame(
-        [(m, t, v, 0) for m, t, v in rows],
+        [(m, t, v, 0) for m, t, v in rows + rows_inf],
         "metric string, ts long, value double, arrival_seq long",
     )
-    want = {r["ts"]: r for r in ser.holt_winters(
+    want = {(r["metric"], r["ts"]): r for r in ser.holt_winters(
         batch_in, alpha=0.3, beta=0.05, dev_scale=3.0).collect()}
 
     assert set(got) == set(want)
@@ -102,9 +111,17 @@ def test_holt_seasonal_stream_equals_batch(spark, tmp_path):
     vals = [10.0 + 0.2 * i + pattern[i % 3] for i in range(12)]
     vals[5] = None
     rows = [("m", i * 60, v) for i, v in enumerate(vals)]
+    # non-finite input (see test_holt_stream_equals_batch)
+    rows_inf = [
+        ("x", i * 60, v)
+        for i, v in enumerate([1.0, 2.0, math.inf, 3.0, 4.0, 5.0])
+    ]
     src = str(tmp_path / "src")
     # three micro-batches: seasonal vector must survive two handoffs
-    for chunk in (rows[:4], rows[4:8], rows[8:]):
+    for chunk in (
+        rows[:4] + rows_inf[:2], rows[4:8] + rows_inf[2:4],
+        rows[8:] + rows_inf[4:],
+    ):
         spark.createDataFrame(
             chunk, "metric string, ts long, value double"
         ).coalesce(1).write.mode("append").parquet(src)
@@ -122,13 +139,16 @@ def test_holt_seasonal_stream_equals_batch(spark, tmp_path):
         "checkpointLocation", str(tmp_path / "ck3")
     ).start()
     q.awaitTermination(120)
-    got = {r["ts"]: r for r in spark.sql("select * from hws").collect()}
+    got = {
+        (r["metric"], r["ts"]): r
+        for r in spark.sql("select * from hws").collect()
+    }
 
     batch_in = spark.createDataFrame(
-        [(m, t, v, 0) for m, t, v in rows],
+        [(m, t, v, 0) for m, t, v in rows + rows_inf],
         "metric string, ts long, value double, arrival_seq long",
     )
-    want = {r["ts"]: r for r in ser.holt_winters(
+    want = {(r["metric"], r["ts"]): r for r in ser.holt_winters(
         batch_in, alpha=0.3, beta=0.05, dev_scale=3.0,
         season_length=3, gamma=0.2, step=60).collect()}
 

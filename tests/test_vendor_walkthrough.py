@@ -6,12 +6,13 @@ against the session Spark and re-asserts the decode plumbing so doc
 rot fails CI, not the vendor.
 """
 
+import os
 import sys
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import ceres_spark.operators.multimodal as mm  # noqa: E402
 from examples.vendor_codec_walkthrough import (  # noqa: E402

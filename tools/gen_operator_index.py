@@ -5,9 +5,11 @@ Regenerate after registry changes: python tools/gen_operator_index.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 
@@ -35,7 +37,7 @@ def main() -> None:
             doc = doc[:217] + "..."
         mode = "oracle" if name in os_ else "rows-only"
         lines.append(f"| {i} | `{name}` | {mode} | {doc} |")
-    with open("/root/repo/docs/OPERATORS.md", "w") as f:
+    with open(os.path.join(REPO, "docs", "OPERATORS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {len(qs)} rows")
 

@@ -30,7 +30,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import ceres_spark.operators.analytics as ana
 import ceres_spark.sources.tables as tbl
