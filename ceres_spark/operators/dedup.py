@@ -327,25 +327,6 @@ def bloom_decontaminate(
 
 # ---------------------------------------------------------- minhash
 
-def minhash_signature(
-    shingle_col: Column | str = "_g", num_hashes: int = 64
-) -> Column:
-    """MinHash signature: sig[i] = min over shingles of
-    xxhash64(i, shingle). Deterministic; one array column per doc.
-
-    Takes a *materialized* shingle array column, not the shingle
-    expression: Catalyst has no let-binding, so passing the expression
-    would inline it into all ``num_hashes`` lambda bodies — a 64×
-    recompute of the shingling."""
-    g = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(g, lambda s: F.xxhash64(i, s))
-        ),
-    )
-
-
 def _minhash_bands_pandas(
     docs: DataFrame, num_hashes: int, bands: int, shingle_k: int
 ) -> DataFrame:

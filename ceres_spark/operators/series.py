@@ -39,21 +39,27 @@ from ceres_spark.operators.aggregate import (
     lattice,
 )
 
-#: Cardinality bound for the panel-ordering rank in
-#: :func:`sort_by_extrema` — its windows are global by definition
-#: (a total order over the series list), so past this many series
-#: the plan raises in-plan instead of silently single-reducing.
+#: Cardinality bound for every unpartitioned series rank
+#: (:func:`_ranked_series_guard`) — those windows are global by
+#: definition (a total order over the series list), so past this many
+#: series the plan raises in-plan instead of silently single-reducing.
 MAX_RANKED_SERIES = 100_000
 
 
-def _ranked_series_guard(rank_col, site: str):
-    """The LOUD in-plan cardinality guard every unpartitioned
-    series-rank window must carry (VERDICT r11 wrong #2): below
+def _ranked_series_guard(site: str, *order):
+    """The one unpartitioned series rank: ``row_number()`` over the
+    whole series list ordered by ``order``, behind the LOUD in-plan
+    cardinality guard (VERDICT r11 wrong #2). Below
     ``MAX_RANKED_SERIES`` the rank passes through untouched; past it
     the plan raises with routing advice instead of silently
-    single-reducing a catalog-scale sort. test_plan_audit.py
-    machine-checks that every unpartitioned WindowExec in every
-    registry plan belongs to a guarded allowlisted site."""
+    single-reducing a catalog-scale sort. Each rank column carries
+    its own guard, so a caller selecting any one of them alone keeps
+    it. test_plan_audit.py machine-checks that every unpartitioned
+    WindowExec in every registry plan belongs to a guarded
+    allowlisted site."""
+    from pyspark.sql.window import Window
+
+    rank_col = F.row_number().over(Window.orderBy(*order))
     return F.when(rank_col <= MAX_RANKED_SERIES, rank_col).otherwise(
         F.raise_error(F.lit(
             f"{site}: more than {MAX_RANKED_SERIES} series — this is "
@@ -62,6 +68,84 @@ def _ranked_series_guard(rank_col, site: str):
             "catalog-scale ranking"
         ))
     )
+
+
+def _nearest_rank(pct: int):
+    """graphite ``_getPercentile``'s non-interpolated rank over the
+    ``_cnt`` non-null values of a :func:`_percentile_ranked` frame:
+    ``ceil(pct/100 · (cnt+1))`` clamped to [1, cnt]. Integer ``div``
+    — exact on any engine, no float percentile definition to
+    reconcile."""
+    return F.greatest(
+        F.lit(1).cast("long"),
+        F.least(
+            F.col("_cnt"),
+            F.expr(f"({int(pct)}L * (_cnt + 1) + 99) div 100"),
+        ),
+    )
+
+
+def _percentile_ranked(
+    df: DataFrame, value: str, *keep: str, axis: str | None, site: str = ""
+):
+    """The rank universe of :func:`_nearest_rank`: ``keep`` columns,
+    ``value``, ``_rn`` (value's ascending row number, nulls last) and
+    ``_cnt`` (the non-null count) within each ``axis`` partition,
+    both off one exchange. ``axis=None`` ranks the whole series-list
+    panel: one unpartitioned rank, ties broken by metric, guarded as
+    ``site``. Returns the ranked frame and the whole-partition window
+    that :func:`_percentile_edge` aggregates over."""
+    from pyspark.sql.window import Window
+
+    if axis is None:
+        whole = Window.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        rn = _ranked_series_guard(
+            site, F.col(value).asc_nulls_last(), F.asc("metric")
+        )
+    else:
+        whole = Window.partitionBy(axis)
+        rn = F.row_number().over(
+            whole.orderBy(F.col(value).asc_nulls_last())
+        )
+    ranked = df.select(
+        *keep, value, rn.alias("_rn"),
+        F.count(value).over(whole).alias("_cnt"),
+    )
+    return ranked, whole
+
+
+def _percentile_edge(pct: int, value: str, whole):
+    """The ``pct``-th percentile value of a :func:`_percentile_ranked`
+    partition, drawn beside every row: ``max(when(_rn = rank,
+    value))`` over the whole partition."""
+    return F.max(
+        F.when(F.col("_rn") == _nearest_rank(pct), F.col(value))
+    ).over(whole)
+
+
+def _power_sums(over=None) -> list:
+    """The exact Σx and Σx² of ``value`` and its non-null count, as
+    ``_s1``/``_s2``/``_n`` — grouped, or windowed ``over`` a window.
+    Selected once, then read by column, so a windowed site evaluates
+    each window aggregate once however often the formula names it."""
+    n = F.count("value")
+    return [
+        exact_sum("value", over=over).alias("_s1"),
+        exact_sum(F.col("value") * F.col("value"), over=over).alias("_s2"),
+        (n if over is None else n.over(over)).alias("_n"),
+    ]
+
+
+def _population_variance():
+    """Population variance from the :func:`_power_sums` columns:
+    ``Σx²/n − (Σx/n)²`` in plain IEEE double ops (the oracles spell
+    the same expression), clamped at 0 — the two decimal
+    quantizations can leave −ε on a near-constant series, where
+    Spark's sqrt yields NaN and DuckDB's raises."""
+    s1, s2, n = F.col("_s1"), F.col("_s2"), F.col("_n")
+    return F.greatest(s2 / n - (s1 / n) * (s1 / n), F.lit(0.0))
 
 
 def time_grid(
@@ -308,17 +392,20 @@ def series_linreg(
     return agg_df.select(*cols)
 
 
-def _ewma_fold(vals: np.ndarray, a: float, state: float = np.nan):
+def _ewma_fold(vals: np.ndarray, a: float, state: tuple = (np.nan, 0)):
     """The EWMA recurrence ``e_i = a·v_i + (1−a)·e_{i−1}`` over
-    time-ordered ``vals`` from ``state`` (NaN: not seeded; the first
-    non-NULL point seeds). NULL points carry the average forward.
+    time-ordered ``vals`` from the carried (ewma, inited) ``state``.
+    The first non-NULL point seeds the average and sets ``inited``;
+    the run never re-seeds, so an average that turns NaN (``inf``
+    then ``-inf``) stays NaN. NULL points carry the average forward.
     Returns (per-point EWMA, new state)."""
+    e, inited = state
     out = np.empty_like(vals)
     for i, v in enumerate(vals):
         if not np.isnan(v):
-            state = v if np.isnan(state) else a * v + (1 - a) * state
-        out[i] = state
-    return out, state
+            e, inited = (a * v + (1 - a) * e) if inited else v, 1
+        out[i] = e
+    return out, (e, inited)
 
 
 def ewma(buckets: DataFrame, alpha: float = 0.3) -> DataFrame:
@@ -330,11 +417,11 @@ def ewma(buckets: DataFrame, alpha: float = 0.3) -> DataFrame:
     recursive — no Catalyst window frame expresses it, and the
     closed-form power expansion overflows for long series — so this
     is the documented applyInPandas case: one Arrow batch per metric,
-    one linear numpy pass (:func:`_ewma_fold`), state = a single
-    float. Scale shape: the only exchange is the groupBy(metric)
-    shuffle; each task holds one series run, never the corpus. NULL
-    points carry the previous EWMA forward (graphite semantics: gaps
-    don't decay the average).
+    one linear numpy pass (:func:`_ewma_fold`), state = one float
+    and its seeded flag. Scale shape: the only exchange is the
+    groupBy(metric) shuffle; each task holds one series run, never
+    the corpus. NULL points carry the previous EWMA forward (graphite
+    semantics: gaps don't decay the average).
 
     Streaming: ``streaming.stateful.ewma_stream`` is the online EWMA;
     it runs the same fold from the state it stores per series.
@@ -563,10 +650,10 @@ def anomaly_zscore(buckets: DataFrame, z: float = 3.0) -> DataFrame:
     fetch.
 
     Mean and variance come from DECIMAL Σx / Σx² accumulators
-    (order-independent → partitioning-independent), combined with the
-    textbook E[x²] − E[x]² identity in plain IEEE double ops — the
-    oracle reproduces the identical expression, so the z threshold
-    cuts bit-identically.
+    (order-independent → partitioning-independent), combined by
+    :func:`_population_variance` — the oracle reproduces the
+    identical expression, so the z threshold cuts bit-identically. A
+    series with zero variance has no z-score and flags nothing.
 
     Plan (optimization r12, guide §2.4/§2.1): the stats are drawn
     beside every point in ONE metric-partitioned window pass instead
@@ -580,17 +667,11 @@ def anomaly_zscore(buckets: DataFrame, z: float = 3.0) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("metric")
-    cnt = F.count("value").over(w)
     j = buckets.select(
-        "metric", "ts", "value",
-        (exact_sum("value", over=w) / cnt).alias("_mean"),
-        (
-            exact_sum(F.col("value") * F.col("value"), over=w) / cnt
-        ).alias("_ex2"),
+        "metric", "ts", "value", *_power_sums(Window.partitionBy("metric"))
     )
-    var = F.col("_ex2") - F.col("_mean") * F.col("_mean")
-    zscore = (F.col("value") - F.col("_mean")) / F.sqrt(var)
+    sigma = F.sqrt(F.nullif(_population_variance(), F.lit(0.0)))
+    zscore = (F.col("value") - F.col("_s1") / F.col("_n")) / sigma
     return (
         j.select("metric", "ts", "value", zscore.alias("zscore"))
         .filter(F.abs(F.col("zscore")) >= F.lit(float(z)))
@@ -672,7 +753,7 @@ def moving_stddev(buckets: DataFrame, points: int = 5) -> DataFrame:
     volatility readout).
 
     Same determinism recipe as anomaly_zscore, but windowed: decimal
-    Σx and Σx² per frame, E[x²]−E[x]² in plain double ops, sqrt
+    Σx and Σx² per frame, :func:`_population_variance`, sqrt
     correctly rounded — mirrored verbatim in the oracle. One window
     sort serves both frames.
     """
@@ -683,19 +764,11 @@ def moving_stddev(buckets: DataFrame, points: int = 5) -> DataFrame:
         .orderBy("ts")
         .rowsBetween(-(int(points) - 1), 0)
     )
-    n = F.count("value").over(w)
-    mean = exact_sum("value", over=w) / n
-    ex2 = exact_sum(F.col("value") * F.col("value"), over=w) / n
-    # E[x²]−E[x]² can round to −ε on near-constant frames (the two
-    # decimal quantizations differ below the 10th digit); clamp —
-    # mirrored in the oracle, where DuckDB would otherwise ERROR on
-    # sqrt(negative) while Spark silently yields NaN
-    var = F.greatest(ex2 - mean * mean, F.lit(0.0))
-    return buckets.select(
+    return buckets.select("metric", "ts", "value", *_power_sums(w)).select(
         "metric",
         "ts",
         "value",
-        F.sqrt(var).alias("moving_stddev"),
+        F.sqrt(_population_variance()).alias("moving_stddev"),
     )
 
 
@@ -824,10 +897,8 @@ def n_percentile(buckets: DataFrame, n: int = 90) -> DataFrame:
     (graphite-web functions.py nPercentile — draws the flat percentile
     line per series; here the line's VALUE, one row per metric).
 
-    Uses graphite's non-interpolated rank rule (_getPercentile):
-    ``rank = ceil(n/100 · (cnt+1))`` clamped to [1, cnt], value = the
-    rank-th smallest non-null. Pure integer rank selection — exact on
-    any engine, no float percentile definitions to reconcile.
+    Uses graphite's non-interpolated rank rule (:func:`_nearest_rank`):
+    value = the rank-th smallest non-null.
 
     Plan (optimization r12, guide §2.1/§5.3): ONE per-metric window
     pass — row_number over the value sort plus a whole-partition
@@ -840,30 +911,9 @@ def n_percentile(buckets: DataFrame, n: int = 90) -> DataFrame:
     (verified empirically: 0 ReusedExchange, 2 scans). Single-pass =
     one scan, one metric-keyed exchange at any scale.
     """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("metric").orderBy(
-        F.col("value").asc_nulls_last()
-    )
-    w_all = Window.partitionBy("metric")
-    ranked = buckets.select(
-        "metric",
-        "value",
-        F.row_number().over(w).alias("_rn"),
-        # count(value) skips nulls — the rank universe is the
-        # non-null values, which sort first under asc_nulls_last
-        F.count("value").over(w_all).alias("_cnt"),
-    )
-    # integer `div`: exact ceil(n(cnt+1)/100), no float rounding
-    k = F.greatest(
-        F.lit(1).cast("long"),
-        F.least(
-            F.col("_cnt"),
-            F.expr(f"({int(n)}L * (_cnt + 1) + 99) div 100"),
-        ),
-    )
+    ranked, _ = _percentile_ranked(buckets, "value", "metric", axis="metric")
     return ranked.filter(
-        F.col("value").isNotNull() & (F.col("_rn") == k)
+        F.col("value").isNotNull() & (F.col("_rn") == _nearest_rank(n))
     ).select("metric", F.col("value").alias("n_percentile"))
 
 
@@ -872,7 +922,7 @@ def percentile_of_series(buckets: DataFrame, n: int = 90) -> DataFrame:
     timestamp, the n-th percentile across the metrics' values
     (graphite-web percentileOfSeries; the cross-series band readout).
 
-    Same non-interpolated rank rule as :func:`n_percentile`, applied
+    Same non-interpolated rank rule (:func:`_nearest_rank`), applied
     per ``ts`` bucket instead of per metric. Output: (ts, value).
 
     Plan (optimization r12, guide §2.1/§5.3): ONE ts-partitioned
@@ -885,25 +935,9 @@ def percentile_of_series(buckets: DataFrame, n: int = 90) -> DataFrame:
     axis — the right axis at 100 TB, where time is the unbounded
     dimension.
     """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("ts").orderBy(F.col("value").asc_nulls_last())
-    w_all = Window.partitionBy("ts")
-    ranked = buckets.select(
-        "ts",
-        "value",
-        F.row_number().over(w).alias("_rn"),
-        F.count("value").over(w_all).alias("_cnt"),
-    )
-    k = F.greatest(
-        F.lit(1).cast("long"),
-        F.least(
-            F.col("_cnt"),
-            F.expr(f"({int(n)}L * (_cnt + 1) + 99) div 100"),
-        ),
-    )
+    ranked, _ = _percentile_ranked(buckets, "value", "ts", axis="ts")
     return ranked.filter(
-        F.col("value").isNotNull() & (F.col("_rn") == k)
+        F.col("value").isNotNull() & (F.col("_rn") == _nearest_rank(n))
     ).select("ts", F.col("value").alias("value"))
 
 
@@ -924,45 +958,24 @@ def sort_by_extrema(buckets: DataFrame) -> DataFrame:
     carries a LOUD in-plan cardinality guard (VERDICT r5): past
     ``MAX_RANKED_SERIES`` rows the query fails with instructions to
     rank via the boundary-bucketing ``order_quartiles_scaled`` path
-    instead of silently serializing. raise_error is JVM-side; the
-    happy path stays codegen.
+    instead of silently serializing (:func:`_ranked_series_guard`,
+    on each rank). raise_error is JVM-side; the happy path stays
+    codegen.
     """
-    from pyspark.sql.window import Window
-
     ext = buckets.filter(F.col("value").isNotNull()).groupBy("metric").agg(
         F.max("value").alias("max_value"),
         F.min("value").alias("min_value"),
     )
-    ranked = ext.select(
+    return ext.select(
         "metric",
         "max_value",
         "min_value",
-        F.row_number()
-        .over(Window.orderBy(F.desc("max_value"), F.asc("metric")))
-        .alias("rank_by_max"),
-        F.row_number()
-        .over(Window.orderBy(F.asc("min_value"), F.asc("metric")))
-        .alias("rank_by_min"),
-    )
-    return ranked.select(
-        "metric",
-        "max_value",
-        "min_value",
-        F.when(
-            F.col("rank_by_max") <= MAX_RANKED_SERIES,
-            F.col("rank_by_max"),
-        )
-        .otherwise(
-            F.raise_error(F.lit(
-                "sort_by_extrema: more than "
-                f"{MAX_RANKED_SERIES} series — this is a panel-"
-                "ordering primitive (unpartitioned rank); use "
-                "order_quartiles_scaled-style boundary bucketing "
-                "for catalog-scale ranking"
-            ))
-        )
-        .alias("rank_by_max"),
-        "rank_by_min",
+        _ranked_series_guard(
+            "sort_by_extrema", F.desc("max_value"), F.asc("metric")
+        ).alias("rank_by_max"),
+        _ranked_series_guard(
+            "sort_by_extrema", F.asc("min_value"), F.asc("metric")
+        ).alias("rank_by_min"),
     )
 
 
@@ -1022,46 +1035,27 @@ def remove_percentile(
     n-th percentile (graphite keeps the slot as None — the series
     stays aligned with its neighbors, unlike a filter).
 
-    The per-series threshold is the same non-interpolated integer
-    rank rule as :func:`n_percentile` (exact on any engine).
+    The per-series threshold is the non-interpolated integer rank
+    rule of :func:`_nearest_rank` (exact on any engine).
 
     Plan (optimization r12, guide §2.1/§5.3): the threshold is drawn
     beside every point in ONE per-metric window pass — rank the
-    values, pick the rank-k value with ``max(when(rn = k))`` over the
-    whole partition — instead of the old n_percentile branch +
-    broadcast join-back, which re-evaluated the upstream scan →
-    compact subtree three times (per-branch column pruning defeats
-    exchange reuse). One scan, one metric-keyed exchange at any
-    scale; the window partition is one series' points, exactly what
-    the old per-metric rank window already held.
+    values, pick the rank-k value with :func:`_percentile_edge` —
+    instead of the old n_percentile branch + broadcast join-back,
+    which re-evaluated the upstream scan → compact subtree three
+    times (per-branch column pruning defeats exchange reuse). One
+    scan, one metric-keyed exchange at any scale; the window
+    partition is one series' points, exactly what the old per-metric
+    rank window already held.
     """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("metric").orderBy(
-        F.col("value").asc_nulls_last()
-    )
-    w_all = Window.partitionBy("metric")
-    ranked = buckets.select(
-        "metric",
-        "ts",
-        "value",
-        F.row_number().over(w).alias("_rn"),
-        F.count("value").over(w_all).alias("_cnt"),
-    )
-    k = F.greatest(
-        F.lit(1).cast("long"),
-        F.least(
-            F.col("_cnt"),
-            F.expr(f"({int(n)}L * (_cnt + 1) + 99) div 100"),
-        ),
+    ranked, whole = _percentile_ranked(
+        buckets, "value", "metric", "ts", axis="metric"
     )
     with_thr = ranked.select(
         "metric",
         "ts",
         "value",
-        F.max(F.when(F.col("_rn") == k, F.col("value")))
-        .over(w_all)
-        .alias("_thr"),
+        _percentile_edge(n, "value", whole).alias("_thr"),
     )
     offend = (
         F.col("value") > F.col("_thr")
@@ -1083,8 +1077,8 @@ def most_deviant(buckets: DataFrame, k: int = 3) -> DataFrame:
     misbehaving" selector.
 
     Determinism recipe from anomaly_zscore, unwindowed: per-series
-    DECIMAL Σx and Σx², variance in plain double ops clamped at 0,
-    one correctly-rounded sqrt — engine-portable bit-for-bit. The
+    DECIMAL Σx and Σx², :func:`_population_variance`, one
+    correctly-rounded sqrt — engine-portable bit-for-bit. The
     top-k is ``orderBy().limit()`` over the series-cardinality
     aggregate — TakeOrderedAndProject, a per-partition heap + driver
     merge of k rows, never a single-partition global sort — with
@@ -1093,21 +1087,9 @@ def most_deviant(buckets: DataFrame, k: int = 3) -> DataFrame:
     stats = (
         buckets.filter(F.col("value").isNotNull())
         .groupBy("metric")
-        .agg(
-            exact_sum("value").alias("_s1"),
-            exact_sum(F.col("value") * F.col("value")).alias("_s2"),
-            F.count("*").alias("_n"),
-        )
+        .agg(*_power_sums())
         .select(
-            "metric",
-            F.sqrt(
-                F.greatest(
-                    F.col("_s2") / F.col("_n")
-                    - (F.col("_s1") / F.col("_n"))
-                    * (F.col("_s1") / F.col("_n")),
-                    F.lit(0.0),
-                )
-            ).alias("deviation"),
+            "metric", F.sqrt(_population_variance()).alias("deviation")
         )
     )
     return stats.orderBy(F.desc("deviation"), F.asc("metric")).limit(int(k))
@@ -1217,8 +1199,8 @@ def filter_series(
     hash-checked in a single entry. Rank ties break by metric —
     total order, oracle-stable. The panel is series-cardinality (a
     handful of rows at any scale), so the unpartitioned rank window
-    is a non-issue — same precedent as sort_by_extrema, and since
-    r12 the same LOUD ``MAX_RANKED_SERIES`` in-plan guard (VERDICT
+    is cheap — behind :func:`_ranked_series_guard`, the LOUD
+    ``MAX_RANKED_SERIES`` in-plan guard since r12 (VERDICT
     r11 wrong #2: every unpartitioned window in the fleet must be a
     guarded site; the fleet-wide audit in test_plan_audit.py
     machine-checks membership).
@@ -1236,8 +1218,6 @@ def filter_series(
     an all-None series has no row at all (the same contract as every
     other stat panel here — see the all-null case in the unit test).
     """
-    from pyspark.sql.window import Window
-
     nn = buckets.filter(F.col("value").isNotNull())
     stats = nn.groupBy("metric").agg(
         F.max_by("value", "ts").alias("current"),
@@ -1261,17 +1241,11 @@ def filter_series(
         (mn > F.lit(float(min_gate))).cast("int").alias("minimum_above"),
         (mn <= F.lit(float(min_gate))).cast("int").alias("minimum_below"),
         _ranked_series_guard(
-            F.row_number()
-            .over(Window.orderBy(F.desc("current"), F.asc("metric")))
-            .cast("int"),
-            "filter_series",
-        ).alias("rank_highest_current"),
+            "filter_series", F.desc("current"), F.asc("metric")
+        ).cast("int").alias("rank_highest_current"),
         _ranked_series_guard(
-            F.row_number()
-            .over(Window.orderBy(F.asc("current"), F.asc("metric")))
-            .cast("int"),
-            "filter_series",
-        ).alias("rank_lowest_current"),
+            "filter_series", F.asc("current"), F.asc("metric")
+        ).cast("int").alias("rank_lowest_current"),
     )
 
 
@@ -1284,7 +1258,7 @@ def series_combinators(
     variadic ``diffSeries(anchor, *rest)`` (anchor − Σrest —
     computed as ONE signed decimal sum Σ(±v), no decimal
     multiplication to rescale), ``stddevSeries`` (population σ per
-    slot from exact Σv/Σv², the most_deviant double recipe),
+    slot from exact Σv/Σv², :func:`_population_variance`),
     ``multiplySeries(anchor, other)`` (a single correctly-rounded
     IEEE multiply), and ``maxSeries``/``minSeries`` (exact
     comparisons), with sumSeries re-emitted as the n_series
@@ -1299,13 +1273,10 @@ def series_combinators(
     engine-portable bit-for-bit.
     """
     dec = lattice("value")
-    dec2 = lattice(F.col("value") * F.col("value"))
     is_anchor = F.col("metric") == F.lit(anchor)
     nn = buckets.filter(F.col("value").isNotNull())
     g = nn.groupBy("ts").agg(
-        F.count("*").alias("n_series"),
-        F.sum(dec).alias("_s1"),
-        F.sum(dec2).alias("_s2"),
+        *_power_sums(),
         F.sum(F.when(is_anchor, dec).otherwise(-dec)).alias("_d"),
         F.max(F.when(is_anchor, F.col("value"))).alias("_av"),
         F.max(
@@ -1314,22 +1285,15 @@ def series_combinators(
         F.max("value").alias("max_series"),
         F.min("value").alias("min_series"),
     )
-    s1d = _dec_to_double(F.col("_s1"))
-    s2d = _dec_to_double(F.col("_s2"))
-    n = F.col("n_series")
     return g.select(
         "ts",
-        "n_series",
-        s1d.alias("sum_series"),
+        F.col("_n").alias("n_series"),
+        F.col("_s1").alias("sum_series"),
         F.when(
             F.col("_av").isNotNull(),
             _dec_to_double(F.col("_d")),
         ).alias("diff_series"),
-        F.sqrt(
-            F.greatest(
-                s2d / n - (s1d / n) * (s1d / n), F.lit(0.0)
-            )
-        ).alias("stddev_series"),
+        F.sqrt(_population_variance()).alias("stddev_series"),
         (F.col("_av") * F.col("_bv")).alias("multiply_series"),
         "max_series",
         "min_series",
@@ -1799,12 +1763,10 @@ def series_orderings(buckets: DataFrame) -> DataFrame:
     lattice total — sortByTotal is a SUM ordering, and
     a ulp in the total could swap adjacent ranks); both rank columns
     ride the same tiny series-list table. Ties break by metric name —
-    total order, oracle-stable. Same unpartitioned-rank caveat and
-    LOUD cardinality guard as sort_by_extrema: this is a panel
-    primitive, not a catalog ranking.
+    total order, oracle-stable. Each rank is a
+    :func:`_ranked_series_guard` site: this is a panel primitive, not
+    a catalog ranking.
     """
-    from pyspark.sql.window import Window
-
     totals = buckets.filter(F.col("value").isNotNull()).groupBy(
         "metric"
     ).agg(
@@ -1818,49 +1780,19 @@ def series_orderings(buckets: DataFrame) -> DataFrame:
     totals = totals.withColumn(
         "avg_value", F.col("total") / F.col("n_points")
     )
-    ranked = totals.select(
+    return totals.select(
         "metric",
         "total",
         "n_points",
         "avg_value",
-        F.row_number()
-        .over(Window.orderBy(F.asc("metric")))
-        .alias("rank_by_name"),
-        F.row_number()
-        .over(Window.orderBy(F.desc("total"), F.asc("metric")))
-        .alias("rank_by_total"),
-        F.row_number()
-        .over(Window.orderBy(F.desc("avg_value"), F.asc("metric")))
-        .alias("rank_by_avg"),
-    )
-    return ranked.select(
-        "metric",
-        "total",
-        "n_points",
-        "avg_value",
-        # rank_by_name carries the guard too (r12, VERDICT r11 wrong
-        # #2): a caller selecting ONLY rank_by_name used to let
-        # Catalyst prune the rank_by_total guard away, leaving an
-        # unguarded global sort
         _ranked_series_guard(
-            F.col("rank_by_name"), "series_orderings"
+            "series_orderings", F.asc("metric")
         ).alias("rank_by_name"),
-        F.when(
-            F.col("rank_by_total") <= MAX_RANKED_SERIES,
-            F.col("rank_by_total"),
-        )
-        .otherwise(
-            F.raise_error(F.lit(
-                "series_orderings: more than "
-                f"{MAX_RANKED_SERIES} series — this is a panel-"
-                "ordering primitive (unpartitioned rank); use "
-                "order_quartiles_scaled-style boundary bucketing "
-                "for catalog-scale ranking"
-            ))
-        )
-        .alias("rank_by_total"),
         _ranked_series_guard(
-            F.col("rank_by_avg"), "series_orderings"
+            "series_orderings", F.desc("total"), F.asc("metric")
+        ).alias("rank_by_total"),
+        _ranked_series_guard(
+            "series_orderings", F.desc("avg_value"), F.asc("metric")
         ).alias("rank_by_avg"),
     )
 
@@ -1921,13 +1853,13 @@ def remove_between_percentile(
     keep only the series that ESCAPE the cross-series percentile band
     at some time slot — functions.py transposes the series list, takes
     the (100−n)th and nth percentile ACROSS SERIES per slot (the
-    non-interpolated _getPercentile rank rule, same as
-    :func:`n_percentile`), and keeps a series unless ALL its points
-    lie STRICTLY inside (low, high) — functions.py's escape test is
-    ``not (low < val < high)``, so a point EQUAL to a band edge
-    escapes (ADVICE r9: the band values are actual data points, so
-    the per-slot rank-lo and rank-hi series always escape; the old
-    strict </> arms silently dropped them).
+    non-interpolated :func:`_nearest_rank` rule), and keeps a series
+    unless ALL its points lie STRICTLY inside (low, high) —
+    functions.py's escape test is ``not (low < val < high)``, so a
+    point EQUAL to a band edge escapes (ADVICE r9: the band values
+    are actual data points, so the per-slot rank-lo and rank-hi
+    series always escape; the old strict </> arms silently dropped
+    them).
 
     Same transpose shape and scale story as
     :func:`percentile_of_series`: the percentile window partitions by
@@ -1937,9 +1869,9 @@ def remove_between_percentile(
 
     Plan (optimization r12, guide §2.4/§2.1): ONE pass — the ts
     window computes rank, non-null count AND the two band edges
-    (``max(when(rn = rank_k, value))`` over the slot, the
-    remove_percentile idiom), then a metric-partitioned window draws
-    each series' escape total beside every point. The old shape
+    (:func:`_percentile_edge` over the slot), then a
+    metric-partitioned window draws each series' escape total beside
+    every point. The old shape
     (rank window + band groupBy + ts join + escape groupBy +
     broadcast join-back) re-evaluated the upstream scan → compact →
     hourly subtree THREE times (per-branch column pruning defeats
@@ -1952,37 +1884,13 @@ def remove_between_percentile(
     from pyspark.sql.window import Window
 
     hi_n = n if n >= 50 else 100 - n
-    lo_n = 100 - hi_n
-    w = Window.partitionBy("ts").orderBy(F.col("value").asc_nulls_last())
-    w_ts = Window.partitionBy("ts")
-    ranked = buckets.select(
-        "metric", "ts", "value",
-        F.row_number().over(w).alias("_rn"),
-        # count(value) skips nulls — the rank universe is the
-        # non-null values, which sort first under asc_nulls_last
-        F.count("value").over(w_ts).alias("_cnt"),
+    ranked, w_ts = _percentile_ranked(
+        buckets, "value", "metric", "ts", axis="ts"
     )
-
-    def rank_of(pct):
-        # graphite _getPercentile rank: ceil(pct/100·(cnt+1)),
-        # clamped — exact integer `div`, engine-portable (the
-        # n_percentile idiom)
-        return F.greatest(
-            F.lit(1).cast("long"),
-            F.least(
-                F.col("_cnt"),
-                F.expr(f"({int(pct)}L * (_cnt + 1) + 99) div 100"),
-            ),
-        )
-
     banded = ranked.select(
         "metric", "ts", "value",
-        F.max(
-            F.when(F.col("_rn") == rank_of(lo_n), F.col("value"))
-        ).over(w_ts).alias("_lo"),
-        F.max(
-            F.when(F.col("_rn") == rank_of(hi_n), F.col("value"))
-        ).over(w_ts).alias("_hi"),
+        _percentile_edge(100 - hi_n, "value", w_ts).alias("_lo"),
+        _percentile_edge(hi_n, "value", w_ts).alias("_hi"),
     )
     w_m = Window.partitionBy("metric")
     return (
@@ -2051,60 +1959,29 @@ def average_outside_percentile(
     computation even on fixtures where no series is strictly inside.
 
     The panel is series-cardinality, so the band comes from one
-    unpartitioned rank over a handful of rows (same precedent and
-    LOUD cardinality guard as sort_by_extrema via the rank cap) and
-    returns to the point table as a broadcast semi-join.
+    guarded unpartitioned rank over a handful of rows
+    (:func:`_percentile_ranked` with no axis) and returns to the
+    point table as a broadcast semi-join.
     """
-    from pyspark.sql.window import Window
-
     avgs = buckets.filter(F.col("value").isNotNull()).groupBy(
         "metric"
     ).agg((exact_sum("value") / F.count("*")).alias("avg_value"))
     hi_n = n if n >= 50 else 100 - n
-    lo_n = 100 - hi_n
-    wr = Window.orderBy(F.asc("avg_value"), F.asc("metric"))
-    ranked = avgs.select(
-        "metric",
-        "avg_value",
-        # the docstring's promised loud guard, actually in-plan
-        # since r12 (VERDICT r11 wrong #2)
-        _ranked_series_guard(
-            F.row_number().over(wr),
-            "average_outside_percentile",
-        ).alias("_rn"),
-        F.count("*").over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("_cnt"),
+    ranked, w_full = _percentile_ranked(
+        avgs, "avg_value", "metric", axis=None,
+        site="average_outside_percentile",
     )
-
-    def rank_of(pct):
-        return F.greatest(
-            F.lit(1).cast("long"),
-            F.least(
-                F.col("_cnt"),
-                F.expr(f"({int(pct)}L * (_cnt + 1) + 99) div 100"),
-            ),
-        )
-
     # optimization r12 (guide §2.4): the band edges are drawn beside
     # every ranked row in the SAME single-partition window pass
-    # (max(when(rn = rank_k)) over the full frame) instead of a
-    # separate agg + crossJoin — the old two-consumer shape
-    # re-evaluated the avgs aggregate (and its scan → compact
+    # instead of a separate agg + crossJoin — the old two-consumer
+    # shape re-evaluated the avgs aggregate (and its scan → compact
     # upstream) once per branch (16 Exchanges / 3 scans before).
-    w_full = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
     keepers = (
         ranked.select(
             "metric",
             "avg_value",
-            F.max(F.when(F.col("_rn") == rank_of(lo_n),
-                         F.col("avg_value"))).over(w_full).alias("_lo"),
-            F.max(F.when(F.col("_rn") == rank_of(hi_n),
-                         F.col("avg_value"))).over(w_full).alias("_hi"),
+            _percentile_edge(100 - hi_n, "avg_value", w_full).alias("_lo"),
+            _percentile_edge(hi_n, "avg_value", w_full).alias("_hi"),
         )
         .filter(
             (F.col("avg_value") <= F.col("_lo"))
@@ -2573,12 +2450,10 @@ def fallback_series(
     rows when it is zero, and ``src`` records which arm fired so the
     hash pins the gate, not just the points. isNonNull is a 0/1
     projection per point; limit keeps the first ``limit_n`` series in
-    name order — a series-cardinality rank with the same LOUD
-    in-plan cardinality guard as sort_by_extrema (graphite's limit
-    slices the expanded list, which arrives name-ordered).
+    name order — a series-cardinality :func:`_ranked_series_guard`
+    rank (graphite's limit slices the expanded list, which arrives
+    name-ordered).
     """
-    from pyspark.sql.window import Window
-
     cnt = primary.agg(F.count("*").cast("long").alias("_n_primary"))
     cols = ["metric", "ts", "value"]
     p = (
@@ -2593,20 +2468,9 @@ def fallback_series(
     )
     chosen = p.unionByName(f).drop("_n_primary")
     names = chosen.select("metric").distinct()
-    rk = F.row_number().over(Window.orderBy(F.asc("metric")))
     ranked = names.select(
         "metric",
-        F.when(rk <= MAX_RANKED_SERIES, rk)
-        .otherwise(
-            F.raise_error(F.lit(
-                "fallback_series: more than "
-                f"{MAX_RANKED_SERIES} series — limit() is a panel-"
-                "ordering primitive (unpartitioned rank); use "
-                "order_quartiles_scaled-style boundary bucketing "
-                "for catalog-scale ranking"
-            ))
-        )
-        .alias("_rk"),
+        _ranked_series_guard("fallback_series", F.asc("metric")).alias("_rk"),
     )
     return chosen.join(F.broadcast(ranked), "metric").select(
         "metric",

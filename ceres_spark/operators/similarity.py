@@ -121,23 +121,6 @@ def hyperplane(plane_id: int, dim: int) -> list[float]:
     return comps
 
 
-def lsh_bucket(
-    vec_col: Column, dim: int, n_planes: int = 12, table: int = 0
-) -> Column:
-    """Sign-pattern bucket id: bit p = [vec · plane_p > 0]. 2^n_planes
-    buckets; more planes → smaller buckets → cheaper joins, lower
-    per-table recall. ``table`` selects an independent plane set."""
-    vd = as_double(vec_col)
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = F.array(
-            *[F.lit(c) for c in hyperplane(table * n_planes + p, dim)]
-        )
-        bit = F.when(dot(vd, plane) > 0, F.lit(1)).otherwise(F.lit(0))
-        bucket = bucket + F.shiftleft(bit.cast("long"), p)
-    return bucket
-
-
 def lsh_buckets(
     vec_col: Column, dim: int, n_planes: int, n_tables: int
 ) -> Column:

@@ -287,8 +287,3 @@ def epoch_seconds(dtype, col: str = "ts") -> F.Column:
         return F.expr(f"{col} DIV 1000000000")
     return F.unix_timestamp(col)
 
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register all source tables as temp views for spark.sql use."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -192,7 +192,9 @@ def holt_winters_stream(
     )
 
 
-EWMA_STATE_SCHEMA = StructType([StructField("ewma", DoubleType())])
+EWMA_STATE_SCHEMA = StructType(
+    [StructField("ewma", DoubleType()), StructField("inited", LongType())]
+)
 
 EWMA_OUTPUT_SCHEMA = StructType(
     [
@@ -207,14 +209,14 @@ EWMA_OUTPUT_SCHEMA = StructType(
 def ewma_stream(stream: DataFrame, alpha: float = 0.3) -> DataFrame:
     """Streaming twin of :func:`ceres_spark.operators.series.ewma`:
     the ``e_i = α·v_i + (1−α)·e_{i-1}`` recurrence carried across
-    micro-batches as ONE float of state per series — the cheapest
-    possible stateful operator, and the live version of graphite's
-    ``exponentialMovingAverage``.
+    micro-batches as one float and a seeded flag per series — the
+    cheapest possible stateful operator, and the live version of
+    graphite's ``exponentialMovingAverage``.
 
     It runs the batch fold (``series._ewma_fold``) from the stored
     state, so a time-ordered replay produces bit-identical doubles to
     the batch pass — which is what lets the replay entry share the
-    batch recursive-CTE oracle. State store cost: 8 bytes per live
+    batch recursive-CTE oracle. State store cost: 16 bytes per live
     series.
     """
     a = float(alpha)
@@ -226,13 +228,15 @@ def ewma_stream(stream: DataFrame, alpha: float = 0.3) -> DataFrame:
         pdf = _sorted_batch(pdfs)
         if pdf is None:
             return
-        st = state.get[0] if state.exists else np.nan
-        out, st = _ewma_fold(pdf["value"].to_numpy(dtype=float), a, st)
+        st = state.get if state.exists else (np.nan, 0)
+        out, (e, inited) = _ewma_fold(
+            pdf["value"].to_numpy(dtype=float), a, st
+        )
         yield pd.DataFrame({
             "metric": metric, "ts": pdf["ts"], "value": pdf["value"],
             "ewma": out,
         })
-        state.update((float(st),))
+        state.update((float(e), int(inited)))
 
     return stream.groupBy("metric").applyInPandasWithState(
         _upd,

@@ -145,6 +145,17 @@ def test_anomaly_zscore_flags_planted_outlier(spark):
     assert flagged[0]["zscore"] > 4.0
 
 
+def test_anomaly_zscore_zero_variance_series_flags_nothing(spark):
+    # a constant series has no z-score: it flags nothing instead of
+    # dividing by a zero deviation (DIVIDE_BY_ZERO under ANSI mode)
+    base = [("m", t, 10.0) for t in range(0, 2000, 100)]
+    flat = [("flat", t, 5.0) for t in range(0, 600, 100)]
+    rows = base + [("m", 2000, 1000.0)] + flat
+    df = spark.createDataFrame(rows, "metric string, ts long, value double")
+    flagged = ser.anomaly_zscore(df, z=3.0).collect()
+    assert [(r["metric"], r["ts"]) for r in flagged] == [("m", 2000)]
+
+
 def test_forward_fill_carries_last_value_leading_nulls_stay(spark):
     dense = spark.createDataFrame(
         [
@@ -545,6 +556,24 @@ def test_sort_by_extrema_cardinality_guard(spark, monkeypatch):
         ser.sort_by_extrema(d).collect()
     monkeypatch.setattr(ser, "MAX_RANKED_SERIES", 6)
     assert ser.sort_by_extrema(d).count() == 6
+
+
+@pytest.mark.parametrize("op, rank", [
+    ("sort_by_extrema", "rank_by_max"),
+    ("sort_by_extrema", "rank_by_min"),
+    ("series_orderings", "rank_by_name"),
+    ("series_orderings", "rank_by_total"),
+    ("series_orderings", "rank_by_avg"),
+    ("filter_series", "rank_highest_current"),
+    ("filter_series", "rank_lowest_current"),
+])
+def test_each_series_rank_keeps_its_guard_alone(spark, monkeypatch, op, rank):
+    # render builds sortByMinima and lowest(..., "min") from ONE rank
+    # column: pruning the others must not prune the guard with them
+    d = _pts(spark, [(f"m{i}", 0, float(i)) for i in range(6)])
+    monkeypatch.setattr(ser, "MAX_RANKED_SERIES", 5)
+    with pytest.raises(Exception, match=f"{op}: more than"):
+        getattr(ser, op)(d).select("metric", rank).collect()
 
 
 def test_summarize_align_to_from_vs_epoch(spark):

@@ -226,13 +226,17 @@ def test_ewma_stream_equals_batch(spark, tmp_path):
     import ceres_spark.operators.series as ser
 
     vals = [3.0, 7.0, None, 5.0, 9.0, 2.0, None, 8.0]
+    # "x" turns NaN (inf then -inf) in the first micro-batch: the
+    # average is seeded once, so it stays NaN instead of re-seeding
+    inf = float("inf")
     rows = [("m", i * 60, v) for i, v in enumerate(vals)] + [
         ("n", i * 60, v) for i, v in enumerate(reversed(vals))
-    ]
+    ] + [("x", i * 60, v) for i, v in enumerate([1.0, inf, -inf, 3.0, 4.0])]
     rows.sort(key=lambda r: r[1])
     src = str(tmp_path / "src")
-    # two micro-batches: the one-float state must carry across them
-    for chunk in (rows[:8], rows[8:]):
+    # two micro-batches: the (ewma, inited) state must carry across
+    # them — the first holds ts 0..120 of every series
+    for chunk in (rows[:9], rows[9:]):
         spark.createDataFrame(
             chunk, "metric string, ts long, value double"
         ).coalesce(1).write.mode("append").parquet(src)
@@ -267,6 +271,11 @@ def test_ewma_stream_equals_batch(spark, tmp_path):
             g is not None and w is not None
             and math.isnan(g) and math.isnan(w)
         ) or (g is None and w is None), (k, g, w)
+    # the _EWMA_ORACLE recursion gives [1, inf, nan, nan, nan]; the
+    # fold's NaN leaves the Arrow seam as NULL
+    assert [got[("x", i * 60)] for i in range(5)] == [
+        1.0, inf, None, None, None
+    ]
 
 
 def test_kmv_stream_final_sketch_equals_batch(spark, tmp_path):
